@@ -31,6 +31,10 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.ui.enabled", "false")
+      // file: without chmod/readlink processes (LocalFs.scala): stock
+      // checksummed local filesystem, permission and link calls in-process
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
   }
 
   def getOrCreate(appName: String = "graft"): SparkSession = {

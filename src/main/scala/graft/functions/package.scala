@@ -32,4 +32,11 @@ package object functions {
 
   /** Exact integer-division bucketing of an epoch-ms column. */
   def msBucket(tsMs: Column, widthMs: Long): Column = intDiv(tsMs, widthMs)
+
+  /** A micro-batch id for per-batch stamps and filters (`ingest_batch`).
+    * Unlike `lit(id)` it is not compiled into the generated code, so a
+    * `foreachBatch` sink compiles its stages once per query, not once
+    * per batch ([[graft.plans.BatchStamp]]). */
+  def batchStamp(id: Long): Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(graft.plans.BatchStamp(id))
 }

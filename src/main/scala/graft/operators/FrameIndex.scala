@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.batchStamp
 import graft.sources.Tables
 
 /** Persisted FRAME-signature index — the multimodal twin of
@@ -59,7 +60,7 @@ object FrameIndex {
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     if (dynamic)
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try sigs.withColumn("ingest_batch", lit(ingestBatch))
+    try sigs.withColumn("ingest_batch", batchStamp(ingestBatch))
       .repartition(col("cb"))
       .write.mode(mode).partitionBy("ingest_batch", "cb")
       .parquet(s"$dir/bands")
@@ -103,7 +104,7 @@ object FrameIndex {
     val spark = bSigs.sparkSession
     val idx = {
       val df = spark.read.parquet(s"$dir/bands")
-      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= b))
+      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= batchStamp(b)))
     }
     val within = bSigs.as("a").join(bSigs.as("b"),
         col("a.k") === col("b.k") && col("a.cv") === col("b.cv") &&
@@ -188,7 +189,7 @@ object FrameIndex {
           .select(col("frame_id")).localCheckpoint(true)
         val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try keepers.withColumn("ingest_batch", lit(batchId))
+        try keepers.withColumn("ingest_batch", batchStamp(batchId))
           .repartition(1)
           .write.mode("overwrite").partitionBy("ingest_batch")
           .parquet(keptDir)

@@ -64,7 +64,7 @@ object SearchIndex {
       mode: String, dynamic: Boolean): Unit = {
     val posts = postings(docs).localCheckpoint()
     def w(df: DataFrame, table: String, parts: Seq[String]): Unit = {
-      val base = df.withColumn("ingest_batch", lit(ingestBatch))
+      val base = df.withColumn("ingest_batch", batchStamp(ingestBatch))
         .write.mode(mode)
       (if (dynamic) base.option("partitionOverwriteMode", "dynamic") else base)
         .partitionBy(parts: _*)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.batchStamp
 import graft.sources.Tables
 
 /** D11b — persisted SPAN-HASH index + incremental duplicated-span
@@ -59,7 +60,7 @@ object SpanIndex {
 
   private def write(spans: DataFrame, dir: String, ingestBatch: Long,
       mode: String, dynamic: Boolean): Unit = {
-    val base = spans.withColumn("ingest_batch", lit(ingestBatch))
+    val base = spans.withColumn("ingest_batch", batchStamp(ingestBatch))
       .write.mode(mode)
     (if (dynamic) base.option("partitionOverwriteMode", "dynamic") else base)
       .partitionBy("ingest_batch", "bk")
@@ -98,7 +99,7 @@ object SpanIndex {
       .select(col("doc_id"), col("s"))
     val idx = {
       val df = spark.read.parquet(s"$dir/spans")
-      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= b))
+      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= batchStamp(b)))
     }
     // the bucket equality is implied by h1 equality — it exists purely
     // as the dynamic-partition-pruning handle on the index scan

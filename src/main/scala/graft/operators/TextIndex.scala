@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.functions.words
+import graft.functions.{batchStamp, words}
 import graft.sources.Tables
 
 /** Persisted TEXT-dedup index — the F-side twin of [[VectorIndex]]
@@ -87,7 +87,7 @@ object TextIndex {
     stampOrCheckFormat(sigs.sparkSession, dir, isRebuild = isRebuild,
       deferStamp = isRebuild)
     def w(df: DataFrame, table: String): Unit = {
-      val base = df.withColumn("ingest_batch", lit(ingestBatch))
+      val base = df.withColumn("ingest_batch", batchStamp(ingestBatch))
         .write.mode(mode)
       (if (dynamic) base.option("partitionOverwriteMode", "dynamic") else base)
         .partitionBy("ingest_batch", "bk")
@@ -192,7 +192,7 @@ object TextIndex {
         .map(_.getPath.getName).filter(_.startsWith("ingest_batch="))
         .map(_.stripPrefix("ingest_batch=").toLong).sorted
       for (id <- batchIds) {
-        all.filter(col("ingest_batch") === id)
+        all.filter(col("ingest_batch") === batchStamp(id))
           .select(col("doc_id"), col("band"), col("sig"), col("bk"),
             col("ingest_batch"))
           .write.mode("overwrite")
@@ -299,7 +299,7 @@ object TextIndex {
     warnIfCompacting(spark, dir)
     def idx(table: String): DataFrame = {
       val df = spark.read.parquet(s"$dir/$table")
-      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= b))
+      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= batchStamp(b)))
     }
     val idxHashes = idx("hashes")
     val idxBands = idx("bands")
@@ -399,7 +399,7 @@ object TextIndex {
     // exclusion guard.
     val settledHashes = {
       val df = spark.read.parquet(s"$dir/hashes")
-      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= b))
+      excludeBatch.fold(df)(b => df.filter(col("ingest_batch") =!= batchStamp(b)))
     }
     val revExact = bSigs.as("nw")
       .join(settledHashes.as("p"),
@@ -443,7 +443,7 @@ object TextIndex {
         val id = runId | batchId
         val b = batch.localCheckpoint(true)
         curateKeepers(b, dir, excludeBatch = Some(id))
-          .withColumn("ingest_batch", lit(id))
+          .withColumn("ingest_batch", batchStamp(id))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_batch")

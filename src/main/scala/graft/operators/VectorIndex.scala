@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.batchStamp
 import graft.sources.Tables
 
 /** PERSISTED vector index — the deployment shape of IVF+PQ at 100 TB:
@@ -449,7 +450,7 @@ object VectorIndex {
           typedLit(flat.toSeq), lit(m)).as("codes"),
         col("v"),
         call_function("graft_norm2", col("res")).as("res2"))
-      .withColumn("ingest_batch", lit(ingestBatch))
+      .withColumn("ingest_batch", batchStamp(ingestBatch))
   }
 
   /** One micro-batch of streaming maintenance, IDEMPOTENTLY: foreachBatch
@@ -522,7 +523,7 @@ object VectorIndex {
       excludeNeighbor: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
     val guard = excludeNeighbor.orElse(
-      excludeBatch.map(id => col("ingest_batch") === id))
+      excludeBatch.map(id => col("ingest_batch") === batchStamp(id)))
     val settledDup =
       nearDupBatch(Similarity.withNorm(batch), dir, tau,
         excludeNeighbor = guard)
@@ -567,7 +568,7 @@ object VectorIndex {
         val id = runId | batchId
         val b = batch.localCheckpoint(true)
         curateKeepers(b, dir, tau, excludeBatch = Some(id))
-          .withColumn("ingest_batch", lit(id))
+          .withColumn("ingest_batch", batchStamp(id))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_batch")
@@ -835,7 +836,7 @@ object VectorIndex {
         (max("cnt") * lit(kCells.toDouble) / sum("cnt")).as("occ_skew"))
       .crossJoin(broadcast(global.select(col("p95").as("p95_res2"))))
       .select(col("n"), col("mean_res2"), col("p95_res2"), col("occ_skew"))
-      .withColumn("ingest_batch", lit(ingestBatch))
+      .withColumn("ingest_batch", batchStamp(ingestBatch))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch")

@@ -51,11 +51,12 @@ class EbmlDataSource extends TableProvider with DataSourceRegister {
     val path = properties.get("path")
     require(path != null && path.nonEmpty,
       "ebml source requires a single directory or file path: .load(dir)")
-    // capture the OWNING session's Hadoop conf here, at resolution time
-    // on its planning thread — resolving SparkSession.active later
-    // inside the scan can pick up a different thread's session in
-    // multi-session applications (round-4 self-review finding)
-    new EbmlTable(path, HadoopConfShip.capture(SparkSession.active))
+    // capture the OWNING session's Hadoop conf and file-split settings
+    // here, at resolution time on its planning thread — resolving
+    // SparkSession.active later inside the scan can pick up a different
+    // thread's session in multi-session applications
+    val spark = SparkSession.active
+    new EbmlTable(path, HadoopConfShip.capture(spark), EbmlSplit.of(spark))
   }
 }
 
@@ -76,7 +77,7 @@ object EbmlTable {
     StructField("blob", BinaryType, nullable = false)))
 }
 
-class EbmlTable(path: String, confEntries: Array[(String, String)])
+class EbmlTable(path: String, confEntries: Array[(String, String)], split: EbmlSplit)
     extends Table with SupportsRead {
   override def name(): String = s"ebml:$path"
   override def schema(): StructType = EbmlTable.Schema
@@ -92,23 +93,25 @@ class EbmlTable(path: String, confEntries: Array[(String, String)])
     // smaller than one default split still fans out across the cores
     // instead of walking every payload in a single task (the bench's
     // 63 MB/1,000-file sf0.1 archive read as ONE task under the old
-    // fixed 128 MB default).
-    val sessionConf = SparkSession.active.sessionState.conf
+    // fixed 128 MB default). The settings are the owning session's,
+    // captured with the table.
     new EbmlScanBuilder(path,
-      Option(options.get("maxPartitionBytes")).map(_.toLong),
-      EbmlSplit(
-        sessionConf.filesMaxPartitionBytes,
-        sessionConf.filesOpenCostInBytes,
-        sessionConf.filesMinPartitionNum.getOrElse(
-          SparkSession.active.sparkContext.defaultParallelism)),
-      confEntries)
+      Option(options.get("maxPartitionBytes")).map(_.toLong), split, confEntries)
   }
 }
 
-/** Session file-split settings captured at planning time — the inputs
-  * of Spark's own `FilePartition.maxSplitBytes` formula. */
+/** Session file-split settings captured with the table — the inputs of
+  * Spark's own `FilePartition.maxSplitBytes` formula. */
 case class EbmlSplit(maxPartitionBytes: Long, openCostInBytes: Long,
     minPartitionNum: Int)
+
+object EbmlSplit {
+  def of(spark: SparkSession): EbmlSplit = {
+    val conf = spark.sessionState.conf
+    EbmlSplit(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+      conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism))
+  }
+}
 
 class EbmlScanBuilder(path: String, explicitMaxBytes: Option[Long],
     split: EbmlSplit, confEntries: Array[(String, String)])

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ebml.EbmlFunctions
-import graft.functions.intDiv
+import graft.functions.{batchStamp, intDiv}
 import graft.sources.Retention
 
 /** The reference application end to end (parser.py's Parser lifecycle) as
@@ -19,8 +19,13 @@ import graft.sources.Retention
   *
   * Kill the process and start it again with the same checkpoint: the
   * query resumes after the last committed payload (the continuation
-  * token), dedup state intact. Every stage is per-row or keyed — the
-  * same query runs unchanged on a 1000-executor cluster.
+  * token), dedup state intact. The split and tag stage is per-row and
+  * spreads over the executors. The store write is one task per
+  * micro-batch, and since it adds no shuffle, that task also runs the
+  * batch's dedup state partitions (the state keeps its partition count).
+  * A batch's tag records are ~100 bytes per fragment, so one task keeps
+  * up, and it writes one file per bucket per batch instead of one per
+  * state partition: fewer files to create, commit and read back.
   */
 object ConsumerApp {
 
@@ -40,10 +45,15 @@ object ConsumerApp {
     * batch after a failure, so a plain append would double-write its
     * fragments. Dynamic partition overwrite keyed by (bucket, batch id)
     * makes the retry replace exactly its own partitions instead. Old
-    * buckets are evicted after the write (parser.py:475-481). */
+    * buckets are evicted after the write (parser.py:475-481).
+    *
+    * One task writes the batch (`coalesce(1)` after the state operator).
+    * The batch id reaches the generated code as a reference, not a
+    * literal, so the write stage compiles once per query rather than
+    * once per batch. */
   def persistBatch(batch: DataFrame, batchId: Long, storeDir: String,
       keepNewest: Int): Unit = {
-    batch.withColumn("ingest_batch", lit(batchId))
+    batch.coalesce(1).withColumn("ingest_batch", batchStamp(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket", "ingest_batch")

@@ -317,6 +317,45 @@ class SourcesSpec extends SparkSpec {
       s"expected ~defaultParallelism($par) tasks, got $parts")
   }
 
+  test("ebml source plans each session's scan with that session's split settings") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val dir = tmp() + "/frags_two_sessions"
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    val frag = graft.ebml.EbmlFunctions.buildFragment(9L, 9000L, 9L, 9L, "x")
+    (0 until 40).foreach(i =>
+      Files.write(java.nio.file.Paths.get(dir, f"f$i%02d.mkv"), frag))
+    // each file is charged its length plus the open cost: two files per
+    // split in `fine`, all forty in one split in `coarse`
+    val charged = frag.length + 1000L
+    def session(maxBytes: Long, minPartitions: Int): SparkSession = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.files.openCostInBytes", "1000")
+      s.conf.set("spark.sql.files.maxPartitionBytes", maxBytes.toString)
+      s.conf.set("spark.sql.files.minPartitionNum", minPartitions.toString)
+      s
+    }
+    val fine = session(2 * charged, 4)
+    val coarse = session(1L << 30, 1)
+    val fineDf = fine.read.format("ebml").load(dir)
+    val coarseDf = coarse.read.format("ebml").load(dir)
+    assert(fineDf.rdd.getNumPartitions == 20)
+    assert(coarseDf.rdd.getNumPartitions == 1)
+    assert(fineDf.count() == 40L && coarseDf.count() == 40L)
+    // a table keeps the settings of the session that resolved it, even
+    // when its scan is built while another session is active
+    try {
+      SparkSession.setActiveSession(fine)
+      val table = new EbmlDataSource().getTable(EbmlTable.Schema, Array.empty,
+        Map("path" -> dir).asJava)
+      SparkSession.setActiveSession(coarse)
+      val parts = table.asInstanceOf[EbmlTable].newScanBuilder(CaseInsensitiveStringMap.empty)
+        .build().toBatch.planInputPartitions()
+      assert(parts.length == 20, s"planned with the active session's settings: ${parts.length}")
+    } finally SparkSession.setActiveSession(spark)
+  }
+
   test("dpp join: the fact scan carries an injected dynamicpruning filter and reads ONLY qualifying day dirs (H17)") {
     import org.apache.spark.sql.functions._
     val df = graft.sources.Layout.dppJoinQuery(t, sfDir)

@@ -1253,6 +1253,35 @@ class StreamingSpec extends SparkSpec {
     assert(store.select("bucket").distinct().count() == 2)
   }
 
+  test("consumer app compiles its micro-batch stages once per query, not per batch") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.ebml.{Ebml, EbmlFunctions}
+    val inDir = Files.createTempDirectory("graft_codegen_in").toString
+    val chkDir = Files.createTempDirectory("graft_codegen_chk").toString
+    val storeDir = Files.createTempDirectory("graft_codegen_store").toString + "/frames"
+    val t0 = 1704067200000L // 2024-01-01 00:00 UTC
+    def blob(i: Int): Array[Byte] =
+      EbmlFunctions.buildFragment(i.toLong, t0 + i * 60000L, 10L, 100L, s"f$i")
+    // one data batch per file and nothing in between: a no-data batch
+    // would run while the next file is written
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val q = try ConsumerApp.start(spark, inDir, storeDir, chkDir, keepNewest = 4)
+      finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    val compiled = try (1 to 7).map { i =>
+      // each file moves producer time, and so the watermark, forward
+      Files.write(Paths.get(inDir, f"p$i%02d.mkv"), Ebml.concat(blob(2 * i), blob(2 * i + 1)))
+      q.processAllAvailable()
+      assert(q.lastProgress.batchId == i - 1, "one micro-batch per file")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    } finally q.stop()
+    // after batch 2 only the watermark predicate, whose threshold Spark
+    // writes into the generated code, may compile again
+    val perBatch = compiled.sliding(2).map(p => p(1) - p(0)).toSeq.drop(1)
+    assert(perBatch.forall(_ <= 1), s"compiles per batch after batch 2: $perBatch")
+    assert(spark.read.parquet(storeDir).count() == 14L)
+  }
+
   test("a retried micro-batch persists idempotently (foreachBatch replay)") {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
