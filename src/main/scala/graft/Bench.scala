@@ -27,13 +27,14 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // the generated-class cache defaults to 100 entries; this 70-query
-      // × 4-pass loop compiles several hundred distinct codegen stages,
-      // so at the default every pass RE-compiles most stages (Janino,
-      // driver-side, serial) — per-query min noise that looks like plan
-      // drift (round-5/6 bench investigation). Static conf, so it must
-      // be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // the generated-class cache defaults to 100 entries; the catalog
+      // loop compiles ~2,600 distinct codegen stages, so at the
+      // default every pass RE-compiles most stages (Janino, driver-side,
+      // serial) — per-query min noise that looks like plan drift
+      // (round-5/6 bench investigation). Static conf, so it must be set
+      // before the session exists; the size is GraftSession's.
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.core.GraftSession.CodegenCacheEntries.toString)
       // local small files: split scans so every core participates
       // (cluster deploys keep the 128m default)
       .config("spark.sql.files.maxPartitionBytes", "4m")
@@ -43,6 +44,7 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
 
     def materialize(name: String): (Double, Boolean) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -54,18 +56,20 @@ object Bench {
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      // OUTSIDE the timer: free the run's dead localCheckpoint blocks.
-      // Each run builds fresh checkpoints (no cross-run reuse exists to
-      // lose), but the superseded blocks are only reclaimed by
-      // ContextCleaner on DRIVER GC — on a large heap (the driver's
-      // 89 g run) GC can stay away for the whole 192×4 loop, so ~3,000
-      // dead working sets accumulate toward the storage cap and the
+      // OUTSIDE the timer: free the dead localCheckpoint blocks this run
+      // created (only those: a checkpoint that outlives its run, held
+      // by a caller, stays readable). Each run builds fresh checkpoints
+      // (no cross-run reuse exists to lose), but the superseded blocks
+      // are only reclaimed by ContextCleaner on DRIVER GC — on a large
+      // heap (the driver's 89 g run) GC can stay away for the whole
+      // 192×4 loop, so ~3,000 dead working sets accumulate toward the
+      // storage cap and the
       // allocation-heavy queries late in the alphabet (the mm_*/mp4_*
       // blob family) run against a full old gen (round-20 verdict
       // item 1). CacheManager-cached relations are NOT touched: their
       // cross-run reuse is existing measured behavior.
-      spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-        if (r.isCheckpointed) r.unpersist(blocking = false)
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+        if (!before(id) && r.isCheckpointed) r.unpersist(blocking = false)
       }
       (sec, ok)
     }

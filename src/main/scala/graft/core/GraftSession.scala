@@ -10,6 +10,21 @@ import org.apache.spark.sql.SparkSession
   * locally; on a 1000-executor cluster this is set to ~2-3x total cores).
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * JVM-global and sized once, by the first session that generates
+    * code. At the default, a second pass over the 16 media queries (118
+    * classes) recompiles most of them, and every miss also discards the
+    * class's JIT-compiled code. One first pass over all of
+    * `SparkEntry.queries` at sf0.001 (local[4]) compiles 2,558 distinct
+    * classes, and each further pass 128 more; keeping them all costs
+    * ~22 MB of metaspace over the default (~9 KB a class). 4,096 leaves
+    * 1.6× headroom, so a full cache costs ~35 MB. A consumer's per-batch
+    * watermark-predicate classes are evicted only once the cache is
+    * full. */
+  val CodegenCacheEntries: Int = 4096
+
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession
@@ -31,6 +46,8 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.ui.enabled", "false")
+      // static: fixed by the first session that generates code
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // file: without chmod/readlink processes (LocalFs.scala): stock
       // checksummed local filesystem, permission and link calls in-process
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)

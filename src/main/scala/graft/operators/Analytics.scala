@@ -621,24 +621,30 @@ object Analytics {
     * pins the claim structurally: no shuffle in the iteration plan has
     * the edges cache scan beneath it. Ranks are NOT collected — driver
     * state is nil. */
-  def supplierPagerank(t: Tables, iters: Int = 6): DataFrame = {
-    // customer ids shifted into a disjoint node-id space; 1e12 (the
-    // Snapshot.mergeUpsertQuery rule) because s_suppkey grows 10,000
-    // per SF and would cross a 1e7 offset at SF≈1,000 — silently
-    // conflating supplier and shifted-customer nodes, invisible to the
-    // oracle (which shares the constant)
-    val Offset = 1000000000000L
+  def supplierPagerank(t: Tables, iters: Int = 6): DataFrame =
+    pagerankOf(supplierEdges(t), iters)
+      .filter(col("node") < CustomerNodeOffset)
+      .select(col("node").as("s_suppkey"), col("r").as("rank_u"))
+      .orderBy("s_suppkey")
+
+  // customer ids shifted into a disjoint node-id space; 1e12 (the
+  // Snapshot.mergeUpsertQuery rule) because s_suppkey grows 10,000
+  // per SF and would cross a 1e7 offset at SF≈1,000 — silently
+  // conflating supplier and shifted-customer nodes, invisible to the
+  // oracle (which shares the constant)
+  private val CustomerNodeOffset = 1000000000000L
+
+  /** supplier_pagerank's graph: one weighted edge each way per
+    * (customer, supplier) pair that shares an order line, weighted by
+    * the line count; customers sit at [[CustomerNodeOffset]] + key. */
+  private[graft] def supplierEdges(t: Tables): DataFrame = {
     val pairs = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .groupBy("c", "s").agg(count(lit(1)).as("w"))
-    val half = pairs.select((col("c") + Offset).as("src"), col("s").as("dst"), col("w"))
-    val edges0 = half.unionByName(
-      pairs.select(col("s").as("src"), (col("c") + Offset).as("dst"), col("w")))
-    pagerankOf(edges0, iters)
-      .filter(col("node") < Offset)
-      .select(col("node").as("s_suppkey"), col("r").as("rank_u"))
-      .orderBy("s_suppkey")
+    pairs.select((col("c") + CustomerNodeOffset).as("src"), col("s").as("dst"), col("w"))
+      .unionByName(pairs.select(col("s").as("src"),
+        (col("c") + CustomerNodeOffset).as("dst"), col("w")))
   }
 
   /** Library form over any weighted directed edge list (src, dst, w):
@@ -665,14 +671,15 @@ object Analytics {
     * micro-unit long below the wrap, and above it the value is exact
     * instead of silently negative.
     *
-    * Cache lifecycle: edges/nodes stay persisted after return because
-    * the result's final-round plan still reads them lazily. Spark's
-    * CacheManager keys entries by CANONICALIZED plan, so repeated
-    * invocations over the same input reuse one entry rather than
-    * accumulating; a caller that is done with a given graph releases
-    * it with `df.unpersist()` on its own edges input or
-    * `spark.catalog.clearCache()` — the MEMORY_AND_DISK default means
-    * an unreleased graph degrades to disk, never to OOM. */
+    * Cache lifecycle: the returned plan reads the final round's
+    * checkpoint blocks, not the edges/nodes caches. The caches stay
+    * persisted after return only so that a repeated invocation over
+    * the same input reuses them: Spark's CacheManager keys entries by
+    * CANONICALIZED plan, so repeats share one entry rather than
+    * accumulating. A caller that is done with a given graph should
+    * release them with `spark.catalog.clearCache()` — the
+    * MEMORY_AND_DISK default means an unreleased graph degrades to
+    * disk, never to OOM. */
   def pagerankOf(edges0: DataFrame, iters: Int): DataFrame =
     pagerankOf(edges0, iters, materializeLast = true)
 

@@ -17,7 +17,7 @@ object Bucketing {
   /** The catalog-gate tag for [[materializeEnrich]]'s twins, in two
     * `_`-joined hex parts: a PATH part (which source directory) and a
     * FINGERPRINT part (which generation of it — name+len+mtime of every
-    * file, two shallow listings, no data read). The tag must change
+    * file, two listings, no data read). The tag must change
     * whenever the SOURCE changes, not just the path string: a
     * regenerated sfDir under a live catalog entry would otherwise
     * silently serve stale bucketed twins. Keeping the parts separate
@@ -39,13 +39,7 @@ object Bucketing {
     def fp(sub: String): Long = {
       val p = new Path(sfDir, sub)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).sortBy(_.getPath.getName).map(s =>
-        s.getPath.getName.hashCode * 1000003L ^ s.getLen * 31L ^
-          s.getModificationTime).foldLeft(0L)(_ * 6364136223846793005L + _)
-      // sortBy: listStatus order is filesystem-dependent, and the fold is
-      // order-sensitive — an unsorted fold would re-tag (and silently
-      // re-materialize) an unchanged source
+      if (!fs.exists(p)) 0L else ParquetSchemas.fingerprint(fs, p)
     }
     f"${dirTag(sfDir)}_${fp("events.parquet") ^
       java.lang.Long.rotateLeft(fp("customer.parquet"), 17)}%016x"

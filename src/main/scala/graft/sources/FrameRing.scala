@@ -262,14 +262,16 @@ object FrameRing {
     * relational rows — (stream, slot, ts, frame, tags) per buffered
     * frame, slot 1 = oldest buffered (the reference's GetFrame index
     * + 1). The store builds ONCE behind a seed marker; the benched
-    * query is the serving-store scan, which is the feature. The oracle
+    * query is the serving-store scan, which is the feature, and its
+    * schema is resolved once per store generation ([[ParquetSchemas]]),
+    * so a rebuilt plan starts no inference job. The oracle
     * replays the greedy acceptance per stream (the G5c WITH RECURSIVE
     * next-kept chase) and keeps the newest maxLen. */
   def ringStateQuery(t: Tables, sfDir: String, maxLen: Int = 4,
       minGapMs: Long = 600000L): DataFrame = {
     val spark = t.events.sparkSession
     val dir = materializeRing(t, sfDir, maxLen, minGapMs)
-    spark.read.parquet(dir)
+    ParquetSchemas.read(spark, dir)
       .select(col("stream_id"), posexplode(col("ring")).as(Seq("pos", "f")))
       .select(col("stream_id"), (col("pos") + 1L).cast("long").as("slot"),
         col("f.ts_ms").as("ts_ms"), col("f.frame_id").as("frame_id"),

@@ -8,10 +8,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * All reads go through a per-name loader so Catalyst keeps full
   * pushdown/pruning ability: a downstream `.select`/`.filter` reaches the
-  * scan as `ReadSchema`/`PushedFilters`. Never cache here — at 100 TB the
+  * scan as `ReadSchema`/`PushedFilters`. The default loader is the
+  * driver's parquet layout, and it resolves each table's schema once: the
+  * first build infers it (a one-task Spark job), later builds over the
+  * same files read with that schema and start no job
+  * ([[ParquetSchemas]]; a rewritten table or a session with other parquet
+  * type settings infers again). The data is never cached — at 100 TB the
   * scan must stream, and column pruning is worth more than a hot cache.
-  * The default loader is the driver's parquet layout; `TableFormats`
-  * builds Tables over CSV/JSON directories with the same schemas.
+  * `TableFormats` builds Tables over CSV/JSON directories with the same
+  * schemas.
   */
 final class Tables(load: String => DataFrame) {
   private def t(name: String): DataFrame = load(name)
@@ -31,7 +36,7 @@ final class Tables(load: String => DataFrame) {
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables =
     new Tables(name => {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = ParquetSchemas.read(spark, s"$dir/$name.parquet")
       if (name == "events") normalizeEventsTs(df) else df
     })
 

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
 /** Shared local session for specs (small parallelism, exact configs the
-  * driver uses — notably nanosAsLong for events.ts). */
+  * driver uses — notably nanosAsLong for events.ts). The generated-class
+  * cache size is static and JVM-global: the first session to generate
+  * code fixes it, so the spec session takes GraftSession's. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -16,6 +18,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      graft.core.GraftSession.CodegenCacheEntries.toString)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"

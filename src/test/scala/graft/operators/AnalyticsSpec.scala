@@ -223,16 +223,7 @@ class AnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val Offset = 1000000000000L
-    val pairs = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .groupBy("c", "s").agg(count(lit(1)).as("w"))
-    val edges0 = pairs
-      .select((col("c") + Offset).as("src"), col("s").as("dst"), col("w"))
-      .unionByName(pairs.select(col("s").as("src"),
-        (col("c") + Offset).as("dst"), col("w")))
+    val edges0 = Analytics.supplierEdges(t)
     val df = Analytics.pagerankOf(edges0, 6, materializeLast = false)
     val seam = df.collect() // finalize AQE before inspecting
     // the seam computes EXACTLY what the deploy form computes — the

@@ -93,6 +93,85 @@ class SourcesSpec extends SparkSpec {
       s"event_type filter did not reach the scan:\n$scan")
   }
 
+  test("a table's schema resolves once per file identity and settings; data and pushdown stay live") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // `body`'s value and the Spark jobs started while it runs; a marked
+    // sentinel job flushes the listener bus, which delivers events in order
+    def jobsDuring[T](body: => T): (T, Int) = {
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger
+      val flushed = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(_.getProperty("graft.sentinel") == "1"))
+            flushed.countDown()
+          else { jobs.incrementAndGet(); () }
+      }
+      sc.addSparkListener(listener)
+      try {
+        val value = body
+        sc.setLocalProperty("graft.sentinel", "1")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty("graft.sentinel", null)
+        assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+        (value, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val dir = tmp()
+    def write(rows: Long, extra: Boolean): Unit =
+      spark.range(rows).selectExpr(Seq("id AS event_id", "id * 1000 AS ts",
+          "cast(id % 3 AS string) AS event_type") ++
+          (if (extra) Seq("id * 2 AS extra") else Nil): _*)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    write(100L, extra = false)
+    assert(jobsDuring(Tables(spark, dir).events)._2 >= 1, "the first build infers")
+    assert(jobsDuring(Tables(spark, dir).events)._2 == 0,
+      "a second build over the same files started a Spark job")
+    // the data is never cached: a rewrite with an extra column shows the
+    // column and the new rows on the next build
+    write(50L, extra = true)
+    val rewritten = Tables(spark, dir).events
+    assert(rewritten.columns.contains("extra"), rewritten.columns.mkString(","))
+    assert(rewritten.count() == 50L)
+    assert(jobsDuring(Tables(spark, dir).events)._2 == 0)
+    // the parquet type settings are part of the key: each session sees an
+    // unannotated binary column as its own settings map it, in either
+    // order. Written without Spark, whose footer schema would override
+    // the settings.
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val ext = tmp()
+    val docs = MessageTypeParser.parseMessageType(
+      "message doc { required int64 doc_id; optional binary body; }")
+    val writer = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(s"$ext/documents.parquet/part-0.parquet"))
+      .withType(docs).build()
+    try {
+      val g = new SimpleGroupFactory(docs)
+      (1L to 3L).foreach(i => writer.write(g.newGroup().append("doc_id", i).append("body", s"b$i")))
+    } finally writer.close()
+    val asString = spark.newSession()
+    asString.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(Tables(spark, ext).documents.schema("body").dataType == BinaryType)
+    assert(Tables(asString, ext).documents.schema("body").dataType == StringType)
+    assert(Tables(spark, ext).documents.schema("body").dataType == BinaryType)
+    assert(Tables(asString, ext).documents.schema("body").dataType == StringType)
+    // a build from the resolved schema still prunes and pushes down
+    val (df, planJobs) = jobsDuring(
+      Tables(spark, dir).events.filter(col("event_type") === "1").select("event_id"))
+    assert(planJobs == 0)
+    val scan = df.queryExecution.executedPlan.collectLeaves()
+      .map(_.toString).find(_.contains("events.parquet"))
+      .getOrElse(fail("no events scan in plan"))
+    assert(scan.contains("ReadSchema: struct<event_id:bigint,event_type:string>"), scan)
+    assert(scan.contains("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,1)]"), scan)
+    assert(df.count() == 17L)
+  }
+
   test("catalog queries run identically from csv, json, and orc table sources") {
     import graft.operators._
     val dir = tmp()
