@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness (driver-run, per-round).
@@ -21,26 +20,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the generated-class cache defaults to 100 entries; the catalog
-      // loop compiles ~2,600 distinct codegen stages, so at the
-      // default every pass RE-compiles most stages (Janino, driver-side,
-      // serial) — per-query min noise that looks like plan drift
-      // (round-5/6 bench investigation). Static conf, so it must be set
-      // before the session exists; the size is GraftSession's.
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.GraftSession.CodegenCacheEntries.toString)
-      // local small files: split scans so every core participates
-      // (cluster deploys keep the 128m default)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def materialize(name: String): (Double, Boolean) = {
@@ -77,11 +57,7 @@ object Bench {
     // optional comma-separated subset (isolation experiments: a query's
     // in-loop min vs its alone-in-the-JVM min separates plan cost from
     // loop-state noise — JIT/codegen/GC accumulated over 70×4 runs)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // empty/blank means "no filter", not "nothing"
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     names.foreach(materialize) // warmup: JVM + codegen + parquet footers
     // a failing query must NOT enter the totals as a fast success —
     // it reports -1 and lands in "failed" so a broken build can't

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** H18's serving surface across the driver contract: run each
   * `SparkEntry.queries` entry once through `CostLedger.measure` (ONE
   * production action per query, metrics harvested from its own executed
@@ -11,32 +9,22 @@ import org.apache.spark.sql.SparkSession
 object CostReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_COST_ONLY"))
+    val spark = graft.core.GraftSession.builder("graft-cost").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_COST_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val c = graft.operators.CostLedger.measure(name, fn(spark, sfDir))
-          println(s"""{"query":"${c.query}","scan_rows":${c.scan_rows},""" +
-            s""""scan_bytes":${c.scan_bytes},"scan_files":${c.scan_files},""" +
-            s""""shuffle_bytes":${c.shuffle_bytes},""" +
-            s""""shuffle_rows":${c.shuffle_rows},""" +
-            s""""result_rows":${c.result_rows},"wall_ms":${c.wall_ms}}""")
-        } catch { case e: Throwable =>
-          System.err.println(s"[cost] $name failed: ${e.getMessage}")
-        }
+    names.foreach { name =>
+      try {
+        val c = graft.operators.CostLedger.measure(name,
+          SparkEntry.queries(name)(spark, sfDir))
+        println(s"""{"query":"${c.query}","scan_rows":${c.scan_rows},""" +
+          s""""scan_bytes":${c.scan_bytes},"scan_files":${c.scan_files},""" +
+          s""""shuffle_bytes":${c.shuffle_bytes},""" +
+          s""""shuffle_rows":${c.shuffle_rows},""" +
+          s""""result_rows":${c.result_rows},"wall_ms":${c.wall_ms}}""")
+      } catch { case e: Throwable =>
+        System.err.println(s"[cost] $name failed: ${e.getMessage}")
       }
+    }
     spark.stop()
   }
 }

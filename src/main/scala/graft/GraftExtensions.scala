@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: makes the graft native expressions
-  * first-class SQL functions in any session built with
-  * `spark.sql.extensions=graft.GraftExtensions` (spark-submit/cluster) —
-  * the packaged twin of VectorFunctions.register, which operators call for
-  * sessions created without the config. Both surfaces iterate the SAME
-  * builder table (VectorFunctions.builders), so they cannot drift. */
+/** SparkSessionExtensions entry point, and the only way graft's SQL
+  * functions (`VectorFunctions.builders`), `IntersectRewrite` and
+  * `AsOfJoinStrategy` get into a session: one built with
+  * `spark.sql.extensions=graft.GraftExtensions` (GraftSession sets it;
+  * spark-shell and spark-submit pass it with `--conf`) and its
+  * `newSession()`s. Without it a graft function is UNRESOLVED_ROUTINE. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -20,6 +20,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q3ShippingPriority(tables(spark, "/root/testdata/sf0.001"))
 
+  /** The query names a tool runs, sorted: all of [[queries]], or the
+    * subset named in the comma-separated `only`. Names are trimmed; a
+    * blank or absent value selects all; an unknown name throws. */
+  def select(only: Option[String]): Seq[String] = {
+    val all = queries.keySet
+    val named = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = named -- all
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    (if (named.isEmpty) all else named).toSeq.sorted
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2C analytics core

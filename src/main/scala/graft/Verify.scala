@@ -1,36 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. Exits 1 naming the queries
+  * that threw: tools/parity.py compares only the result dirs that exist. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — read as long nanos (exact)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local small files: split scans so every core participates
-      // (cluster deploys keep the 128m default)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = graft.core.GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // comma-separated subset for local iteration (tools/parity.py only
-    // checks result dirs that exist); the driver runs unfiltered
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = names.filterNot { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name")
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -49,5 +36,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.length} queries failed: " +
+        failed.mkString(", "))
+      System.exit(1)
+    }
   }
 }

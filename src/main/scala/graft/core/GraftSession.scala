@@ -2,13 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
-  *
-  * Local testing runs `local[32]`; the same settings are what we would ship
-  * on a multi-executor cluster: AQE on (runtime re-plan + skew-join), UTC
-  * session time, shuffle partitions sized to the parallelism at hand (32
-  * locally; on a 1000-executor cluster this is set to ~2-3x total cores).
-  */
+/** The one session factory: every graft entry point, graftbench and the
+  * spec session build through [[builder]], so the session they run is the
+  * one that ships. It runs `local[$SPARK_GRAFT_CPUS]` (default 32) with as
+  * many shuffle partitions (a cluster deploy sets ~2-3x total cores),
+  * installs `GraftExtensions`, and sets UTC, AQE with skew join, local
+  * scan splits, the generated-class cache and the `file:` filesystem. */
 object GraftSession {
 
   /** Entries of Spark's generated-class cache

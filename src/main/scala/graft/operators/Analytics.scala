@@ -462,7 +462,6 @@ object Analytics {
     * explode of the ONE agg row, not a second pass. */
   def profileTableOf(df: DataFrame, cols: Seq[String],
       hashDistinct: Set[String] = Set.empty): DataFrame = {
-    graft.plans.VectorFunctions.register(df.sparkSession)
     // wide text columns count distinct over a 64-bit content hash — the
     // D1 exchange discipline (the Expand branch and the distinct agg
     // carry 8 bytes, never the document); the oracle counts raw

@@ -79,7 +79,6 @@ object Dedup {
   private def tokenized(t: Tables): DataFrame = tokenizedDocs(t.documents)
 
   private def tokenizedDocs(docs: DataFrame): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     // sorted distinct token sets: lets the pair stage use the linear-merge
     // graft_intersect_size instead of per-pair hash-set building
     docs.select(
@@ -153,7 +152,6 @@ object Dedup {
     * scale path; on near-uniform vocabularies the blocked nested loop with
     * the merge kernel wins. */
   def ngramJaccardPairs(t: Tables, threshold: Double = 0.9): DataFrame = {
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     val cores = t.documents.sparkSession.sparkContext.defaultParallelism
     // native 3-gram kernel: the earlier column form (transform(sequence)
     // + substring + xxhash64) evaluated interpreted per gram and cost
@@ -190,7 +188,6 @@ object Dedup {
     * Jaccard. Output contract matches [[ngramJaccardPairs]]; DedupSpec
     * measures recall against it and asserts emitted pairs are exact. */
   def ngramLshPairs(t: Tables, threshold: Double = 0.9): DataFrame = {
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     val cores = t.documents.sparkSession.sparkContext.defaultParallelism
     val hashed = t.documents
       .select(col("doc_id"), call_function("graft_ngram3", col("text")).as("sh_h"))
@@ -340,7 +337,6 @@ object Dedup {
     * deployment substitution). */
   def dedupEvalSampled(t: Tables, threshold: Double = 0.95,
       denom: Int = 4): DataFrame = {
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     val buckets = 1L << 20
     val sliced = t.documents.filter(
       pmod(call_function("graft_mix64", col("doc_id")), lit(buckets))
@@ -1406,7 +1402,6 @@ object Dedup {
       paras: org.apache.spark.sql.Column,
       delim: String,
       sortedHashes: Array[Long]): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val lst = typedLit(sortedHashes.toSeq)
     docs.select(col("doc_id"), paras.as("paras"))
       .withColumn("kept", filter(col("paras"),

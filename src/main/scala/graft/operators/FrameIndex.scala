@@ -38,7 +38,6 @@ object FrameIndex {
     * frame the decoder rejects (null features) is skipped — it cannot
     * perceptually duplicate anything. */
   private def signatures(frames: DataFrame): DataFrame = {
-    graft.plans.VectorFunctions.register(frames.sparkSession)
     val bands = array(Dedup.simhashBandLayout.zipWithIndex.map { case ((off, w), k) =>
       struct(lit(k).as("k"),
         call_function("shiftright", col("sig"), lit(off))

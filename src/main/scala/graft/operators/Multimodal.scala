@@ -385,7 +385,6 @@ object Multimodal {
     call_function("graft_bmp_encode", framePattern))
 
   private def withBmpBlob(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .withColumn("blob", bmpBlobCol)
@@ -394,7 +393,6 @@ object Multimodal {
   /** Sorted-before-encode variant (the [[withBlobSorted]] rule: range
     * sampling for the sort must not evaluate the encode twice). */
   private def withBmpBlobSorted(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .orderBy("event_id")
@@ -487,7 +485,6 @@ object Multimodal {
 
   /** Sorted-before-encode variant (the [[withBlobSorted]] rule). */
   private def withNalBlobSorted(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .orderBy("event_id")
@@ -527,7 +524,6 @@ object Multimodal {
   /** Unsorted variant for window-consuming G17 queries (the window
     * orders per partition; only the FINAL presentation sort pays). */
   private def withNalBlob(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .withColumn("blob", nalBlobCol)
@@ -581,7 +577,6 @@ object Multimodal {
     call_function("graft_hevc_encode", col("event_id"), col("user_id")))
 
   private def withHevcBlobSorted(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .orderBy("event_id")
@@ -646,7 +641,6 @@ object Multimodal {
     * oracle replays the census in closed form. Per-row kernels; no
     * shuffle below the final sort. */
   def mmGopCensus(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentFrame(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       call_function("graft_h264_gop_encode", col("event_id"), col("user_id")))
@@ -677,7 +671,6 @@ object Multimodal {
     * frame counter. Per-row codegen kernels, no shuffle below the
     * final sort. */
   def mmHevcGopCensus(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentFrame(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       call_function("graft_hevc_gop_encode", col("event_id"), col("user_id")))
@@ -728,7 +721,6 @@ object Multimodal {
     * right slice-header parser and emits the unified per-event P/B/I
     * view a heterogeneous fleet's health dashboard reads. */
   def mmGopDispatch(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val avc = col("user_id") % 2 === 0
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
@@ -773,7 +765,6 @@ object Multimodal {
     * proves the out-of-band path. Per-row kernels, no shuffle below
     * the final sort. */
   def mmAvccSps(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("V_MPEG4/ISO/AVC"),
@@ -805,7 +796,6 @@ object Multimodal {
     * from the array walk → 2-byte header skip → EP strip → the G20
     * SPS reader. */
   def mmHvccSps(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("V_MPEGH/ISO/HEVC"),
@@ -841,7 +831,6 @@ object Multimodal {
     * slice_rbsp_bytes) stream-health view. Per-row kernels, no shuffle
     * below the final sort. */
   def mmCodecDispatch(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val avc = col("user_id") % 2 === 0
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
@@ -907,7 +896,6 @@ object Multimodal {
     * corrupts a single byte breaks one of those columns. Three chained
     * per-row kernels, no shuffle below the final sort. */
   def mmAvccToAnnexb(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("V_MPEG4/ISO/AVC"),
@@ -944,7 +932,6 @@ object Multimodal {
     * columns. Three chained per-row kernels, no shuffle below the
     * final sort. */
   def mmHvccToAnnexb(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("V_MPEGH/ISO/HEVC"),
@@ -978,7 +965,6 @@ object Multimodal {
     * the usual WAV payload — the ASC travels ONLY in the container, so
     * the hash pins the out-of-band read. */
   def mmAacAsc(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("A_AAC"),
@@ -1017,7 +1003,6 @@ object Multimodal {
     seiCensusOf(t, "graft_hevc_sei_encode", "graft_hevc_sei_census")
 
   private def seiCensusOf(t: Tables, enc: String, census: String): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentFrame(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       call_function(enc, col("event_id"), col("user_id")))
@@ -1045,7 +1030,6 @@ object Multimodal {
     * row_number window); media bytes never cross it. */
   def mmRandomAccessIndex(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentFrame(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       call_function("graft_h264_sei_encode", col("event_id"), col("user_id")))
@@ -1077,7 +1061,6 @@ object Multimodal {
     * length must equal 7 + payload. Three chained per-row kernels, no
     * shuffle below the final sort. */
   def mmAscToAdts(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val blob = EbmlFunctions.encodeFragmentTrack(
       col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
       lit("A_AAC"),
@@ -1139,7 +1122,6 @@ object Multimodal {
 
   /** Sorted-before-encode variant (the [[withBlobSorted]] rule). */
   private def withWavBlobSorted(t: Tables): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     t.events
       .withColumn("ts_ms", nanosToMs(col("ts")))
       .orderBy("event_id")
@@ -1191,7 +1173,6 @@ object Multimodal {
     * the same sample arithmetic. Plan: per-row encode/decode kernels,
     * ONE exchange (the user rollup's partial agg). */
   def mmAudioVad(t: Tables, minMeanAbs: Long = 4096L): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     val f = call_function("graft_wav_features",
       call_function("graft_wav_encode", col("event_id"), silentCol))
     t.events
@@ -1227,7 +1208,6 @@ object Multimodal {
     * reports n_aligned = 0 and NULL gap integrals (SQL sum-of-empty),
     * identically on both engines. */
   def mmCrossAlign(t: Tables, minMeanAbs: Long = 4096L): DataFrame = {
-    graft.plans.VectorFunctions.register(t.events.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val isImage = col("event_id") % 3L === 0L
     val e = t.events

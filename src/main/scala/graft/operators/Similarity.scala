@@ -21,7 +21,6 @@ object Similarity {
 
   /** Embeddings with float→double cast and precomputed squared norm. */
   def withNorm(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", call_function("graft_norm2", col("v")))
@@ -65,7 +64,6 @@ object Similarity {
     * selects the anchor batch. */
   def contrastivePairsOf(corpus: DataFrame,
       anchors: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     val vecs = corpus.select(col("vec_id"),
         col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -124,7 +122,6 @@ object Similarity {
   def contrastivePairsAll(corpus: DataFrame, k: Int, kCells: Int,
       nprobe: Int, iters: Int, blocks: Int = 16): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    VectorFunctions.register(corpus.sparkSession)
     val cores = corpus.sparkSession.sparkContext.defaultParallelism
     val vecs = corpus.select(col("vec_id"),
         col("label").cast("long").as("label"),
@@ -582,7 +579,6 @@ object Similarity {
       dataFilter: Column, k: Int = 5, kCells: Int = 8, nprobe: Int = 3,
       iters: Int = 5): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    VectorFunctions.register(corpus.sparkSession)
     val fitVecs = withNorm(corpus.select("vec_id", "embedding"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (centroids, _) = lloyd(fitVecs, kCells, iters, 1e-9)
@@ -1430,8 +1426,6 @@ object Similarity {
 
   /** Library form over any (vec_id, embedding, label) frame. */
   def embedStatsOf(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     val Q = (1L << 20).toDouble
     val vecs = embeddings
       .select(col("vec_id"), col("label").cast("long").as("label"),

@@ -61,7 +61,6 @@ object TextIndex {
     * empty array and so never lands in the bands table, mirroring the
     * candidate path's n > 0 filter). */
   private def signatures(docs: DataFrame): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     docs.select(
       col("doc_id"),
       xxhash64(col("text")).as("h1"),

@@ -162,7 +162,6 @@ object TextOps {
     * pins the broadcast. */
   def decontaminateAgainst(docs: DataFrame, benchmark: DataFrame,
       n: Int = 3): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val grams = (d: DataFrame) => d.select(col("doc_id"),
       call_function("graft_word_ngrams", words(col("text")), lit(n)).as("gs"))
     val bench = grams(benchmark)
@@ -199,7 +198,6 @@ object TextOps {
     * side and the prefilter would guard nothing). */
   def decontaminateBloomAgainst(docs: DataFrame, benchmark: DataFrame,
       n: Int = 3, mBits: Int = 1 << 20, k: Int = 7): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val grams = (d: DataFrame) => d.select(col("doc_id"),
       call_function("graft_word_ngrams", words(col("text")), lit(n)).as("gs"))
     val bench = grams(benchmark)
@@ -244,7 +242,6 @@ object TextOps {
     * left join keeps zero-hit docs so the verdict column is total. */
   def decontaminateRatioAgainst(docs: DataFrame, benchmark: DataFrame,
       n: Int = 3, pct: Int = 50): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val grams = (d: DataFrame) => d.select(col("doc_id"),
       explode(call_function("graft_word_ngrams", words(col("text")), lit(n))).as("g"))
     val bench = grams(benchmark).select(col("g")).distinct()
@@ -307,7 +304,6 @@ object TextOps {
     * so it runs in append mode with NO state store. */
   private[graft] def decontaminateFuzzyCore(docs: DataFrame,
       benchmark: DataFrame, threshold: Double): DataFrame = {
-    graft.plans.VectorFunctions.register(benchmark.sparkSession)
     val tok = (d: DataFrame) => d
       .select(col("doc_id"),
         array_sort(array_distinct(words(col("text")))).as("toks"))
@@ -357,7 +353,6 @@ object TextOps {
     * [[graft.streaming.EventStreams.decontaminateStream]] or any
     * per-row membership probe. */
   def benchmarkGrams(benchmark: DataFrame, n: Int = 3): Array[Long] = {
-    graft.plans.VectorFunctions.register(benchmark.sparkSession)
     val gs = benchmark
       .select(explode(call_function("graft_word_ngrams",
         words(col("text")), lit(n))).as("g"))
@@ -533,7 +528,6 @@ object TextOps {
     * hash order, so the sample is hash-exact. */
   def sampleKPerSource(t: Tables, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     sampleKPerGroup(t.documents.select(col("doc_id"), col("source")), k)
       .orderBy("source", "rn")
   }
@@ -541,7 +535,6 @@ object TextOps {
   /** Library form over any (doc_id, source) frame; no output sort. */
   def sampleKPerGroup(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
     docs
       .withColumn("h", call_function("graft_mix64", col("doc_id")))
@@ -590,7 +583,6 @@ object TextOps {
     // native codegen expression: the column form (regexp_extract_all per
     // char + interpreted aggregate lambda) measured ~µs/char; the kernel
     // is ~ns/char with identical results (TextOpsSpec pins equivalence)
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     docsSorted(t)
       .select(col("doc_id"), call_function("graft_fingerprint", col("text")).as("fp"))
   }
@@ -656,7 +648,6 @@ object TextOps {
   val WsRunRe = "[\\s]+"
 
   def normalizeTextOf(docs: DataFrame): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val cleaned = trim(regexp_replace(
       regexp_replace(
         call_function("graft_nfc", col("text")),
@@ -719,7 +710,6 @@ object TextOps {
     * N/capacity error bound in the saturated regime is spec-covered on
     * planted skew. Ties: (count desc, term asc), both engines. */
   def approxTopTerms(t: Tables, k: Int = 20, capacity: Int = 1024): DataFrame = {
-    graft.plans.VectorFunctions.register(t.documents.sparkSession)
     t.documents
       .select(explode(words(col("text"))).as("term"))
       .agg(call_function("graft_topk_freq", col("term"), lit(capacity)).as("s"))
@@ -763,7 +753,6 @@ object TextOps {
       probes: Seq[String] = StopWords): DataFrame = {
     require((w & (w - 1)) == 0, s"w=$w must be a power of two (pmod ≡ unsigned mod)")
     val spark = docs.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     import spark.implicits._
     val buckets = (0 until d).map { i =>
       pmod(call_function("graft_mix64",
@@ -852,8 +841,6 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     require(dim > 0 && (dim & (dim - 1)) == 0,
       s"dim=$dim must be a power of two (bitmask ≡ unsigned mod)")
-    val spark = docs.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     // LAZY localCheckpoint (the D8 rule): df derives from tf, so
     // without it the scan+tokenize+hash+agg would run twice per action
     val (tf, feat) = embedFeatParts(docs, dim)
@@ -971,8 +958,6 @@ object TextOps {
   def hybridSearchTopKOf(docs: DataFrame, queryTerms: Seq[String],
       dim: Int, n: Int, k: Int, kRrf: Long): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.distinct)
-    val spark = docs.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     // lexical arm: the F22 ranked list to depth n
     val lex = bm25TopKOf(docs, queryTerms, n)
       .select(col("doc_id"), col("rnk").as("rnk_bm25"))
@@ -1066,7 +1051,6 @@ object TextOps {
   def materializeHybridSemantic(t: Tables, sfDir: String,
       dim: Int = 64): String = {
     val spark = t.documents.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     val out = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"),
       s"graft_hybrid_sem_v1_d$dim" + s"_${math.abs(sfDir.hashCode)}")
@@ -1115,7 +1099,6 @@ object TextOps {
       dim: Int = 64, n: Int = 20, k: Int = 10, kRrf: Long = 60L,
       nprobe: Int = 8, cushion: Int = 10): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.distinct)
-    graft.plans.VectorFunctions.register(spark)
     // lexical arm: zero-rescan BM25 from the inverted index
     val lex = SearchIndex.search(spark, lexDir, queryTerms, n)
       .select(col("doc_id"), col("rnk").as("rnk_bm25"))
@@ -1213,7 +1196,6 @@ object TextOps {
 
   /** The same signals over any (doc_id, text) frame; no output sort. */
   def repetitionSignalsOf(docs: DataFrame, blockN: Int = 8): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val st = call_function("graft_rep_stats", split(col("text"), " "), lit(blockN))
     val nChars = length(col("text")).cast("long")
     def frac(num: Column, den: Column): Column =
@@ -1356,7 +1338,6 @@ object TextOps {
   def mixTokenBudgetOf(docs: DataFrame, budgets: Map[String, Long],
       defaultBudget: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val nTok = size(call_function("regexp_extract_all",
       col("text"), lit("\\S+"), lit(0))).cast("long")
     // budget as a when-chain on source (the F8 discipline: config is
@@ -1412,7 +1393,6 @@ object TextOps {
       validPct: Int = 1): DataFrame = {
     require(trainPct > 0 && validPct > 0 && trainPct + validPct < 100,
       s"split pcts must leave room for test: train=$trainPct valid=$validPct")
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val buckets = 1L << 20
     val t1 = buckets * trainPct / 100L
     val t2 = buckets * (trainPct + validPct) / 100L
@@ -1464,7 +1444,6 @@ object TextOps {
       validPct: Int = 1): DataFrame = {
     require(trainPct > 0 && validPct > 0 && trainPct + validPct < 100,
       s"split pcts must leave room for test: train=$trainPct valid=$validPct")
-    graft.plans.VectorFunctions.register(clusters.sparkSession)
     val buckets = 1L << 20
     val t1 = buckets * trainPct / 100L
     val t2 = buckets * (trainPct + validPct) / 100L
@@ -1487,7 +1466,6 @@ object TextOps {
     require(nShards > 0 && (nShards & (nShards - 1)) == 0,
       s"nShards must be a power of two, got $nShards")
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val w = Window.partitionBy("shard").orderBy(col("h"), col("doc_id"))
     docs
       .select(col("doc_id"), col("source"))
@@ -2174,7 +2152,6 @@ object TextOps {
   /** Library form over any frame with (doc_id, text). */
   def unigramTokenizerOf(docs: DataFrame, vocabMulti: Int,
       rounds: Int): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     val wf = docs.select(explode(words(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .localCheckpoint() // the one corpus-sized stage, materialized once
@@ -2542,7 +2519,6 @@ object TextOps {
   /** Library form over any (doc_id, logodds_micro) weight table. */
   def dsirResampleOf(scores: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorFunctions.register(scores.sparkSession)
     val u = (shiftrightunsigned(
       call_function("graft_mix64", col("doc_id")), 11).cast("double")
       + lit(0.5)) / lit(9007199254740992.0)

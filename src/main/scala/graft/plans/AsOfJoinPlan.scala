@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.First
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.LongType
   * first-class plan node: a forward as-of join. `AsOfJoinPlan` is the
   * logical operator; `AsOfJoinStrategy` lowers it to the shuffle-minimal
   * union+window form (ONE exchange on the key, no join) and hands the
-  * lowered plan back to the planner.
+  * lowered plan back to the planner. [[graft.GraftExtensions]] installs
+  * the strategy; a session without it fails to plan the node.
   *
   * This is the (c) rung of the extension ladder — custom LogicalPlan +
   * SparkStrategy — used where the operator's semantics (nearest
@@ -95,11 +96,6 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame,
       leftKey: String, leftTs: String,
       rightKey: String, rightTs: String, rightValue: String): DataFrame = {
-    val spark: SparkSession = left.sparkSession
-    // idempotently register the strategy with the session planner
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =
@@ -110,6 +106,6 @@ object AsOf {
       attr(lp, leftKey), attr(lp, leftTs),
       attr(rp, rightKey), attr(rp, rightTs), rv,
       AttributeReference("asof_match", rv.dataType, nullable = true)())
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, node)
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(left.sparkSession, node)
   }
 }

@@ -15,8 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   * Semantics: size(array_intersect(a,b)) counts the distinct common
   * elements, which is exactly IntersectSortedSize over sorted distinct
   * inputs. Only string arrays are rewritten (the kernel compares
-  * UTF8Strings). Install via GraftExtensions (spark.sql.extensions) or
-  * `spark.experimental.extraOptimizations`.
+  * UTF8Strings). Installed by GraftExtensions (spark.sql.extensions).
   */
 object IntersectRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

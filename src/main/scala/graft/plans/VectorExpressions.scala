@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -528,16 +527,15 @@ case class Sq8Dequant(first: Expression, second: Expression, third: Expression)
     copy(first = f, second = s, third = t)
 }
 
-/** Session-level registration so operators can reach the native expressions
+/** The SQL names of the native expressions, so operators reach them
   * through `call_function` without touching private Column constructors. */
 object VectorFunctions {
 
-  /** ONE builder table shared by both registration surfaces —
-    * session-level [[register]] and the `spark.sql.extensions` entry
-    * point ([[graft.GraftExtensions]]). The round-4 self-review caught
-    * the two lists drifting (new kernels registered only here); a
-    * single table makes that drift impossible. The class accompanies
-    * each builder for the ExpressionInfo the extensions API wants.
+  /** The builder table [[graft.GraftExtensions]] injects into every
+    * session built with `spark.sql.extensions=graft.GraftExtensions`
+    * (`graft.core.GraftSession.builder` sets it); no other path
+    * registers them. The class accompanies each builder for the
+    * ExpressionInfo the extensions API wants.
     * Notes folded into builders: graft_word_ngrams takes an optional
     * gram-width literal; graft_vec_sum returns a bare AggregateFunction
     * (the analyzer wraps it in an AggregateExpression at resolution). */
@@ -693,12 +691,4 @@ object VectorFunctions {
     ("graft_bloom_contains", classOf[BloomContains],
       (exprs: Seq[Expression]) => BloomContains(exprs.head, exprs(1),
         IntLitArg.of("graft_bloom_contains(bloom, hash, k)", "k", exprs(2)))))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    builders.foreach { case (name, _, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
 }

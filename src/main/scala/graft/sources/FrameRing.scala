@@ -132,7 +132,6 @@ object FrameRing {
   def applyBatch(spark: SparkSession, dir: String, frames: DataFrame,
       maxLen: Int, minGapMs: Long = 0L,
       buckets: Int = DefaultBuckets, batchId: Option[Long] = None): Unit = {
-    graft.plans.VectorFunctions.register(spark)
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

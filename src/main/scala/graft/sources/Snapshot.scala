@@ -50,7 +50,6 @@ object Snapshot {
   /** Write the base snapshot hash-partitioned on `keyCol`. */
   def writeBase(df: DataFrame, keyCol: String, path: String,
       buckets: Int = DefaultBuckets): Unit = {
-    graft.plans.VectorFunctions.register(df.sparkSession)
     df.withColumn("bucket", bucketOf(col(keyCol), buckets))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
   }
@@ -60,11 +59,6 @@ object Snapshot {
     * deletes the key (payload columns ignored). */
   def merge(spark: SparkSession, path: String, batch: DataFrame,
       keyCol: String, buckets: Int = DefaultBuckets): Unit = {
-    graft.plans.VectorFunctions.register(spark)
-    // the batch may come from a streaming foreachBatch, whose frame
-    // analyzes against a CLONED session state — register the kernels
-    // there too, or bucketOf's graft_mix64 is unresolved in the clone
-    graft.plans.VectorFunctions.register(batch.sparkSession)
     val bb = batch.withColumn("bucket", bucketOf(col(keyCol), buckets))
     // driver state: at most `buckets` longs, whatever the batch size
     val touched = bb.select("bucket").distinct()
@@ -120,10 +114,6 @@ object Snapshot {
     * key — the B23 election), so callers stream raw changelogs. */
   def mergeCdc(spark: SparkSession, path: String, changes: DataFrame,
       keyCol: String, buckets: Int = DefaultBuckets): Unit = {
-    graft.plans.VectorFunctions.register(spark)
-    // foreachBatch frames analyze against a cloned session state (see
-    // merge): the clone needs the kernels registered directly
-    graft.plans.VectorFunctions.register(changes.sparkSession)
     val payloadCols = changes.columns.filterNot(
       c => c == keyCol || c == "ver" || c == "op").toSeq
     // within-batch winner per key: ver leads the struct ordering and is

@@ -161,7 +161,6 @@ object VersionedSnapshot {
   def init(df: DataFrame, keyCol: String, path: String,
       buckets: Int = Snapshot.DefaultBuckets): Long = {
     val spark = df.sparkSession
-    graft.plans.VectorFunctions.register(spark)
     require(currentVersion(spark, path) < 0L,
       s"$path is already a versioned snapshot")
     // key first in the stored layout regardless of the caller's column
@@ -230,10 +229,6 @@ object VersionedSnapshot {
   private def applyChangesImpl(spark: SparkSession, path: String,
       changes: DataFrame, keyCol: String, buckets: Int,
       batchId: Option[Long]): Long = {
-    graft.plans.VectorFunctions.register(spark)
-    // foreachBatch frames analyze against a cloned session state (the
-    // Snapshot.merge rule): register the kernels on the frame's session
-    graft.plans.VectorFunctions.register(changes.sparkSession)
     val cur = currentVersion(spark, path)
     require(cur >= 0L, s"$path is not initialized (call init first)")
     requireTableMeta(spark, path, cur, keyCol, buckets)

@@ -188,7 +188,6 @@ object EventStreams {
     * new model. Output: one (doc_id, n_hits) row per contaminated doc. */
   def decontaminateStream(docs: DataFrame, benchGrams: Array[Long],
       n: Int = 3): DataFrame = {
-    graft.plans.VectorFunctions.register(docs.sparkSession)
     docs
       .withColumn("n_hits", call_function("graft_intersect_long_size",
         call_function("graft_word_ngrams",
@@ -501,7 +500,6 @@ object EventStreams {
   def keyframeIndexStream(fragments: DataFrame): Dataset[KeyframeIndexed] = {
     import fragments.sparkSession.implicits._
     import graft.ebml.EbmlFunctions
-    graft.plans.VectorFunctions.register(fragments.sparkSession)
     val frame = EbmlFunctions.firstBlock(col("blob"))
     val tg = EbmlFunctions.parseTags(col("blob"))
     fragments
@@ -542,7 +540,6 @@ object EventStreams {
       windowLen: String = "10 minutes",
       lateness: String = "1 minute"): DataFrame = {
     import graft.ebml.EbmlFunctions
-    graft.plans.VectorFunctions.register(fragments.sparkSession)
     val tg = EbmlFunctions.parseTags(col("blob"))
     fragments
       // Tracks-less / unknown-codec fragments land in a visible
@@ -583,7 +580,6 @@ object EventStreams {
       windowLen: String = "10 minutes",
       lateness: String = "1 minute"): DataFrame = {
     import graft.ebml.EbmlFunctions
-    graft.plans.VectorFunctions.register(fragments.sparkSession)
     val tg = EbmlFunctions.parseTags(col("blob"))
     fragments
       // a fragment without a Tracks element (or with an unknown codec)

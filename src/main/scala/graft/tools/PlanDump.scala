@@ -1,37 +1,23 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for declared queries to files, one per
   * query — the committed plan evidence for optimization rounds
-  * (`plans/r<N>/<query>_{before,after}.txt`). The session is configured
-  * exactly like [[graft.Bench]] so the dumped plan is the plan the bench
-  * times (same shuffle-partition, AQE, and split settings).
+  * (`plans/r<N>/<query>_{before,after}.txt`). The session comes from
+  * `graft.core.GraftSession.builder`, as [[graft.Bench]]'s does, so the
+  * dumped plan is the plan the bench times.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * With no query list, dumps every declared query.
+  * With no or a blank query list, dumps every query; unknown names fail.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = Paths.get(args(1))
     val suffix = args(2)
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = graft.SparkEntry.select(args.lift(3))
+    val spark = graft.core.GraftSession.builder("graft-plandump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // capture the plans of eagerly-checkpointed SUB-STAGES too: the
     // fixpoint families' final plans read ExistingRDDs, so the stage
@@ -40,11 +26,9 @@ object PlanDump {
     // verdict item 5)
     spark.conf.set("spark.graft.plandump.captureStages", "true")
     Files.createDirectories(outDir)
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     var failures = 0
     names.foreach { name =>
-      StagePlans.drain() // discard stages recorded by a previous failure
+      StagePlans.drain(spark) // discard stages recorded by a previous failure
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution.explainString(
@@ -52,7 +36,7 @@ object PlanDump {
         Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), txt)
         // building df ran the eager sub-stages; their recorded plans
         // belong to this query
-        val stages = StagePlans.drain()
+        val stages = StagePlans.drain(spark)
         if (stages.nonEmpty) {
           val body = stages.map { case (tag, plan) =>
             s"== Stage: $tag ==\n$plan" }.mkString("\n")
@@ -69,9 +53,11 @@ object PlanDump {
     spark.stop()
     // a scripted dump must not silently commit an incomplete evidence
     // set (round-20 advice)
-    if (failures > 0) {
+    if (failures > 0)
       System.err.println(s"[plandump] $failures queries failed to dump")
-      System.exit(1)
-    }
+    if (StagePlans.dropped > 0)
+      System.err.println(s"[plandump] ${StagePlans.dropped} stage plans " +
+        s"dropped: a query recorded more than ${StagePlans.Capacity}")
+    if (failures > 0 || StagePlans.dropped > 0) System.exit(1)
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-probe data generator (round-6 verdict #8): synthesizes an
   * sf1-shaped `documents` + `embeddings` corpus from the driver's sf0.1
@@ -161,13 +161,7 @@ object ScaleData {
       .getOrElse(AllTables.toSet)
     val unknown = tables -- AllTables.toSet
     require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("graft-scaledata").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (tables("documents"))
       scaleDocuments(spark.read.parquet(s"$src/documents.parquet"), factor)

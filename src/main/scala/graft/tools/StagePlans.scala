@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Capture hook for the physical plans of EAGERLY-materialized
   * sub-stages (the fixpoint families' per-round checkpoints, the LSH
@@ -10,24 +10,39 @@ import org.apache.spark.sql.DataFrame
   * checkpoints" — so when `spark.graft.plandump.captureStages` is true
   * (PlanDump sets it; Bench/Verify never do) each checkpoint site
   * records the stage's formatted plan here before materializing, and
-  * PlanDump drains the buffer into `<query>_stages_<suffix>.txt`.
+  * PlanDump drains its session's records into
+  * `<query>_stages_<suffix>.txt`.
+  *
+  * Records are keyed by the recording session, so concurrent sessions
+  * each drain only their own; past [[Capacity]] records in all, the
+  * oldest is dropped and counted in [[dropped]].
   *
   * Off by default: the only cost on the bench path is one conf lookup
   * per checkpoint. */
 object StagePlans {
+  val Capacity = 256
+
   private val buf =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    scala.collection.mutable.ArrayDeque.empty[(SparkSession, String, String)]
+  private var droppedCount = 0L
 
   private[graft] def record(df: DataFrame, tag: String): Unit =
     if (df.sparkSession.conf
-        .get("spark.graft.plandump.captureStages", "false").toBoolean)
-      buf.add(tag -> df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+        .get("spark.graft.plandump.captureStages", "false").toBoolean) {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      buf.synchronized {
+        if (buf.length >= Capacity) { buf.removeHead(); droppedCount += 1 }
+        buf.append((df.sparkSession, tag, plan))
+      }
+    }
 
-  private[graft] def drain(): Seq[(String, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var e = buf.poll()
-    while (e != null) { out += e; e = buf.poll() }
-    out.toSeq
-  }
+  /** Removes and returns `spark`'s records, oldest first, as (tag, plan). */
+  private[graft] def drain(spark: SparkSession): Seq[(String, String)] =
+    buf.synchronized {
+      buf.removeAll(_._1 eq spark).map { case (_, tag, plan) => tag -> plan }.toSeq
+    }
+
+  /** Records dropped because the queue was full, since the JVM started. */
+  def dropped: Long = buf.synchronized(droppedCount)
 }

@@ -5,21 +5,15 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
-/** Shared local session for specs (small parallelism, exact configs the
-  * driver uses — notably nanosAsLong for events.ts). The generated-class
-  * cache size is static and JVM-global: the first session to generate
-  * code fixes it, so the spec session takes GraftSession's. */
+/** Shared local session for specs: the shipping session
+  * (`graft.core.GraftSession.builder`, so `GraftExtensions` and every
+  * other shipped setting are in force) with only three overrides —
+  * `local[4]`, 4 shuffle partitions and a warehouse dir under /tmp. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.core.GraftSession.builder("graft-test")
     .master("local[4]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries",
-      graft.core.GraftSession.CodegenCacheEntries.toString)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"

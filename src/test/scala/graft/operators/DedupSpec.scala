@@ -32,7 +32,6 @@ class DedupSpec extends SparkSpec {
 
   test("native minhash expression matches the UDF reference implementation") {
     import org.apache.spark.sql.functions._
-    graft.plans.VectorFunctions.register(spark)
     val toks = array_sort(array_distinct(graft.functions.words(col("text"))))
     val both = t.documents.limit(100)
       .select(col("doc_id"),

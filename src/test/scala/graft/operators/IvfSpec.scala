@@ -49,7 +49,6 @@ class IvfSpec extends SparkSpec {
   test("vector-sum aggregate equals driver-side element-wise sums") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.VectorFunctions.register(spark)
     val data = Seq(
       (0L, Array(1.0, 2.0, 3.0)), (0L, Array(0.5, -1.0, 4.0)),
       (1L, Array(10.0, 0.0, -2.0)), (0L, Array(2.5, 2.0, 3.0)))
@@ -68,7 +67,6 @@ class IvfSpec extends SparkSpec {
   test("vector-sum of all-empty-array groups survives the exchange as empty, not null") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.plans.VectorFunctions.register(spark)
     // a group whose rows are all zero-length arrays holds a zero-length
     // buffer; with the old empty-bytes encoding the shuffle-exchanged
     // partial deserialized back to null, so the same query answered

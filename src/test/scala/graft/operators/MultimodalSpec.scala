@@ -69,7 +69,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("mm_audio_vad gate separates the planted silent population EXACTLY (G8b)") {
-    graft.plans.VectorFunctions.register(spark)
     import org.apache.spark.sql.functions._
     // per-frame gate verdicts, recomputed independently of the rollup
     val f = call_function("graft_wav_features",
@@ -92,7 +91,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("mm_audio_features rides the EBML transport: decode(firstBlock(encode)) == direct decode (G8)") {
-    graft.plans.VectorFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val direct = call_function("graft_wav_features",
       call_function("graft_wav_encode", col("event_id"), col("event_id") % 5 === 0))
@@ -148,7 +146,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("codecCensus: unknown codec ids come back UNPARSED (null), never routed to a census kernel (G24)") {
-    graft.plans.VectorFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import graft.functions.{cents, nanosToMs}
     import graft.ebml.EbmlFunctions

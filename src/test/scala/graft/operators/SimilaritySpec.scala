@@ -90,7 +90,6 @@ class SimilaritySpec extends SparkSpec {
   test("pq adc kernel equals a driver-side table-lookup sum") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.plans.VectorFunctions.register(spark)
     val table = (0 until 12).map(_.toDouble * 1.5) // m=3 subspaces, k=4
     val codes = Seq(Seq(2, 0, 3), Seq(1, 1, 1), Seq(0, 3, 2))
     val got = codes.toDF("codes")
@@ -250,7 +249,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("sq8 encode/dequant round-trip error stays within half a quantization step") {
     import org.apache.spark.sql.functions._
-    graft.plans.VectorFunctions.register(spark)
     val vecs = t.embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // fit the same model the operator fits

@@ -667,7 +667,6 @@ class TextOpsSpec extends SparkSpec {
       .take(got.length).map(_._1)
     assert(got.map(_._2).toSeq == expOrder, "rank order diverges from exact")
     // partition count must not change the unsaturated summary
-    graft.plans.VectorFunctions.register(spark)
     val repart = t.documents.repartition(7)
       .select(explode(graft.functions.words(col("text"))).as("term"))
       .agg(call_function("graft_topk_freq", col("term"), lit(1024)).as("s"))
@@ -680,7 +679,6 @@ class TextOpsSpec extends SparkSpec {
   test("misra-gries saturated regime: heavy hitter survives, counts lower-bound truth") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.plans.VectorFunctions.register(spark)
     // 1000 x hot + 50 cold terms x 10 = N 1500; capacity 8 ->
     // error <= N/capacity = 187.5; hot (freq 1000) must survive
     val rows = Seq.fill(1000)("hot") ++

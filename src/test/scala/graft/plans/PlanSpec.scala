@@ -83,30 +83,24 @@ class PlanSpec extends SparkSpec {
 
   test("IntersectRewrite swaps array_intersect counting for the merge kernel") {
     import org.apache.spark.sql.functions._
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ IntersectRewrite
-    try {
-      val df = t.documents.limit(50)
-        .select(col("doc_id"), split(col("text"), " ").as("w1"),
-          split(lower(col("text")), " ").as("w2"))
-        .select(col("doc_id"), size(array_intersect(col("w1"), col("w2"))).as("c"))
-      assert(df.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"),
-        df.queryExecution.optimizedPlan.toString)
-      // rewritten results must equal the un-rewritten semantics
-      val expected = t.documents.limit(50)
-        .select(col("doc_id"), split(col("text"), " ").as("w1"),
-          split(lower(col("text")), " ").as("w2"))
-        .collect().map { r =>
-          val w1 = r.getSeq[String](1).distinct.toSet
-          val w2 = r.getSeq[String](2).distinct.toSet
-          r.getLong(0) -> w1.intersect(w2).size
-        }.toMap
-      val got = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(got == expected)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == IntersectRewrite)
-    }
+    // no manual install: the spec session is the shipped one
+    val df = t.documents.limit(50)
+      .select(col("doc_id"), split(col("text"), " ").as("w1"),
+        split(lower(col("text")), " ").as("w2"))
+      .select(col("doc_id"), size(array_intersect(col("w1"), col("w2"))).as("c"))
+    assert(df.queryExecution.optimizedPlan.toString.contains("graft_intersect_size"),
+      df.queryExecution.optimizedPlan.toString)
+    // rewritten results must equal the un-rewritten semantics
+    val expected = t.documents.limit(50)
+      .select(col("doc_id"), split(col("text"), " ").as("w1"),
+        split(lower(col("text")), " ").as("w2"))
+      .collect().map { r =>
+        val w1 = r.getSeq[String](1).distinct.toSet
+        val w2 = r.getSeq[String](2).distinct.toSet
+        r.getLong(0) -> w1.intersect(w2).size
+      }.toMap
+    val got = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == expected)
   }
 
   test("text operators prune the documents scan to the columns they use") {

@@ -6,13 +6,20 @@ import graft.operators.TextOps
 
 /** The pure-SQL surface: a user who speaks only `spark.sql` gets the
   * same engine — temp views over the tables, graft native functions
-  * callable from SQL (the in-session twin of the GraftExtensions
-  * `spark.sql.extensions` registration), identical results to the
+  * callable from SQL (installed by `GraftExtensions`, which the shipped
+  * session sets; nothing here registers them), identical results to the
   * DataFrame operators. */
 class SqlSurfaceSpec extends SparkSpec {
 
+  test("every graft function is installed, also in a newSession") {
+    val names = VectorFunctions.builders.map(_._1)
+    for (s <- Seq(spark, spark.newSession())) {
+      val missing = names.filterNot(s.catalog.functionExists)
+      assert(missing.isEmpty, s"not installed: $missing")
+    }
+  }
+
   test("native kernels are callable from SQL and match the operators") {
-    VectorFunctions.register(spark)
     t.documents.createOrReplaceTempView("documents_v")
     val viaSql = spark.sql(
       "SELECT doc_id, graft_fingerprint(text) AS fp FROM documents_v ORDER BY doc_id")
@@ -23,7 +30,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-4 kernels (ngrams, scale, adc, vec_sum) work from SQL") {
-    VectorFunctions.register(spark)
     t.documents.createOrReplaceTempView("documents_v")
     t.embeddings.createOrReplaceTempView("embeddings_v")
     // word n-grams with an explicit width literal
@@ -60,7 +66,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_pq_adc rejects malformed shapes loudly instead of misreading") {
-    VectorFunctions.register(spark)
     def failsNaming(sql: String): Unit = {
       val e = intercept[Throwable] { spark.sql(sql).collect() }
       def chain(t: Throwable): Seq[Throwable] =
@@ -96,7 +101,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-11 vector/text kernels (sq8, nfc) work from SQL") {
-    VectorFunctions.register(spark)
     // sq8 round-trip from SQL: dequant(encode(v)) stays within half a step
     val r = spark.sql(
       """SELECT graft_sq8_dequant(
@@ -112,7 +116,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-11 sorted-contains kernel works from SQL and matches a linear probe") {
-    VectorFunctions.register(spark)
     // membership over a sorted literal — present, absent, boundary ends
     val rows = spark.sql(
       """SELECT graft_sorted_contains(array(-9L, 0L, 3L, 7L, 100L), x) AS hit
@@ -137,7 +140,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-11 kernels (rep_stats, topk_freq) work from SQL") {
-    VectorFunctions.register(spark)
     t.documents.createOrReplaceTempView("documents_v")
     // rep_stats: counter layout position 1 = ceil(n_words / block_n)
     val blocks = spark.sql(
@@ -164,7 +166,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-16 augmentation kernels (bmp_patches, bmp_flip, wav_gain) work from SQL") {
-    graft.plans.VectorFunctions.register(spark)
     // patches of the flipped image, end to end in SQL
     val tiles = spark.sql(
       """SELECT pt.py, pt.px, pt.sum_luma FROM (
@@ -196,7 +197,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-17 NAL kernels (h264_encode, nal_units, nal_format, sps_dims) work from SQL") {
-    graft.plans.VectorFunctions.register(spark)
     // event 4 / user 3: Annex-B, 2 slices, Main profile, 112x62 cropped
     val r = spark.sql(
       """SELECT graft_nal_format(es) AS fmt,
@@ -211,7 +211,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-13 audio kernels (wav_encode, wav_features) work from SQL") {
-    graft.plans.VectorFunctions.register(spark)
     val r = spark.sql(
       """SELECT f.sample_rate, f.n_samples, f.peak, f.env_sig FROM (
            SELECT graft_wav_features(graft_wav_encode(7, false)) AS f)""")

@@ -62,7 +62,6 @@ class SnapshotSpec extends SparkSpec {
     }
     val before = (0L until B).map(b => b -> partFiles(b)).toMap
     // the scan the merge builds prunes at the partition level
-    graft.plans.VectorFunctions.register(spark)
     val prunedPlan = spark.read.parquet(dir)
       .filter(col("bucket").isin(touchedBucket))
       .queryExecution.executedPlan.toString

@@ -1297,11 +1297,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Seq(1L, 2L, 3L), s"replayed batch duplicated rows: $rows")
   }
 
-  test("extensions class registers the native functions without error") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.GraftExtensions().apply(ext) // throws on malformed injection
-  }
-
   test("stateful ops run on the RocksDB state store (the at-scale backend)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
