@@ -170,10 +170,10 @@ object SparkEntry {
     "dedup_eval_sampled" -> ((s, d) => Dedup.dedupEvalSampled(tables(s, d))),
     "dedup_simhash" -> ((s, d) => Dedup.simhashPairs(tables(s, d))),
     "dedup_embed" -> ((s, d) => Dedup.embeddingPairs(tables(s, d))),
-    "dedup_embed_lsh" -> ((s, d) => Dedup.embeddingPairsLshSized(tables(s, d))),
+    "dedup_embed_lsh" -> ((s, d) => Dedup.embeddingPairsLsh(tables(s, d))),
     // embedding clustering over the LSH-verified pairs (rows-only;
     // DedupSpec asserts it refines the brute-force clustering)
-    "dedup_embed_clusters" -> ((s, d) => Dedup.embedClustersLshSized(tables(s, d))),
+    "dedup_embed_clusters" -> ((s, d) => Dedup.embedClustersLsh(tables(s, d))),
     "dedup_clusters" -> ((s, d) => Dedup.dedupClusters(tables(s, d))),
     "dedup_keep_best" -> ((s, d) => Dedup.dedupKeepBest(tables(s, d))),
     // D9 corpus version audit; D10 incremental components — the DEPLOY

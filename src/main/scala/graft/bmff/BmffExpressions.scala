@@ -1,24 +1,24 @@
 package graft.bmff
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the BMFF kernels — the
-  * [[graft.ebml.EbmlExpressions]] execution shape (byte[] straight off
-  * the Tungsten row, InternalRow/ArrayData out, whole-stage codegen
-  * calling static kernel helpers) applied to the MP4 walk. */
+import graft.plans.Kernels.call
+
+/** The BMFF kernels behind the bmff_* functions
+  * ([[graft.plans.Kernels]]) — the [[graft.ebml.EbmlKernels]] execution
+  * shape (byte[] straight off the Tungsten row, InternalRow/ArrayData
+  * out, one static call inside whole-stage codegen) applied to the MP4
+  * walk. */
 object BmffKernels {
 
   def encodeClip(eventId: Long, tsMs: Long, userId: Long, valueC: Long,
       props: UTF8String): Array[Byte] =
-    Bmff.buildClip(eventId, tsMs, userId, valueC,
-      if (props == null) Array.emptyByteArray else props.getBytes)
+    Bmff.buildClip(eventId, tsMs, userId, valueC, props.getBytes)
 
   def boxesArray(buf: Array[Byte]): ArrayData = {
     val bs = Bmff.boxes(buf)
@@ -66,113 +66,18 @@ object BmffExpressions {
     StructField("clip", BinaryType)))
 }
 
-/** stream blob → array of (position, clip) slices at ftyp boundaries. */
-case class BmffSplitExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(BmffExpressions.sliceType, containsNull = false)
-  override def prettyName: String = "bmff_split_clips"
-  override def nullSafeEval(b: Any): Any =
-    BmffKernels.splitArray(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.bmff.BmffKernels.splitArray($c);")
-  override protected def withNewChildInternal(newChild: Expression): BmffSplitExpr =
-    copy(child = newChild)
-}
-
-/** (event_id, ts_ms, user_id, value_cents, props) → fMP4 clip blob. */
-case class BmffEncodeExpr(children: Seq[Expression]) extends Expression {
-  override def nullable: Boolean = children.take(4).exists(_.nullable)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bmff_encode_clip"
-  override def eval(input: InternalRow): Any = {
-    val e = children(0).eval(input)
-    val t = children(1).eval(input)
-    val u = children(2).eval(input)
-    val v = children(3).eval(input)
-    if (e == null || t == null || u == null || v == null) null
-    else BmffKernels.encodeClip(
-      e.asInstanceOf[Long], t.asInstanceOf[Long], u.asInstanceOf[Long],
-      v.asInstanceOf[Long], children(4).eval(input).asInstanceOf[UTF8String])
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.take(4).map(_.isNull.toString).mkString(" || ")
-    ev.copy(code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = $anyNull;
-      byte[] ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.bmff.BmffKernels.encodeClip(
-          ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value},
-          ${gens(4).isNull} ? null : ${gens(4).value});
-      }
-    """)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BmffEncodeExpr =
-    copy(children = newChildren)
-}
-
-/** blob → array of (typ, position, size, depth) box heads. */
-case class BmffBoxesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(BmffExpressions.boxType, containsNull = false)
-  override def prettyName: String = "bmff_boxes"
-  override def nullSafeEval(b: Any): Any =
-    BmffKernels.boxesArray(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.bmff.BmffKernels.boxesArray($c);")
-  override protected def withNewChildInternal(newChild: Expression): BmffBoxesExpr =
-    copy(child = newChild)
-}
-
-/** blob → the typed clip struct. */
-case class BmffClipExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BmffExpressions.clipType
-  override def prettyName: String = "bmff_clip"
-  override def nullSafeEval(b: Any): Any =
-    BmffKernels.clipRow(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.bmff.BmffKernels.clipRow($c);")
-  override protected def withNewChildInternal(newChild: Expression): BmffClipExpr =
-    copy(child = newChild)
-}
-
-/** clip blob → the mdat props payload bytes (the A10b reverse-transmux
-  * input); a separate walk so the hot clip-parse paths stay copy-free. */
-case class BmffClipPayloadExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bmff_clip_payload"
-  override def nullSafeEval(b: Any): Any =
-    Bmff.clipPayload(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.bmff.Bmff.clipPayload($c);")
-  override protected def withNewChildInternal(
-      newChild: Expression): BmffClipPayloadExpr =
-    copy(child = newChild)
-}
-
 /** Column-level API, mirroring [[graft.ebml.EbmlFunctions]]. */
 object BmffFunctions {
+  /** Null when a numeric input is null; a null props encodes as empty. */
   def encodeClip(eventId: Column, tsMs: Column, userId: Column,
       valueC: Column, props: Column): Column =
-    column(BmffEncodeExpr(Seq(eventId, tsMs, userId, valueC, props)
-      .map(expression)))
+    call("bmff_encode_clip", eventId, tsMs, userId, valueC, coalesce(props, lit("")))
 
-  def parseBoxes(blob: Column): Column =
-    column(BmffBoxesExpr(expression(blob)))
+  def parseBoxes(blob: Column): Column = call("bmff_boxes", blob)
 
-  def parseClip(blob: Column): Column =
-    column(BmffClipExpr(expression(blob)))
+  def parseClip(blob: Column): Column = call("bmff_clip", blob)
 
-  def clipPayload(blob: Column): Column =
-    column(BmffClipPayloadExpr(expression(blob)))
+  def clipPayload(blob: Column): Column = call("bmff_clip_payload", blob)
 
-  def splitClips(stream: Column): Column =
-    column(BmffSplitExpr(expression(stream)))
+  def splitClips(stream: Column): Column = call("bmff_split_clips", stream)
 }

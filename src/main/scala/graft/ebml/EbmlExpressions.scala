@@ -1,22 +1,21 @@
 package graft.ebml
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the EBML byte-walk kernels — the
-  * round-6 replacement for the ScalaUDF family that previously carried
-  * the multimodal path (SURVEY §5 named this exact upgrade). The walk
-  * logic is unchanged ([[Ebml]]); what changes is the execution shape:
-  * a ScalaUDF pays CatalystTypeConverters both ways on every row
-  * (byte[] copies in, case-class reflection/encoder out), while these
-  * expressions read `byte[]`/UTF8String straight off the Tungsten row
-  * and emit InternalRow/ArrayData directly, staying inside whole-stage
-  * codegen (the generated code calls the static [[EbmlKernels]]
-  * helpers). The mm_* family is 8 of ~71 bench queries and the binary
+/** The EBML byte-walk kernels behind the ebml_* functions
+  * ([[graft.plans.Kernels]]) — the round-6 replacement for the ScalaUDF
+  * family that previously carried the multimodal path (SURVEY §5 named
+  * this exact upgrade). The walk logic is [[Ebml]]'s; what changed is
+  * the execution shape: a ScalaUDF pays CatalystTypeConverters both
+  * ways on every row (byte[] copies in, case-class reflection/encoder
+  * out), while a [[graft.plans.KernelCall]] of these statics reads
+  * `byte[]`/UTF8String straight off the Tungsten row and emits
+  * InternalRow/ArrayData directly, inside whole-stage codegen. The mm_*
+  * family is 37 of the 192 catalog queries, and ebml_tags and
+  * ebml_split_fragments run on every ConsumerApp micro-batch: the binary
   * path is the reference's core loop (ebml.py's reader / parser.py's
   * fragment walk), so this is the hottest per-row surface in the repo.
   */
@@ -108,23 +107,22 @@ object EbmlKernels {
     Ebml.concat(parts.toIndexedSeq: _*)
   }
 
+  /** The three encoders take every argument non-null: their Column
+    * helpers ([[EbmlFunctions]]) coalesce a null props/frame/codec
+    * argument to empty, so only a null numeric input nulls the fragment. */
   def encode(eventId: Long, tsMs: Long, userId: Long, valueC: Long,
       props: UTF8String): Array[Byte] =
-    EbmlFunctions.buildFragment(eventId, tsMs, userId, valueC,
-      if (props == null) "" else props.toString)
+    EbmlFunctions.buildFragment(eventId, tsMs, userId, valueC, props.toString)
 
   def encodeFrame(eventId: Long, tsMs: Long, userId: Long, valueC: Long,
       frame: Array[Byte]): Array[Byte] =
-    EbmlFunctions.buildFragmentFrame(eventId, tsMs, userId, valueC,
-      if (frame == null) Array.emptyByteArray else frame)
+    EbmlFunctions.buildFragmentFrame(eventId, tsMs, userId, valueC, frame)
 
   def encodeTrack(eventId: Long, tsMs: Long, userId: Long, valueC: Long,
       codecId: UTF8String, codecPrivate: Array[Byte],
       frame: Array[Byte]): Array[Byte] =
     EbmlFunctions.buildFragmentTrack(eventId, tsMs, userId, valueC,
-      if (codecId == null) "" else codecId.toString,
-      if (codecPrivate == null) Array.emptyByteArray else codecPrivate,
-      if (frame == null) Array.emptyByteArray else frame)
+      codecId.toString, codecPrivate, frame)
 
   private val TrackLeaves = Set("CodecID", "CodecPrivate")
 
@@ -186,221 +184,4 @@ object EbmlExpressions {
   val trackInfoType: StructType = StructType(Seq(
     StructField("codec_id", StringType),
     StructField("codec_private", BinaryType)))
-}
-
-/** blob → struct(codec_id, codec_private) of the first TrackEntry;
-  * null when the fragment has no Tracks element. */
-case class EbmlTrackExpr(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = EbmlExpressions.trackInfoType
-  override def prettyName: String = "ebml_track_info"
-  override def nullSafeEval(b: Any): Any =
-    EbmlKernels.trackInfo(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.ebml.EbmlKernels.trackInfo($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(
-      newChild: Expression): EbmlTrackExpr =
-    copy(child = newChild)
-}
-
-/** [[EbmlEncodeFrameExpr]] with a Tracks element: children are
-  * (event_id, ts_ms, user_id, value_cents, codec_id, codec_private,
-  * frame) — the out-of-band codec-configuration fragment shape. */
-case class EbmlEncodeTrackExpr(children: Seq[Expression]) extends Expression {
-  override def nullable: Boolean = children.take(4).exists(_.nullable)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ebml_encode_fragment_track"
-  override def eval(input: InternalRow): Any = {
-    val e = children(0).eval(input)
-    val t = children(1).eval(input)
-    val u = children(2).eval(input)
-    val v = children(3).eval(input)
-    if (e == null || t == null || u == null || v == null) null
-    else EbmlKernels.encodeTrack(
-      e.asInstanceOf[Long], t.asInstanceOf[Long], u.asInstanceOf[Long],
-      v.asInstanceOf[Long], children(4).eval(input).asInstanceOf[UTF8String],
-      children(5).eval(input).asInstanceOf[Array[Byte]],
-      children(6).eval(input).asInstanceOf[Array[Byte]])
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.take(4).map(_.isNull.toString).mkString(" || ")
-    ev.copy(code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = $anyNull;
-      byte[] ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.ebml.EbmlKernels.encodeTrack(
-          ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value},
-          ${gens(4).isNull} ? null : ${gens(4).value},
-          ${gens(5).isNull} ? null : ${gens(5).value},
-          ${gens(6).isNull} ? null : ${gens(6).value});
-      }
-    """)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): EbmlEncodeTrackExpr =
-    copy(children = newChildren)
-}
-
-/** blob → the 9-string AWS tag struct. */
-case class EbmlTagsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = EbmlExpressions.tagsType
-  override def prettyName: String = "ebml_tags"
-  override def nullSafeEval(b: Any): Any =
-    EbmlKernels.tagsRow(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ebml.EbmlKernels.tagsRow($c);")
-  override protected def withNewChildInternal(newChild: Expression): EbmlTagsExpr =
-    copy(child = newChild)
-}
-
-/** blob → CRC-32 integrity verdict (Ebml.crcValid): false iff some
-  * master's leading CRC-32 element mismatches its payload; vacuously
-  * true when the fragment carries no CRC-32 elements. */
-case class EbmlCrcValidExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "ebml_crc_valid"
-  override def nullSafeEval(b: Any): Any =
-    Ebml.crcValid(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ebml.Ebml.crcValid($c);")
-  override protected def withNewChildInternal(newChild: Expression): EbmlCrcValidExpr =
-    copy(child = newChild)
-}
-
-/** blob → array of (name, size, position) element heads. */
-case class EbmlElementsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(EbmlExpressions.elementType, containsNull = false)
-  override def prettyName: String = "ebml_elements"
-  override def nullSafeEval(b: Any): Any =
-    EbmlKernels.elementsArray(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ebml.EbmlKernels.elementsArray($c);")
-  override protected def withNewChildInternal(newChild: Expression): EbmlElementsExpr =
-    copy(child = newChild)
-}
-
-/** stream blob → array of (position, fragment) slices. */
-case class EbmlSplitExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(EbmlExpressions.sliceType, containsNull = false)
-  override def prettyName: String = "ebml_split_fragments"
-  override def nullSafeEval(b: Any): Any =
-    EbmlKernels.splitArray(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ebml.EbmlKernels.splitArray($c);")
-  override protected def withNewChildInternal(newChild: Expression): EbmlSplitExpr =
-    copy(child = newChild)
-}
-
-/** fragment blob → first SimpleBlock frame payload (null if none). */
-case class EbmlFirstBlockExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ebml_first_block"
-  override def nullSafeEval(b: Any): Any =
-    EbmlKernels.firstBlock(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.ebml.EbmlKernels.firstBlock($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): EbmlFirstBlockExpr =
-    copy(child = newChild)
-}
-
-/** array<binary> → one concatenated stream payload. */
-case class EbmlConcatExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ebml_concat"
-  override def nullSafeEval(a: Any): Any =
-    EbmlKernels.concatAll(a.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ebml.EbmlKernels.concatAll($c);")
-  override protected def withNewChildInternal(newChild: Expression): EbmlConcatExpr =
-    copy(child = newChild)
-}
-
-/** (event_id, ts_ms, user_id, value_cents, props) → MKV fragment blob.
-  * Null when any numeric input is null; a null props encodes as "". */
-case class EbmlEncodeExpr(children: Seq[Expression]) extends Expression {
-  override def nullable: Boolean = children.take(4).exists(_.nullable)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ebml_encode_fragment"
-  override def eval(input: InternalRow): Any = {
-    val e = children(0).eval(input)
-    val t = children(1).eval(input)
-    val u = children(2).eval(input)
-    val v = children(3).eval(input)
-    if (e == null || t == null || u == null || v == null) null
-    else EbmlKernels.encode(
-      e.asInstanceOf[Long], t.asInstanceOf[Long], u.asInstanceOf[Long],
-      v.asInstanceOf[Long], children(4).eval(input).asInstanceOf[UTF8String])
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.take(4).map(_.isNull.toString).mkString(" || ")
-    ev.copy(code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = $anyNull;
-      byte[] ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.ebml.EbmlKernels.encode(
-          ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value},
-          ${gens(4).isNull} ? null : ${gens(4).value});
-      }
-    """)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): EbmlEncodeExpr =
-    copy(children = newChildren)
-}
-
-/** [[EbmlEncodeExpr]] with a BINARY 5th argument — the media frame
-  * payload lands in the SimpleBlock verbatim (real codec bytes instead
-  * of the JSON props string). */
-case class EbmlEncodeFrameExpr(children: Seq[Expression]) extends Expression {
-  override def nullable: Boolean = children.take(4).exists(_.nullable)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ebml_encode_fragment_frame"
-  override def eval(input: InternalRow): Any = {
-    val e = children(0).eval(input)
-    val t = children(1).eval(input)
-    val u = children(2).eval(input)
-    val v = children(3).eval(input)
-    if (e == null || t == null || u == null || v == null) null
-    else EbmlKernels.encodeFrame(
-      e.asInstanceOf[Long], t.asInstanceOf[Long], u.asInstanceOf[Long],
-      v.asInstanceOf[Long], children(4).eval(input).asInstanceOf[Array[Byte]])
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.take(4).map(_.isNull.toString).mkString(" || ")
-    ev.copy(code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = $anyNull;
-      byte[] ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.ebml.EbmlKernels.encodeFrame(
-          ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value},
-          ${gens(4).isNull} ? null : ${gens(4).value});
-      }
-    """)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): EbmlEncodeFrameExpr =
-    copy(children = newChildren)
 }

@@ -1,7 +1,9 @@
 package graft.ebml
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
+import org.apache.spark.sql.functions.{coalesce, lit}
+
+import graft.plans.Kernels.call
 
 /** Column-level EBML kernels (SURVEY §2A/§2G).
   *
@@ -12,10 +14,11 @@ import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
   * `firstBlock` are the reader side. Deterministic ⇒ the round-trip query
   * is oracle-checkable from the source rows alone.
   *
-  * Since round 6 the column forms are native Catalyst expressions
-  * ([[EbmlExpressions]]), not ScalaUDFs: same walk code, no per-row
+  * Since round 6 the column forms are native Catalyst expressions, not
+  * ScalaUDFs: each is a [[graft.plans.KernelCall]] of an
+  * [[EbmlKernels]] static (same walk code, no per-row
   * CatalystTypeConverters / encoder reflection, whole-stage codegen
-  * intact. Call syntax is unchanged.
+  * intact).
   */
 object EbmlFunctions {
 
@@ -171,34 +174,37 @@ object EbmlFunctions {
     w.buf
   }
 
-  /** Encode one events row into an MKV fragment blob. */
+  private def orEmpty(c: Column): Column = coalesce(c, lit(""))
+  private def orNoBytes(c: Column): Column = coalesce(c, lit(Array.emptyByteArray))
+
+  /** Encode one events row into an MKV fragment blob. Null when a
+    * numeric input is null; a null props encodes as "". */
   def encodeFragment(eventId: Column, tsMs: Column, userId: Column,
       valueC: Column, props: Column): Column =
-    column(EbmlEncodeExpr(
-      Seq(eventId, tsMs, userId, valueC, props).map(expression)))
+    call("ebml_encode_fragment", eventId, tsMs, userId, valueC, orEmpty(props))
 
-  /** Encode with a binary media frame as the SimpleBlock payload. */
+  /** Encode with a binary media frame as the SimpleBlock payload; a null
+    * frame encodes as empty. */
   def encodeFragmentFrame(eventId: Column, tsMs: Column, userId: Column,
       valueC: Column, frame: Column): Column =
-    column(EbmlEncodeFrameExpr(
-      Seq(eventId, tsMs, userId, valueC, frame).map(expression)))
+    call("ebml_encode_fragment_frame", eventId, tsMs, userId, valueC,
+      orNoBytes(frame))
 
   /** Encode with a Tracks element carrying (CodecID, CodecPrivate) —
-    * the out-of-band codec-configuration fragment shape. */
+    * the out-of-band codec-configuration fragment shape. A null codec
+    * id, codec private or frame encodes as empty. */
   def encodeFragmentTrack(eventId: Column, tsMs: Column, userId: Column,
       valueC: Column, codecId: Column, codecPrivate: Column,
       frame: Column): Column =
-    column(EbmlEncodeTrackExpr(
-      Seq(eventId, tsMs, userId, valueC, codecId, codecPrivate, frame)
-        .map(expression)))
+    call("ebml_encode_fragment_track", eventId, tsMs, userId, valueC,
+      orEmpty(codecId), orNoBytes(codecPrivate), orNoBytes(frame))
 
   final case class TrackInfo(codec_id: String, codec_private: Array[Byte])
 
   /** First TrackEntry's (codec_id, codec_private), null when the
     * fragment carries no Tracks element — the read side of
     * [[buildFragmentTrack]] (ebml.py:47-48's rows). */
-  def trackInfo(blob: Column): Column =
-    column(EbmlTrackExpr(expression(blob)))
+  def trackInfo(blob: Column): Column = call("ebml_track_info", blob)
 
   val ErrorCode = "AWS_KINESISVIDEO_ERROR_CODE"
   val ErrorId = "AWS_KINESISVIDEO_ERROR_ID"
@@ -211,37 +217,32 @@ object EbmlFunctions {
 
   /** Extract the AWS tag set from a fragment, including the error tags the
     * reference surfaces on stream faults (parser.py:352-366, 357-360). */
-  def parseTags(blob: Column): Column = column(EbmlTagsExpr(expression(blob)))
+  def parseTags(blob: Column): Column = call("ebml_tags", blob)
 
   final case class FragmentSlice(position: Long, fragment: Array[Byte])
 
   /** Continuous-stream splitting (parser.py:362-375 boundary semantics):
     * one blob of concatenated fragments → per-fragment slices with the
     * absolute stream position of each fragment head. */
-  def splitFragments(blob: Column): Column =
-    column(EbmlSplitExpr(expression(blob)))
+  def splitFragments(blob: Column): Column = call("ebml_split_fragments", blob)
 
   /** Concatenate fragment blobs into one continuous stream payload (the
     * shape GetMedia actually delivers: fragments back to back on one
     * connection). */
-  def concatBlobs(blobs: Column): Column =
-    column(EbmlConcatExpr(expression(blobs)))
+  def concatBlobs(blobs: Column): Column = call("ebml_concat", blobs)
 
   final case class ElementInfo(name: String, size: Long, position: Long)
 
   /** Element walk with head positions (ebml.py Position semantics). */
-  def parseElements(blob: Column): Column =
-    column(EbmlElementsExpr(expression(blob)))
+  def parseElements(blob: Column): Column = call("ebml_elements", blob)
 
   /** CRC-32 integrity verdict (Matroska §CRC-32 / RFC 8794 §11.3.1):
     * false iff some master's leading CRC-32 element mismatches the
     * master payload behind it; true when all check out or none are
     * present. */
-  def crcValid(blob: Column): Column =
-    column(EbmlCrcValidExpr(expression(blob)))
+  def crcValid(blob: Column): Column = call("ebml_crc_valid", blob)
 
   /** First media block's frame payload (after the 4-byte SimpleBlock
     * header) — the "decode" input for the multimodal stub. */
-  def firstBlock(blob: Column): Column =
-    column(EbmlFirstBlockExpr(expression(blob)))
+  def firstBlock(blob: Column): Column = call("ebml_first_block", blob)
 }

@@ -12,9 +12,10 @@ object Sketches {
   /** MinHash band signatures: `numHashes` seeded min-hashes over the token
     * set, grouped into bands of `rowsPerBand`, each band collapsed to one
     * 64-bit signature. Returns one signature per band. Defaults mirror
-    * the native MinhashBands expression (4 bands × 10 rows — see its
-    * scaladoc for the recall geometry); this UDF is the reference
-    * implementation the spec pins the codegen kernel against. */
+    * graft_minhash_bands (4 bands × 10 rows — see
+    * `SketchKernels.minhashBands` for the recall geometry); this UDF is
+    * the reference implementation the spec pins the codegen kernel
+    * against. */
   def minhashBandSigs(numHashes: Int = 40, rowsPerBand: Int = 10): UserDefinedFunction =
     udf { (toks: Seq[String]) =>
       if (toks == null || toks.isEmpty) Array.empty[Long]

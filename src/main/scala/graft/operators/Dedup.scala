@@ -1074,22 +1074,28 @@ object Dedup {
   }
 
   /** D5b — embedding near-dup at SCALE: random-hyperplane LSH buckets
-    * (16 tables × 6 bits) confine candidate generation to bucket-local
-    * pairs — ONE shuffle on bucket id instead of the all-pairs loop —
-    * then the exact cosine kernel verifies candidates. Pairs sharing
-    * several table buckets are emitted once: the bucket explode carries
-    * (bucket, id) ONLY (~16 B/row), and a candidate-sized DISTINCT after
-    * the bucket join collapses multi-table agreements — candidates are
-    * orders of magnitude fewer than exploded rows, so the dedup agg is
-    * cheap where slimming the 16× bucket exchange is not. The 64-dim
-    * vectors are joined back by id for the candidate-sized exact verify,
-    * the rerankExact pattern ([[Similarity.annLshTopKOf]]): at 100 TB
-    * the bucket exchange is 16× the ID volume, not 16× the corpus.
-    * Rows-only; DedupSpec measures recall against the exact D5
-    * oracle. */
+    * (16 tables × [[sizedLshBits]] bits) confine candidate generation to
+    * bucket-local pairs — ONE shuffle on bucket id instead of the
+    * all-pairs loop — then the exact cosine kernel verifies candidates.
+    * Pairs sharing several table buckets are emitted once: the bucket
+    * explode carries (bucket, id) ONLY (~16 B/row), and a candidate-sized
+    * DISTINCT after the bucket join collapses multi-table agreements —
+    * candidates are orders of magnitude fewer than exploded rows, so the
+    * dedup agg is cheap where slimming the 16× bucket exchange is not.
+    * The 64-dim vectors are joined back by id for the candidate-sized
+    * exact verify, the rerankExact pattern ([[Similarity.annLshTopKOf]]):
+    * at 100 TB the bucket exchange is 16× the ID volume, not 16× the
+    * corpus.
+    *
+    * The width comes from the live corpus count (one columnar-metadata
+    * job before planning) — the knn_join_sized precedent: the benched
+    * query carries the occupancy rule, not a toy-SF constant.
+    * [[embeddingPairsLshOf]] takes an explicit width. Rows-only; DedupSpec
+    * measures recall against the exact D5 oracle. */
   def embeddingPairsLsh(t: Tables, threshold: Double = 0.4,
-      tables: Int = 16, bits: Int = 6): DataFrame =
-    embeddingPairsLshOf(t.embeddings, threshold, tables, bits)
+      tables: Int = 16): DataFrame =
+    embeddingPairsLshOf(t.embeddings, threshold, tables,
+      sizedLshBits(t.embeddings.count()))
 
   /** Corpus-sized LSH bit-width: the smallest b ≥ 1 with n ≤ 32·2^b,
     * i.e. expected per-table bucket occupancy capped at 32 as the
@@ -1107,19 +1113,9 @@ object Dedup {
   def sizedLshBits(n: Long): Int =
     (1 to 32).find(b => (32L << b) >= n).getOrElse(32)
 
-  /** [[embeddingPairsLsh]] with the width picked by [[sizedLshBits]]
-    * from the live corpus count — the deploy form D5b benches (the
-    * knn_join_sized precedent: the benched query must carry the
-    * occupancy rule, not a toy-SF constant). The count is one
-    * columnar-metadata job before planning. */
-  def embeddingPairsLshSized(t: Tables, threshold: Double = 0.4,
-      tables: Int = 16): DataFrame =
-    embeddingPairsLshOf(t.embeddings, threshold, tables,
-      sizedLshBits(t.embeddings.count()))
-
-  /** [[embeddingPairsLsh]] over an explicit embeddings frame — the form
-    * [[VectorIndex.curateKeepers]] runs over an ingest batch for its
-    * within-batch tier.
+  /** [[embeddingPairsLsh]] over an explicit embeddings frame and width —
+    * the form [[VectorIndex.curateKeepers]] runs over an ingest batch for
+    * its within-batch tier.
     *
     * Sizing at scale: `bits` should grow ~log2(n) so per-table bucket
     * occupancy (hence candidate pairs per bucket, hence the post-join
@@ -1158,12 +1154,12 @@ object Dedup {
   }
 
   /** D5c — embedding near-dup CLUSTERING at scale: the LSH-verified
-    * cosine pairs (D5b — one shuffle on bucket id, exact-cosine
-    * verification) feed the same components engine as the text paths.
-    * Every emitted edge is a true edge, so each cluster is a REFINEMENT
-    * of the brute-force clustering (DedupSpec asserts the containment);
-    * missed bucket collisions can only split clusters, never merge
-    * unrelated vectors. */
+    * cosine pairs of [[embeddingPairsLsh]] (sized width, one shuffle on
+    * bucket id, exact-cosine verification) feed the same components
+    * engine as the text paths. Every emitted edge is a true edge, so each
+    * cluster is a REFINEMENT of the brute-force clustering (DedupSpec
+    * asserts the containment); missed bucket collisions can only split
+    * clusters, never merge unrelated vectors. */
   def embedClustersLsh(t: Tables, threshold: Double = 0.4,
       maxIters: Int = 50): DataFrame = {
     val spark = t.embeddings.sparkSession
@@ -1178,22 +1174,6 @@ object Dedup {
       connectedComponents(
         t.embeddings.select(col("vec_id").as("doc_id")),
         embeddingPairsLsh(t, threshold).select(col("id_a"), col("id_b")),
-        maxIters)
-    }
-  }
-
-  /** [[embedClustersLsh]] over the [[embeddingPairsLshSized]] edge
-    * source — the benched D5c form (sized width, same components
-    * engine). */
-  def embedClustersLshSized(t: Tables, threshold: Double = 0.4,
-      maxIters: Int = 50): DataFrame = {
-    val spark = t.embeddings.sparkSession
-    withInitialPartitions(spark,
-        sizedShufflePartitions(spark, scanBytes(t.embeddings))) {
-      connectedComponents(
-        t.embeddings.select(col("vec_id").as("doc_id")),
-        embeddingPairsLshSized(t, threshold)
-          .select(col("id_a"), col("id_b")),
         maxIters)
     }
   }

@@ -874,8 +874,9 @@ object Similarity {
     model.flatMap(_.flatten)
 
   /** PQ code column: all m subspace argmins in ONE graft_pq_assign
-    * kernel call against the flat codebook literal (see [[graft.plans.PqAssign]]
-    * for why the per-cell expression-tree form was replaced). */
+    * kernel call against the flat codebook literal (see
+    * [[graft.plans.PqAssignKernel]] for why the per-cell expression-tree
+    * form was replaced). */
   private def pqCodeCol(model: Array[Array[Array[Double]]]): org.apache.spark.sql.Column =
     call_function("graft_pq_assign", col("u"),
       typedLit(flatModel(model).toSeq), lit(model.length))

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression, UnaryExpression, ImplicitCastInputTypes}
 import org.apache.spark.sql.types._
 
 import graft.functions.Hashing
@@ -211,70 +209,6 @@ object AudioKernels {
     }
     out
   }
-}
-
-/** `graft_wav_encode(seed, silent)` — one deterministic 64-sample PCM16
-  * mono WAV frame from a 64-bit seed (the toy-codec generator). */
-case class WavEncode(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, BooleanType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_wav_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    AudioKernels.wavEncode(a.asInstanceOf[Long], b.asInstanceOf[Boolean])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      (a, b) => s"${ev.value} = graft.plans.AudioKernels.wavEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WavEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_wav_gain(blob, gain_milli)` — exact-integer gain with int16
-  * clipping over a PCM16 mono WAV; the gain rides as a compile-time
-  * literal so the generated loop is constant. Null for unparseable
-  * input (the family's contract). */
-case class WavGain(child: Expression, gainMilli: Int) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_wav_gain"
-
-  override def nullSafeEval(a: Any): Any =
-    AudioKernels.wavGain(a.asInstanceOf[Array[Byte]], gainMilli)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.AudioKernels.wavGain($a, $gainMilli);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): WavGain =
-    copy(child = newChild)
-}
-
-/** `graft_wav_features(frame)` — decode a PCM16 mono WAV into
-  * struct(sample_rate, n_samples, peak, sum_abs, zero_crossings,
-  * env_sig); null on non-WAV bytes. */
-case class WavFeatures(child: Expression) extends UnaryExpression {
-  // caller guarantees a binary input
-  override def nullable: Boolean = true
-  override def dataType: DataType = WavFeatures.featureType
-  override def prettyName: String = "graft_wav_features"
-
-  override def nullSafeEval(a: Any): Any =
-    AudioKernels.wavFeatures(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.AudioKernels.wavFeatures($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): WavFeatures =
-    copy(child = newChild)
 }
 
 object WavFeatures {

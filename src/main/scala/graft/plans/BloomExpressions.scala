@@ -1,11 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
 import graft.functions.Hashing
 
@@ -125,31 +124,4 @@ case class BloomAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): BloomAgg =
     copy(child = newChild)
-}
-
-/** `graft_bloom_contains(bloom, hash, k)` — codegen membership probe;
-  * k must match the building aggregate's. Lives INSIDE whole-stage
-  * codegen so the prefilter adds no virtual-call overhead to the
-  * corpus-gram scan it guards. */
-case class BloomContains(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression with BinaryLike[Expression]
-  with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-
-  require(k >= 1 && k <= 16, s"graft_bloom_contains: k must be in [1,16], got $k")
-
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_bloom_contains"
-
-  override def nullSafeEval(bloom: Any, hash: Any): Any =
-    BloomKernel.contains(bloom.asInstanceOf[Array[Byte]],
-      hash.asInstanceOf[Long], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, h) =>
-      s"${ev.value} = graft.plans.BloomKernel.contains($b, $h, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomContains =
-    copy(left = newLeft, right = newRight)
 }

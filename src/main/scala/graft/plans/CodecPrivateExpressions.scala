@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** Out-of-band codec configuration parsing (SURVEY §2 G21/G23) — the
@@ -454,135 +452,11 @@ object CodecPrivateKernels {
   }
 }
 
-/** `graft_avcc_encode(event_id, user_id)` — the deterministic avcC
-  * CodecPrivate blob (out-of-band SPS/PPS for the G21 fixture). */
-case class AvccEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_avcc_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.avccEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.CodecPrivateKernels.avccEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AvccEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_avcc_sps(blob)` — avcC → first out-of-band SPS →
-  * struct(profile_idc, level_idc, width, height); null on malformed
-  * blobs (the family's contract). */
-case class AvccSps(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SpsDims.dimsType
-  override def prettyName: String = "graft_avcc_sps"
-
-  override def nullSafeEval(a: Any): Any =
-    CodecPrivateKernels.avccSpsDims(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.avccSpsDims($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): AvccSps =
-    copy(child = newChild)
-}
-
-/** `graft_aac_asc_encode(event_id, user_id)` — the deterministic
-  * AudioSpecificConfig blob (the G23 fixture's CodecPrivate). */
-case class AacAscEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_aac_asc_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.aacAscEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.CodecPrivateKernels.aacAscEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AacAscEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_aac_asc(blob)` — AudioSpecificConfig →
-  * struct(object_type, sample_rate, channels); null on malformed
-  * blobs. */
-case class AacAsc(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = AacAsc.ascType
-  override def prettyName: String = "graft_aac_asc"
-
-  override def nullSafeEval(a: Any): Any =
-    CodecPrivateKernels.aacAsc(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.aacAsc($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): AacAsc =
-    copy(child = newChild)
-}
-
 object AacAsc {
   val ascType: StructType = StructType(Seq(
     StructField("object_type", LongType),
     StructField("sample_rate", LongType),
     StructField("channels", LongType)))
-}
-
-/** `graft_asc_to_adts(asc, frame)` — 7-byte ADTS header rendered from
-  * the ASC + the framed payload; null on out-of-range configs. */
-case class AscToAdts(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_asc_to_adts"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.ascToAdts(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.ascToAdts($a, $b);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AscToAdts =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_adts_parse(bytes)` — ADTS header →
-  * struct(object_type, sample_rate, channels, frame_length,
-  * payload_bytes); null on malformed frames. */
-case class AdtsParse(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = AdtsParse.adtsType
-  override def prettyName: String = "graft_adts_parse"
-
-  override def nullSafeEval(a: Any): Any =
-    CodecPrivateKernels.adtsParse(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.adtsParse($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): AdtsParse =
-    copy(child = newChild)
 }
 
 object AdtsParse {
@@ -592,137 +466,4 @@ object AdtsParse {
     StructField("channels", LongType),
     StructField("frame_length", LongType),
     StructField("payload_bytes", LongType)))
-}
-
-/** `graft_avcc_to_annexb(stream, avcc)` — the h264_mp4toannexb
-  * bitstream conversion: out-of-band parameter sets re-muxed in-band
-  * ahead of the stream's NALs behind Annex-B start codes; null when
-  * either input is malformed. */
-case class AvccToAnnexb(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_avcc_to_annexb"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.avccToAnnexb(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.avccToAnnexb($a, $b);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AvccToAnnexb =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hvcc_to_annexb(stream, hvcc)` — the hevc_mp4toannexb
-  * bitstream conversion: out-of-band VPS/SPS/PPS re-muxed in-band
-  * ahead of the stream's NALs behind Annex-B start codes; null when
-  * either input is malformed. */
-case class HvccToAnnexb(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hvcc_to_annexb"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.hvccToAnnexb(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.hvccToAnnexb($a, $b);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HvccToAnnexb =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hvcc_encode(event_id, user_id)` — the deterministic hvcC
-  * HEVCDecoderConfigurationRecord (out-of-band VPS/SPS/PPS for the
-  * G21b fixture). */
-case class HvccEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hvcc_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CodecPrivateKernels.hvccEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.CodecPrivateKernels.hvccEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HvccEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hvcc_sps(blob)` — hvcC → first out-of-band SPS →
-  * struct(profile_idc, level_idc, width, height); null on malformed
-  * blobs. */
-case class HvccSps(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SpsDims.dimsType
-  override def prettyName: String = "graft_hvcc_sps"
-
-  override def nullSafeEval(a: Any): Any =
-    CodecPrivateKernels.hvccSpsDims(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.CodecPrivateKernels.hvccSpsDims($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): HvccSps =
-    copy(child = newChild)
-}
-
-/** `graft_hevc_encode_slices(event_id, user_id)` — the slices-only
-  * HEVC stream (parameter sets out-of-band in hvcC). */
-case class HevcEncodeSlices(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hevc_encode_slices"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HevcKernels.hevcEncodeSlices(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.HevcKernels.hevcEncodeSlices($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HevcEncodeSlices =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_h264_encode_slices(event_id, user_id)` — the slices-only
-  * elementary stream (no in-band SPS/PPS; parameter sets travel in the
-  * avcC CodecPrivate — the real AVCC track shape). */
-case class H264EncodeSlices(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_h264_encode_slices"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NalKernels.h264EncodeSlices(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.NalKernels.h264EncodeSlices($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): H264EncodeSlices =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** H.264 GOP census via PPS + slice-header parsing (SURVEY §2 G22) —
@@ -210,47 +208,6 @@ object GopKernels {
     if (nSlices == 0L) return null
     InternalRow(nSlices, nI, nP, nB, maxFrameNum)
   }
-}
-
-/** `graft_h264_gop_encode(event_id, user_id)` — the GOP-ladder
-  * elementary stream (real slice headers behind the shared SPS/PPS). */
-case class H264GopEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_h264_gop_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GopKernels.h264GopEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.GopKernels.h264GopEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): H264GopEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_gop_census(blob)` — slice-header walk into
-  * struct(n_slices, n_i, n_p, n_b, max_frame_num); null on unparseable
-  * or out-of-subset streams. */
-case class GopCensus(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = GopCensus.censusType
-  override def prettyName: String = "graft_gop_census"
-
-  override def nullSafeEval(a: Any): Any =
-    GopKernels.gopCensus(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.GopKernels.gopCensus($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): GopCensus =
-    copy(child = newChild)
 }
 
 object GopCensus {

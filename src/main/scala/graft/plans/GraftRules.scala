@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   * after a once-per-row sort).
   *
   * Semantics: size(array_intersect(a,b)) counts the distinct common
-  * elements, which is exactly IntersectSortedSize over sorted distinct
+  * elements, which is exactly graft_intersect_size over sorted distinct
   * inputs. Only string arrays are rewritten (the kernel compares
   * UTF8Strings). Installed by GraftExtensions (spark.sql.extensions).
   */
@@ -27,7 +27,7 @@ object IntersectRewrite extends Rule[LogicalPlan] {
           }) =>
         val sortedA = SortArray(ArrayDistinct(a), Literal(true))
         val sortedB = SortArray(ArrayDistinct(b), Literal(true))
-        val merged = IntersectSortedSize(sortedA, sortedB)
+        val merged = KernelCall(Kernels("graft_intersect_size"), Seq(sortedA, sortedB))
         // Size returns int; our kernel returns long — keep the narrower
         // public type so downstream schemas don't change
         org.apache.spark.sql.catalyst.expressions.Cast(

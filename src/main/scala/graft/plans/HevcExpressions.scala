@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -335,73 +333,9 @@ object HevcKernels {
   }
 }
 
-/** `graft_hevc_encode(event_id, user_id)` — the deterministic synthetic
-  * H.265 elementary stream (the G19 toy-codec generator). */
-case class HevcEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hevc_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HevcKernels.hevcEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      (a, b) => s"${ev.value} = graft.plans.HevcKernels.hevcEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HevcEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hevc_stats(blob)` — one-walk H.265 census:
-  * struct(format, n_nals, n_irap, slice_rbsp_bytes); null on
-  * unparseable bytes (the family's contract). */
-case class HevcStats(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = HevcStats.statsType
-  override def prettyName: String = "graft_hevc_stats"
-
-  override def nullSafeEval(a: Any): Any =
-    HevcKernels.hevcStats(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.HevcKernels.hevcStats($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): HevcStats =
-    copy(child = newChild)
-}
-
 object HevcStats {
   val statsType: StructType = StructType(Seq(
     StructField("format", StringType),
     StructField("n_nals", LongType), StructField("n_irap", LongType),
     StructField("slice_rbsp_bytes", LongType)))
-}
-
-/** `graft_hevc_sps(blob)` — first-SPS parse into
-  * struct(profile_idc, level_idc, width, height); null when no SPS
-  * parses. */
-case class HevcSpsDims(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SpsDims.dimsType
-  override def prettyName: String = "graft_hevc_sps"
-
-  override def nullSafeEval(a: Any): Any =
-    HevcKernels.hevcSpsDims(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.HevcKernels.hevcSpsDims($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HevcSpsDims =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** H.265/HEVC GOP census via PPS + slice-segment-header parsing
@@ -316,49 +314,6 @@ object HevcGopKernels {
     if (nSlices == 0L) return null
     InternalRow(nSlices, nI, nP, nB, maxPoc)
   }
-}
-
-/** `graft_hevc_gop_encode(event_id, user_id)` — the HEVC GOP-ladder
-  * elementary stream (real slice segment headers behind the shared
-  * VPS/SPS/PPS). */
-case class HevcGopEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hevc_gop_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HevcGopKernels.hevcGopEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.HevcGopKernels.hevcGopEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HevcGopEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hevc_gop_census(blob)` — slice-segment-header walk into
-  * struct(n_slices, n_i, n_p, n_b, max_poc_lsb); null on unparseable
-  * or out-of-subset streams. */
-case class HevcGopCensus(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = HevcGopCensus.censusType
-  override def prettyName: String = "graft_hevc_gop_census"
-
-  override def nullSafeEval(a: Any): Any =
-    HevcGopKernels.hevcGopCensus(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.HevcGopKernels.hevcGopCensus($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HevcGopCensus =
-    copy(child = newChild)
 }
 
 object HevcGopCensus {

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** A pure-JVM toy codec for the multimodal decode path (SURVEY §2 G2):
@@ -300,74 +298,10 @@ object ImageKernels {
   }
 }
 
-/** `graft_bmp_encode(bits)` — deterministic 9×8 gray BMP from a 64-bit
-  * dHash pattern (the toy-codec generator). */
-case class BmpEncode(child: Expression) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_bmp_encode"
-
-  override def nullSafeEval(a: Any): Any =
-    ImageKernels.bmpEncode(a.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.ImageKernels.bmpEncode($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): BmpEncode =
-    copy(child = newChild)
-}
-
-/** `graft_bmp_features(frame)` — decode a 24-bit BMP into
-  * struct(width, height, mean_milli, dhash); null on non-BMP bytes. */
-case class BmpFeatures(child: Expression) extends UnaryExpression {
-  // caller guarantees a binary input
-  override def nullable: Boolean = true
-  override def dataType: DataType = BmpFeatures.featureType
-  override def prettyName: String = "graft_bmp_features"
-
-  override def nullSafeEval(a: Any): Any =
-    ImageKernels.bmpFeatures(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val res = nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.ImageKernels.bmpFeatures($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-    res
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BmpFeatures =
-    copy(child = newChild)
-}
-
 object BmpFeatures {
   val featureType: StructType = StructType(Seq(
     StructField("width", LongType), StructField("height", LongType),
     StructField("mean_milli", LongType), StructField("dhash", LongType)))
-}
-
-/** `graft_bmp_patches(blob, p)` — fixed-grid p×p tile explode of a
-  * 24-bit BMP into array<struct(py, px, n_px, sum_luma, mean_milli)>;
-  * null for unparseable input (the family's contract). The patch size
-  * rides as a compile-time literal so the generated loop is constant. */
-case class BmpPatches(child: Expression, p: Int) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BmpPatches.patchArrayType
-  override def prettyName: String = "graft_bmp_patches"
-
-  override def nullSafeEval(a: Any): Any =
-    ImageKernels.bmpPatches(a.asInstanceOf[Array[Byte]], p)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.ImageKernels.bmpPatches($a, $p);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): BmpPatches =
-    copy(child = newChild)
 }
 
 object BmpPatches {
@@ -375,44 +309,4 @@ object BmpPatches {
     StructField("py", LongType), StructField("px", LongType),
     StructField("n_px", LongType), StructField("sum_luma", LongType),
     StructField("mean_milli", LongType))), containsNull = false)
-}
-
-/** `graft_bmp_flip(blob)` — horizontal mirror of a 24-bit BMP; null for
-  * unparseable input (the family's contract). */
-case class BmpFlipH(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_bmp_flip"
-
-  override def nullSafeEval(a: Any): Any =
-    ImageKernels.bmpFlipH(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.ImageKernels.bmpFlipH($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): BmpFlipH =
-    copy(child = newChild)
-}
-
-/** `graft_bmp_resize2x(blob)` — exact-integer 2× box downsample of a
-  * 24-bit BMP; null for unparseable input (the family's contract). */
-case class BmpResize2x(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_bmp_resize2x"
-
-  override def nullSafeEval(a: Any): Any =
-    ImageKernels.bmpResize2x(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.ImageKernels.bmpResize2x($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): BmpResize2x =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -499,93 +497,10 @@ object NalKernels {
   }
 }
 
-/** `graft_h264_encode(event_id, user_id)` — the deterministic synthetic
-  * H.264 elementary stream (the toy-codec generator of this family). */
-case class H264Encode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_h264_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NalKernels.h264Encode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      (a, b) => s"${ev.value} = graft.plans.NalKernels.h264Encode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): H264Encode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_nal_units(blob)` — Annex-B/AVCC walk into
-  * array<struct(nal_type, ref_idc, rbsp_len)>; null on unparseable
-  * bytes (the family's contract). */
-case class NalUnits(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = NalUnits.unitArrayType
-  override def prettyName: String = "graft_nal_units"
-
-  override def nullSafeEval(a: Any): Any =
-    NalKernels.nalUnits(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.NalKernels.nalUnits($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): NalUnits =
-    copy(child = newChild)
-}
-
 object NalUnits {
   val unitArrayType: ArrayType = ArrayType(StructType(Seq(
     StructField("nal_type", LongType), StructField("ref_idc", LongType),
     StructField("rbsp_len", LongType))), containsNull = false)
-}
-
-/** `graft_nal_format(blob)` — 'annexb' | 'avcc'; null on unparseable
-  * bytes. */
-case class NalFormat(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nal_format"
-
-  override def nullSafeEval(a: Any): Any =
-    NalKernels.nalFormat(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.NalKernels.nalFormat($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): NalFormat =
-    copy(child = newChild)
-}
-
-/** `graft_nal_stats(blob)` — one-walk census fusion:
-  * struct(format, n_nals, n_idr, slice_rbsp_bytes); null on
-  * unparseable bytes. */
-case class NalStats(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = NalStats.statsType
-  override def prettyName: String = "graft_nal_stats"
-
-  override def nullSafeEval(a: Any): Any =
-    NalKernels.nalStats(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.NalKernels.nalStats($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): NalStats =
-    copy(child = newChild)
 }
 
 object NalStats {
@@ -593,27 +508,6 @@ object NalStats {
     StructField("format", StringType),
     StructField("n_nals", LongType), StructField("n_idr", LongType),
     StructField("slice_rbsp_bytes", LongType)))
-}
-
-/** `graft_sps_dims(blob)` — first-SPS Exp-Golomb parse into
-  * struct(profile_idc, level_idc, width, height); null when no SPS
-  * parses. */
-case class SpsDims(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SpsDims.dimsType
-  override def prettyName: String = "graft_sps_dims"
-
-  override def nullSafeEval(a: Any): Any =
-    NalKernels.spsDims(a.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"""
-        ${ev.value} = graft.plans.NalKernels.spsDims($a);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): SpsDims =
-    copy(child = newChild)
 }
 
 object SpsDims {

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** SEI (Supplemental Enhancement Information) parsing for both codecs
@@ -106,6 +104,9 @@ object SeiKernels {
     * 16-byte UUID. Null when the stream is unparseable or any SEI NAL
     * is malformed (truncated TLV, zero messages, missing trailing
     * byte, user_data shorter than its UUID). */
+  def h264SeiCensus(bytes: Array[Byte]): InternalRow = seiCensus(bytes, hevc = false)
+  def hevcSeiCensus(bytes: Array[Byte]): InternalRow = seiCensus(bytes, hevc = true)
+
   def seiCensus(bytes: Array[Byte], hevc: Boolean): InternalRow = {
     val ranges = nalRanges(bytes)
     if (ranges == null) return null
@@ -165,85 +166,6 @@ object SeiKernels {
     }
     InternalRow(nSei, nMsg, nRecovery, nUserData, userDataBytes)
   }
-}
-
-/** `graft_h264_sei_encode(event_id, user_id)` — the G17 stream with an
-  * SEI NAL (recovery_point cadence + user_data_unregistered). */
-case class H264SeiEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_h264_sei_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SeiKernels.h264SeiEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.SeiKernels.h264SeiEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): H264SeiEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_hevc_sei_encode(event_id, user_id)` — the G19 stream with a
-  * prefix SEI NAL. */
-case class HevcSeiEncode(left: Expression, right: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_hevc_sei_encode"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SeiKernels.hevcSeiEncode(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.SeiKernels.hevcSeiEncode($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HevcSeiEncode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_sei_census(blob)` — H.264 SEI TLV census. */
-case class SeiCensus(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SeiCensus.censusType
-  override def prettyName: String = "graft_sei_census"
-
-  override def nullSafeEval(a: Any): Any =
-    SeiKernels.seiCensus(a.asInstanceOf[Array[Byte]], hevc = false)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.SeiKernels.seiCensus($a, false);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(newChild: Expression): SeiCensus =
-    copy(child = newChild)
-}
-
-/** `graft_hevc_sei_census(blob)` — HEVC prefix/suffix SEI TLV census. */
-case class HevcSeiCensus(child: Expression) extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = SeiCensus.censusType
-  override def prettyName: String = "graft_hevc_sei_census"
-
-  override def nullSafeEval(a: Any): Any =
-    SeiKernels.seiCensus(a.asInstanceOf[Array[Byte]], hevc = true)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-        ${ev.value} = graft.plans.SeiKernels.seiCensus($a, true);
-        ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HevcSeiCensus =
-    copy(child = newChild)
 }
 
 object SeiCensus {

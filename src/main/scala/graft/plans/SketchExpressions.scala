@@ -1,16 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Hashing
 
-/** Shared JVM kernels for the sketch expressions: interpreted `eval` and
-  * generated code both call these statics, so the two paths cannot
-  * diverge. (Scala object methods get static forwarders, so generated
-  * Java calls them directly.) */
+/** JVM kernels for the text-sketch functions ([[Kernels]]): interpreted
+  * `eval` and generated code both call these statics, so the two paths
+  * cannot diverge. (Scala object methods get static forwarders, so
+  * generated Java calls them directly.) */
 object SketchKernels {
 
   /** Rolling polynomial fingerprint, mirroring the round-1 column form
@@ -31,8 +28,10 @@ object SketchKernels {
     h
   }
 
-  /** Hashing.hashString over a Tungsten string — shared by the HashStr
-    * expression's interpreted and generated paths. */
+  /** Hashing.hashString over a Tungsten string (graft_hash_str): the
+    * per-token hash behind every graft sketch, for operators that build a
+    * sketch IN THE PLAN (the C10e count-min bucket projection hashes each
+    * token once and derives d seeded buckets from it). */
   def hashStr(s: UTF8String): Long = Hashing.hashString(s.toString)
 
   /** 64-bit SimHash over the token set — the Sketches.simhashSig logic
@@ -59,6 +58,22 @@ object SketchKernels {
     }
     sig
   }
+
+  /** graft_minhash_bands: 40 hashes in 4 bands × 10 rows, tuned for the
+    * j >= 0.95 near-dup threshold: P[candidate] = 1-(1-j^10)^4 ≈ 0.974 at
+    * j = 0.95 (the round-3 4×16 geometry gave 0.90 and a measured recall
+    * floor of 0.8; shorter rows raise recall at identical shuffle volume —
+    * still 4 (band, sig) rows per doc. 4×8 was measured too: recall also
+    * 1.0, but its ~3× higher false-candidate rate cost 1-2 s per
+    * clustering query at sf0.1 in exact-kernel verification). */
+  def minhashBands(arr: ArrayData): ArrayData = minhashBandSigs(arr, 40, 10)
+
+  /** graft_oph_bands: 8 bands × 8 bins over an already-hashed set. At the
+    * char-gram threshold j = 0.9 the candidate probability is
+    * 1-(1-0.9^8)^8 ≈ 0.99 (16-bin bands would drop it to ≈ 0.56 — band
+    * geometry must match the target threshold, not be copied across
+    * operators). */
+  def ophBands(arr: ArrayData): ArrayData = ophBandSigsLong(arr, 64, 8)
 
   /** MinHash band signatures — the Sketches.minhashBandSigs logic reading
     * tokens straight from Tungsten ArrayData. */
@@ -151,8 +166,10 @@ object SketchKernels {
   }
 }
 
-/** Kernel for [[Ngram3Hashes]]: sorted distinct hashes of the character
-  * 3-grams. Each gram's three UTF-16 units pack into 48 bits and go
+/** graft_ngram3: sorted distinct hashes of the character 3-grams — the
+  * shingle set the ngram dedup pair join merges (it replaced an
+  * interpreted transform(sequence)+substring+xxhash64 pipeline that
+  * measured ~4 s of the pair query at sf0.1). Each gram's three UTF-16 units pack into 48 bits and go
   * through mix64 — a bijection on longs — so distinct grams map to
   * distinct hashes with ZERO collision risk (unlike hashing substring
   * allocations), and the array length IS the distinct-gram count. */
@@ -181,8 +198,9 @@ object Ngram3Kernel {
   }
 }
 
-/** Kernel for [[WordNgramHashes]]: sorted distinct hashes of the word
-  * n-grams of a token array. Gram hash = mix64 fold over the n token
+/** graft_word_ngrams: sorted distinct hashes of the word n-grams of a
+  * token array — the shingle unit of benchmark decontamination
+  * (TextOps.decontaminate). Gram hash = mix64 fold over the n token
   * hashes from an FNV offset seed — injective on token sequences modulo
   * 64-bit collisions (~1e-10 over a corpus, the repo-wide acceptance
   * used for toks_h), so distinct grams map to distinct longs and a
@@ -214,7 +232,8 @@ object WordNgramKernel {
   }
 }
 
-/** Kernels for the hyperplane-LSH expressions: table-`k` bucket = sign
+/** Kernels for graft_lsh_buckets (the corpus-side signature of every
+  * embedding LSH path) and graft_lsh_probes: table-`k` bucket = sign
   * bits of `bits` pseudo-random projections (weights from
   * mix64(table, bit, dim) — regenerated per use, nothing broadcast).
   * Identical arithmetic and accumulation order to the
@@ -270,237 +289,7 @@ object LshKernel {
   }
 }
 
-/** Hyperplane-LSH bucket ids as a native codegen expression — the
-  * corpus-side signature of every embedding LSH path (D5b candidate
-  * generation, E2 ANN). Replaces a ScalaUDF that paid Seq[Double]
-  * boxing per corpus row on the hot path (round-6 verdict #2). */
-case class LshBuckets(child: Expression, tables: Int = 8, bits: Int = 6)
-    extends UnaryExpression {
-  // caller guarantees array<double> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_buckets"
-
-  override def nullSafeEval(a: Any): Any =
-    LshKernel.buckets(a.asInstanceOf[ArrayData], tables, bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.LshKernel.buckets($a, $tables, $bits);")
-
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
-}
-
-/** Query-side multiprobe bucket set as a native codegen expression. */
-case class LshProbes(child: Expression, tables: Int = 8, bits: Int = 6)
-    extends UnaryExpression {
-  // caller guarantees array<double> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_probes"
-
-  override def nullSafeEval(a: Any): Any =
-    LshKernel.probes(a.asInstanceOf[ArrayData], tables, bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.LshKernel.probes($a, $tables, $bits);")
-
-  override protected def withNewChildInternal(newChild: Expression): LshProbes =
-    copy(child = newChild)
-}
-
-/** Resolves an integer-literal function argument with an analysis-time
-  * error naming the RIGHT function and parameter (a raw ClassCast or
-  * IndexOutOfBounds deep in evaluation names neither). */
-object IntLitArg {
-  def of(signature: String, name: String, e: Expression): Int = {
-    require(e.foldable,
-      s"$signature: $name must be an integer LITERAL, got " + e.sql)
-    e.eval() match {
-      case i: java.lang.Integer => i.intValue()
-      case l: java.lang.Long => l.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$signature: $name must be an integer literal, got $other")
-    }
-  }
-}
-
-object WordNgramHashes {
-  /** Resolve the optional gram-width argument. */
-  def widthOf(e: Expression): Int =
-    IntLitArg.of("graft_word_ngrams(toks, n)", "n", e)
-}
-
-/** Sorted distinct word n-gram hashes of a token array — the shingle
-  * unit of benchmark decontamination (TextOps.decontaminate). */
-case class WordNgramHashes(child: Expression, n: Int = 3)
-    extends UnaryExpression {
-  require(n >= 1, s"gram width must be >= 1, got $n")
-  // caller guarantees array<string> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_word_ngrams"
-
-  override def nullSafeEval(a: Any): Any =
-    WordNgramKernel.hashes(a.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.WordNgramKernel.hashes($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramHashes =
-    copy(child = newChild)
-}
-
-/** SimHash signature as a native codegen expression over a token array. */
-case class SimhashSig(child: Expression) extends UnaryExpression {
-  // caller guarantees array<string> input
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def nullSafeEval(a: Any): Any =
-    SketchKernels.simhashSig(a.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.SketchKernels.simhashSig($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashSig =
-    copy(child = newChild)
-}
-
-/** Sorted distinct character-3-gram hashes of a string — the shingle
-  * representation the ngram dedup pair join merges. Replaces an
-  * interpreted transform(sequence)+substring+xxhash64 pipeline that
-  * measured ~4 s of the pair query at sf0.1. */
-case class Ngram3Hashes(child: Expression) extends UnaryExpression {
-  // caller guarantees a string input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_ngram3"
-
-  override def nullSafeEval(a: Any): Any =
-    Ngram3Kernel.hashes(a.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.Ngram3Kernel.hashes($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Ngram3Hashes =
-    copy(child = newChild)
-}
-
-/** splitmix64 finalizer as a native codegen expression — the scalar
-  * mixing primitive behind every graft sketch, exposed for operators
-  * whose SEMANTICS are "a uniform deterministic 64-bit hash of a long"
-  * (e.g. bottom-k stratified sampling orders rows by graft_mix64(id):
-  * reproducible across runs and partitionings, uniform per stratum,
-  * and regenerable in the DuckDB oracle). */
-case class Mix64(child: Expression) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_mix64"
-
-  override def nullSafeEval(a: Any): Any =
-    Hashing.mix64(a.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.functions.Hashing.mix64($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Mix64 =
-    copy(child = newChild)
-}
-
-/** Hashing.hashString as a native codegen expression — the per-token
-  * 64-bit hash behind every graft sketch, exposed for operators whose
-  * sketch is built IN THE PLAN rather than inside a kernel (the C10e
-  * count-min bucket projection hashes each token once and derives d
-  * seeded buckets from the one hash). */
-case class HashStr(child: Expression) extends UnaryExpression {
-  // caller guarantees a string input
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hash_str"
-
-  override def nullSafeEval(a: Any): Any =
-    SketchKernels.hashStr(a.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.SketchKernels.hashStr($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashStr =
-    copy(child = newChild)
-}
-
-/** Document fingerprint as a native codegen expression (H4 pattern). */
-case class Fingerprint(child: Expression) extends UnaryExpression {
-  // caller guarantees a string input
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fingerprint"
-
-  override def nullSafeEval(a: Any): Any =
-    SketchKernels.fingerprint(a.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.SketchKernels.fingerprint($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint =
-    copy(child = newChild)
-}
-
-/** MinHash band signatures as a native codegen expression: one signature
-  * per LSH band over the token-set input. Default 40 hashes in 4 bands
-  * × 10 rows — tuned for the j >= 0.95 near-dup threshold:
-  * P[candidate] = 1-(1-j^10)^4 ≈ 0.974 at j = 0.95 (the round-3 4×16
-  * geometry gave 0.90 and a measured recall floor of 0.8; shorter rows
-  * raise recall at identical shuffle volume — still 4 (band, sig) rows
-  * per doc. 4×8 was measured too: recall also 1.0, but its ~3× higher
-  * false-candidate rate cost 1-2 s per clustering query at sf0.1 in
-  * exact-kernel verification; 10-row bands keep the FP rate near the
-  * 4×16 level at 0.974 theoretical recall). */
-case class MinhashBands(child: Expression, numHashes: Int = 40, rowsPerBand: Int = 10)
-    extends UnaryExpression {
-  // caller guarantees array<string> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_bands"
-
-  override def nullSafeEval(a: Any): Any =
-    SketchKernels.minhashBandSigs(a.asInstanceOf[ArrayData], numHashes, rowsPerBand)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SketchKernels.minhashBandSigs($a, $numHashes, $rowsPerBand);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashBands =
-    copy(child = newChild)
-}
-
-/** One-permutation minhash bands over an already-hashed element set
-  * (array<long>, e.g. graft_ngram3 shingles) — single pass regardless of
-  * band count (see SketchKernels.ophBandSigsLong). Default 8 bands × 8
-  * bins: at the char-gram threshold j = 0.9 the candidate probability is
-  * 1-(1-0.9^8)^8 ≈ 0.99 (16-bin bands would drop it to ≈ 0.56 — band
-  * geometry must match the target threshold, not be copied across
-  * operators). `numBins` must be a power of two (bin = top bits). */
-case class OphBands(child: Expression, numBins: Int = 64, rowsPerBand: Int = 8)
-    extends UnaryExpression {
-  // caller guarantees array<long> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_oph_bands"
-
-  override def nullSafeEval(a: Any): Any =
-    SketchKernels.ophBandSigsLong(a.asInstanceOf[ArrayData], numBins, rowsPerBand)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SketchKernels.ophBandSigsLong($a, $numBins, $rowsPerBand);")
-
-  override protected def withNewChildInternal(newChild: Expression): OphBands =
-    copy(child = newChild)
-}
-
-/** Kernel for [[RepStats]] — Gopher-style per-document repetition
+/** graft_rep_stats — Gopher-style per-document repetition
   * counters in ONE pass over the token array (Rae et al. 2021,
   * "Scaling Language Models: ... Gopher", Table A1's repetition
   * filters; also the repetition signals RefinedWeb/Dolma apply).
@@ -606,33 +395,7 @@ object RepStatsKernel {
   }
 }
 
-object RepStats {
-  def blockNOf(e: Expression): Int =
-    IntLitArg.of("graft_rep_stats(toks, block_n)", "block_n", e)
-}
-
-/** Per-document repetition counters (Gopher-style quality signals) as a
-  * native codegen expression over a token array — per-row, shuffle-free
-  * (the F10 operator's whole corpus pass is embarrassingly parallel). */
-case class RepStats(child: Expression, blockN: Int = 8)
-    extends UnaryExpression {
-  require(blockN >= 1, s"block width must be >= 1, got $blockN")
-  // caller guarantees array<string> input
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_rep_stats"
-
-  override def nullSafeEval(a: Any): Any =
-    RepStatsKernel.stats(a.asInstanceOf[ArrayData], blockN)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.RepStatsKernel.stats($a, $blockN);")
-
-  override protected def withNewChildInternal(newChild: Expression): RepStats =
-    copy(child = newChild)
-}
-
-/** Unicode NFC normalization as a native codegen expression — the text
+/** graft_nfc: Unicode NFC normalization — the text
   * CLEANING primitive every published curation pipeline applies before
   * hashing/dedup (composed vs decomposed accents would otherwise hash
   * as different documents). Java's Normalizer and DuckDB's utf8proc
@@ -648,20 +411,4 @@ object NfcKernel {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-}
-
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  // caller guarantees a string input
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
-
-  override def nullSafeEval(a: Any): Any =
-    NfcKernel.nfc(a.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      a => s"${ev.value} = graft.plans.NfcKernel.nfc($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-LM (SentencePiece-style) Viterbi segmentation kernel
@@ -116,42 +112,4 @@ object UnigramKernels {
     }
     -1
   }
-}
-
-/** `graft_unigram_segment(word, pieces, counts, total)` → the Viterbi
-  * piece array under the unigram model; null when the word cannot be
-  * segmented from the vocabulary. */
-case class UnigramSegment(children: Seq[Expression]) extends Expression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "graft_unigram_segment"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val w = children(0).eval(input)
-    val p = children(1).eval(input)
-    val c = children(2).eval(input)
-    val t = children(3).eval(input)
-    if (w == null || p == null || c == null || t == null) null
-    else UnigramKernels.segment(w.asInstanceOf[UTF8String],
-      p.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      t.asInstanceOf[Long])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.map(_.isNull.toString).mkString(" || ")
-    ev.copy(code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-      if (!($anyNull)) {
-        ${ev.value} = graft.plans.UnigramKernels.segment(
-          ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value});
-      }
-      boolean ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): UnigramSegment =
-    copy(children = newChildren)
 }

@@ -295,9 +295,9 @@ class DedupSpec extends SparkSpec {
     // b bits of the 6-bit bucket: narrower tables collide strictly
     // more, and every emitted pair is exact-verified either way —
     // sizing DOWN (small corpora) can only add true pairs
-    val fixed = Dedup.embeddingPairsLsh(t).collect()
+    val fixed = Dedup.embeddingPairsLshOf(t.embeddings, bits = 6).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sized = Dedup.embeddingPairsLshSized(t).collect()
+    val sized = Dedup.embeddingPairsLsh(t).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(Dedup.sizedLshBits(t.embeddings.count()) < 6,
       "spec fixture should exercise the sized-down branch")

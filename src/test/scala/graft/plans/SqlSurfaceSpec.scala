@@ -84,6 +84,26 @@ class SqlSurfaceSpec extends SparkSpec {
     failsNaming("SELECT graft_pq_adc(array(0D,1D,2D,3D), array(7))")
   }
 
+  test("integer-literal arguments outside their range fail naming function and argument") {
+    def failsWith(sql: String, parts: String*): Unit = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      def chain(t: Throwable): Seq[Throwable] =
+        if (t == null) Nil else t +: chain(t.getCause)
+      val msgs = chain(e).flatMap(c => Option(c.getMessage))
+      assert(msgs.exists(m => parts.forall(m.contains)),
+        s"expected an error naming ${parts.mkString(", ")}: $msgs")
+    }
+    // a long tables count used to wrap to an int (2 buckets)
+    failsWith("SELECT graft_lsh_buckets(array(1D, -1D), 4294967298, 3)",
+      "graft_lsh_buckets", "tables")
+    // k used to wrap to 1 and pass the [1,16] check
+    failsWith("SELECT graft_bloom_contains(X'FF', 5L, 4294967297)",
+      "graft_bloom_contains", "k")
+    // 40 bits spill into the table tag in the high 32 bits
+    failsWith("SELECT graft_lsh_buckets(array(1D, -1D), 1, 40)",
+      "graft_lsh_buckets", "bits")
+  }
+
   test("an analytics query expressed in SQL matches its DataFrame twin") {
     t.orders.createOrReplaceTempView("orders_v")
     val viaSql = spark.sql(
