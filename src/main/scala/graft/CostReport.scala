@@ -5,14 +5,16 @@ package graft
   * production action per query, metrics harvested from its own executed
   * plan — zero extra jobs) and print the ledger as JSON lines, one per
   * query: what every query scanned, shuffled, and emitted at the given
-  * scale factor. Subset with SPARK_GRAFT_COST_ONLY=name,name. */
+  * scale factor. Subset with SPARK_GRAFT_COST_ONLY=name,name. Exits 1
+  * naming every query that threw, so a scripted ledger cannot be
+  * silently incomplete. */
 object CostReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_COST_ONLY"))
     val spark = graft.core.GraftSession.builder("graft-cost").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
+    val failed = names.filterNot { name =>
       try {
         val c = graft.operators.CostLedger.measure(name,
           SparkEntry.queries(name)(spark, sfDir))
@@ -21,10 +23,17 @@ object CostReport {
           s""""shuffle_bytes":${c.shuffle_bytes},""" +
           s""""shuffle_rows":${c.shuffle_rows},""" +
           s""""result_rows":${c.result_rows},"wall_ms":${c.wall_ms}}""")
+        true
       } catch { case e: Throwable =>
         System.err.println(s"[cost] $name failed: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[cost] ${failed.length} queries failed: " +
+        failed.mkString(", "))
+      System.exit(1)
+    }
   }
 }

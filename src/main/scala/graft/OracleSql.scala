@@ -202,13 +202,6 @@ private[graft] object OracleSql {
     s"""WITH ${minhashCandCtes("documents")}
     SELECT id_a, id_b FROM cand ORDER BY id_a, id_b"""
 
-  /** dedup_incremental: the EXACT output of TextIndex.dedupBatch over
-    * the % 8 == 7 ingest slice against the settled-corpus index —
-    * 'exact' rows re-derived from raw text groups (hash equality ≡ text
-    * equality, the dedup_exact acceptance), 'band' rows as the
-    * full-corpus minhash candidate set restricted to pairs involving a
-    * new document (the incremental contract: probing the persisted
-    * band table finds exactly the pairs a full recompute would). */
   /** CTE block `ex, bd` (requires `cand` from [[minhashCandCtes]]):
     * the incremental pair relation of TextIndex.dedupBatch over the
     * % 8 == 7 ingest slice — shared by [[dedupIncremental]] and
@@ -222,6 +215,13 @@ private[graft] object OracleSql {
     bd AS (SELECT id_a, id_b, 'band' AS reason FROM cand
       WHERE id_a % 8 = 7 OR id_b % 8 = 7)"""
 
+  /** dedup_incremental: the EXACT output of TextIndex.dedupBatch over
+    * the % 8 == 7 ingest slice against the settled-corpus index —
+    * 'exact' rows re-derived from raw text groups (hash equality ≡ text
+    * equality, the dedup_exact acceptance), 'band' rows as the
+    * full-corpus minhash candidate set restricted to pairs involving a
+    * new document (the incremental contract: probing the persisted
+    * band table finds exactly the pairs a full recompute would). */
   lazy val dedupIncremental: String =
     s"""WITH ${minhashCandCtes("documents")},
     $incrementalPairCtes
@@ -478,10 +478,6 @@ private[graft] object OracleSql {
     SELECT src AS doc_id, cast(min(dst) as bigint) AS cluster_id
     FROM reach GROUP BY src ORDER BY doc_id"""
 
-  /** ann_lsh_topk: the EXACT output of Similarity.annLshTopK — 8-table
-    * buckets, query-side multiprobe (base bucket plus every 1-bit flip:
-    * xor with 0,1,2,4,8,16,32), DISTINCT candidates (the first-agree
-    * emission), exact-cosine re-rank with the n_id tie-break, top 5. */
   /** sq8_topk: full replay of the SQ8 scalar-quantization search
     * (Similarity.sq8TopK) — per-dim min/range fit (order-independent,
     * so cross-engine exact), uint8 encode/dequant in the kernel's fixed
@@ -535,6 +531,10 @@ private[graft] object OracleSql {
     WHERE rnk <= 5 ORDER BY q_id, rnk"""
   }
 
+  /** ann_lsh_topk: the EXACT output of Similarity.annLshTopK — 8-table
+    * buckets, query-side multiprobe (base bucket plus every 1-bit flip:
+    * xor with 0,1,2,4,8,16,32), DISTINCT candidates (the first-agree
+    * emission), exact-cosine re-rank with the n_id tie-break, top 5. */
   lazy val annLshTopK: String =
     s"""WITH ${embedBucketCtes(8)},
     cb AS (SELECT vec_id AS n_id, (k::UBIGINT << 32) | b AS bucket FROM bks),
@@ -686,12 +686,6 @@ private[graft] object OracleSql {
     ORDER BY source, doc_id"""
   }
 
-  /** dedup_simhash: the 7-band pigeonhole candidate generation is
-    * COMPLETE for Hamming <= 6, so the operator's output is exactly
-    * "all pairs at Hamming <= 6 of the 64-bit sign-aggregated
-    * signature" — the oracle recomputes the signature (per-bit +1/-1
-    * vote over token hashes, bit set iff the vote is positive) and
-    * filters on bit_count directly, with no band machinery. */
   /** approx_counts_cms: FULL replay of the count-min sketch — each
     * token's hash (hashToken) derives d=4 seeded buckets
     * (mix64(h ^ i) % 64), the sketch is the (i, bucket) count table,
@@ -717,6 +711,12 @@ private[graft] object OracleSql {
     GROUP BY term ORDER BY term"""
   }
 
+  /** dedup_simhash: the 7-band pigeonhole candidate generation is
+    * COMPLETE for Hamming <= 6, so the operator's output is exactly
+    * "all pairs at Hamming <= 6 of the 64-bit sign-aggregated
+    * signature" — the oracle recomputes the signature (per-bit +1/-1
+    * vote over token hashes, bit set iff the vote is positive) and
+    * filters on bit_count directly, with no band machinery. */
   lazy val dedupSimhash: String =
     s"""WITH toks AS (
       SELECT doc_id, unnest(list_distinct(regexp_extract_all(lower(text), '[a-z]+'))) AS tok
@@ -734,6 +734,15 @@ private[graft] object OracleSql {
     WHERE bit_count(xor(a.sig, b.sig)) <= 6
     ORDER BY id_a, id_b"""
 
+  /** Every CTE in the generated vector oracles is MATERIALIZED: the
+    * unrolled fit chains reference earlier CTEs several times each, and
+    * DuckDB's default inlining re-expands the whole upstream subtree
+    * per reference — exponential plan growth that exhausted file
+    * handles on the composed ivfpq replay. Materialization is an
+    * optimization fence only; results are unchanged. */
+  private def materialized(sql: String): String =
+    sql.replaceAll("(\\w+ AS) \\(SELECT", "$1 MATERIALIZED (SELECT")
+
   /** ivf_assign: full DuckDB replay of the CANONICAL-ORDER Lloyd fit
     * (`Similarity.lloyd`, round-6 form) — possible only because the
     * Spark reduction is now a fixed fold tree independent of
@@ -748,15 +757,6 @@ private[graft] object OracleSql {
     * round i+1 when the max centroid shift² after round i is <= eps),
     * then assigns every vector against the final model — the promoted
     * hash-exact check for the formerly rows-only E3 entry. */
-  /** Every CTE in the generated vector oracles is MATERIALIZED: the
-    * unrolled fit chains reference earlier CTEs several times each, and
-    * DuckDB's default inlining re-expands the whole upstream subtree
-    * per reference — exponential plan growth that exhausted file
-    * handles on the composed ivfpq replay. Materialization is an
-    * optimization fence only; results are unchanged. */
-  private def materialized(sql: String): String =
-    sql.replaceAll("(\\w+ AS) \\(SELECT", "$1 MATERIALIZED (SELECT")
-
   lazy val ivfAssign: String = materialized {
     val h = lloydReplayCtes(k = 8, iters = 3, eps = "1e-9", dim = 64,
       buckets = 4096)
@@ -1334,14 +1334,6 @@ private[graft] object OracleSql {
     s"cast(CASE WHEN $e < $SignBit::UBIGINT THEN $e::HUGEINT " +
       s"ELSE $e::HUGEINT - $TwoTo64 END as bigint)"
 
-  /** mm_features_bmp: every feature recomputed ARITHMETICALLY from the
-    * pattern spec — dhash is the pattern itself (the ±1 gray ramp makes
-    * adjacent-pixel recovery lossless); the mean comes from the ramp's
-    * closed form (a bit at row offset x brightens the 8-x pixels right
-    * of it): pixel_sum = 72·128 + Σ_i (8 - i%8)(2·b_i - 1), mean_milli
-    * = pixel_sum·1000 // 72; frame_bytes = 54 + 28·8 = 278 (stride-
-    * padded BMP). Any defect in the encoder, the EBML block transport,
-    * or the decoder breaks the hash match. */
   /** mm_resize (G13): the 2×-downsampled lumas recomputed from the ramp
     * pattern — pixel v(x,y) = 128 + Σ_{i<x} (2·b_{y·8+i} − 1) by a
     * lateral prefix join, each output cell = floor-average of its
@@ -1420,6 +1412,14 @@ private[graft] object OracleSql {
       cast(sum_luma * 1000 // n_px as bigint) AS mean_milli
     FROM ps ORDER BY event_id, py, px"""
 
+  /** mm_features_bmp: every feature recomputed ARITHMETICALLY from the
+    * pattern spec — dhash is the pattern itself (the ±1 gray ramp makes
+    * adjacent-pixel recovery lossless); the mean comes from the ramp's
+    * closed form (a bit at row offset x brightens the 8-x pixels right
+    * of it): pixel_sum = 72·128 + Σ_i (8 - i%8)(2·b_i - 1), mean_milli
+    * = pixel_sum·1000 // 72; frame_bytes = 54 + 28·8 = 278 (stride-
+    * padded BMP). Any defect in the encoder, the EBML block transport,
+    * or the decoder breaks the hash match. */
   lazy val mmFeaturesBmp: String =
     s"""WITH ${framePatternCte()},
     bits AS (SELECT event_id, d, unnest(range(0, 64)) AS i FROM pat),

@@ -82,7 +82,7 @@ object SparkEntry {
     "merge_cdc" -> ((s, d) =>
       graft.sources.Snapshot.mergeCdcQuery(tables(s, d), d)),
     // H16: read AS OF an intermediate version of the copy-on-write
-    // versioned snapshot — the history builds once (marker-gated), the
+    // versioned snapshot — the history builds once per source generation, the
     // benched query is the manifest-driven partition-pruned read, and
     // the hash gate proves historical reads are insulated from the two
     // LATER commits (incl. later deletes/re-upserts)
@@ -179,7 +179,7 @@ object SparkEntry {
     // D9 corpus version audit; D10 incremental components — the DEPLOY
     // shape since round 14: settled corpus present only as two persisted
     // artifacts (label table + D7 band index, both built once per
-    // session, marker-gated), per-batch work = index probe + exact
+    // source generation), per-batch work = index probe + exact
     // verify + quotient merge. Oracle = the full LSH-recompute closure
     // (dedup_clusters_lsh's text) — hash equality IS the incremental
     // claim, and it is exact by construction (candidate generation is a
@@ -195,7 +195,7 @@ object SparkEntry {
     }),
     // incremental dedup against the persisted text index: the % 8 == 7
     // slice is the "new ingest", probed against the settled corpus's
-    // hash + band artifact (built once, marker-gated, full lifecycle)
+    // hash + band artifact (built once, full lifecycle)
     "dedup_incremental" -> ((s, d) => {
       val t = tables(s, d)
       val dir = TextIndex.materialize(t, d)
@@ -413,7 +413,7 @@ object SparkEntry {
     // by exact integer reciprocal rank (RRF); no float in the output
     "hybrid_search_topk" -> ((s, d) => TextOps.hybridSearchTopK(tables(s, d))),
     // F22b: the same retrieval served from the persisted inverted index
-    // — build once (marker-gated), search with zero corpus rescans
+    // — build once, search with zero corpus rescans
     "bm25_search_prefit" -> ((s, d) => {
       val t = tables(s, d)
       val dir = SearchIndex.materialize(t, d)
@@ -473,7 +473,7 @@ object SparkEntry {
     "pq_topk" -> ((s, d) => Similarity.pqTopK(tables(s, d))),
     "ivfpq_topk" -> ((s, d) => Similarity.ivfPqTopK(tables(s, d))),
     // the DEPLOYMENT shape: search-only against a persisted index
-    // (fit once into tmpdir, marker-gated like the ebml archive) —
+    // (fit once into tmpdir, like the ebml archive) —
     // hash-exact since round 6 against the SAME replay oracle as
     // ivfpq_topk (IvfSpec separately pins prefit == inline); plus the
     // zero-fit-job property and the codes-only scan
@@ -529,9 +529,6 @@ object SparkEntry {
     "doremi_mixture2" -> ((s, d) => TextOps.doremiWeights2(tables(s, d)))
   )
 
-  /** Shared by dedup_clusters and dedup_clusters_incremental: the
-    * incremental operator's whole contract is hash-equality with the
-    * full-recompute closure. */
   /** The D6 word-set-Jaccard + recursive-closure CTE chain, shared by
     * every oracle that needs the near-dup cluster labels. */
   private val closureCtes: String =

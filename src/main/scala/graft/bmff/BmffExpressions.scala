@@ -20,7 +20,13 @@ object BmffKernels {
       props: UTF8String): Array[Byte] =
     Bmff.buildClip(eventId, tsMs, userId, valueC, props.getBytes)
 
-  def boxesArray(buf: Array[Byte]): ArrayData = {
+  /** The readers are total: bytes that [[Bmff]] cannot parse give null,
+    * so one bad clip does not fail its query. Only [[Bmff.BmffException]]
+    * is caught; any other throw is a reader bug and stays loud. */
+  private def orNull[T >: Null](read: => T): T =
+    try read catch { case _: Bmff.BmffException => null }
+
+  def boxesArray(buf: Array[Byte]): ArrayData = orNull {
     val bs = Bmff.boxes(buf)
     val rows = new Array[Any](bs.length)
     var i = 0
@@ -33,12 +39,14 @@ object BmffKernels {
     new GenericArrayData(rows)
   }
 
-  def clipRow(buf: Array[Byte]): InternalRow = {
+  def clipRow(buf: Array[Byte]): InternalRow = orNull {
     val c = Bmff.clip(buf)
     InternalRow(c.seq32, c.baseMs, c.eventId, c.userId, c.valueC, c.mdatLen)
   }
 
-  def splitArray(buf: Array[Byte]): ArrayData = {
+  def clipPayload(buf: Array[Byte]): Array[Byte] = orNull(Bmff.clipPayload(buf))
+
+  def splitArray(buf: Array[Byte]): ArrayData = orNull {
     val cs = Bmff.splitClips(buf)
     val rows = new Array[Any](cs.length)
     var i = 0

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{words, Sketches}
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Deduplication family for training-data pipelines (SURVEY §2D).
   *
@@ -87,9 +87,6 @@ object Dedup {
       .withColumn("n", size(col("toks")).cast("long"))
   }
 
-  /** D2 — exact word-shingle Jaccard near-dup pairs (j >= 0.95). Jaccard of
-    * integer set sizes is an exact rational in double ⇒ bit-identical to the
-    * oracle. Brute pair space, used as ground truth for D3/D4. */
   /** Size-ratio prefilter derived from the caller's threshold:
     * j = i/(na+nb-i) <= min(na,nb)/max(na,nb), so j >= t implies
     * min*1e6 >= floor(t*1e6)*max — a 2-long-mult guard that
@@ -104,6 +101,9 @@ object Dedup {
       col("n_b") * 1000000L >= col("n_a") * thrNum
   }
 
+  /** D2 — exact word-shingle Jaccard near-dup pairs (j >= 0.95). Jaccard of
+    * integer set sizes is an exact rational in double ⇒ bit-identical to the
+    * oracle. Brute pair space, used as ground truth for D3/D4. */
   def jaccardPairs(t: Tables, threshold: Double = 0.95): DataFrame =
     jaccardPairsOf(t.documents, threshold)
 
@@ -214,6 +214,12 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
+  /** Band count of the default graft_minhash_bands signature (40 hashes
+    * in bands of 10) — [[candidatesOf]]'s fold MUST cover exactly this
+    * many bands; fewer would silently drop every pair whose first
+    * agreement lies in a later band. */
+  private[operators] val MinhashNumBands = 40 / 10
+
   /** D3 — MinHash LSH candidate pairs: 40 min-hashes in 4 bands x 10 rows
     * (tuned for the ~0.95 Jaccard target: P[candidate] = 1-(1-j^10)^4 ≈
     * 0.974 at j = 0.95 — the round-3 4×16 geometry sat at 0.90; shorter
@@ -226,12 +232,6 @@ object Dedup {
     * (SketchExpressions; DedupSpec pins it to the Sketches UDF reference).
     * Hash-exact oracle (the DuckDB twin regenerates the band
     * signatures); DedupSpec checks recall vs exact Jaccard (D2). */
-  /** Band count of the default graft_minhash_bands signature (40 hashes
-    * in bands of 10) — [[candidatesOf]]'s fold MUST cover exactly this
-    * many bands; fewer would silently drop every pair whose first
-    * agreement lies in a later band. */
-  private[operators] val MinhashNumBands = 40 / 10
-
   def minhashCandidates(t: Tables): DataFrame = {
     val cores = t.documents.sparkSession.sparkContext.defaultParallelism
     minhashCandidateCore(t)
@@ -588,13 +588,8 @@ object Dedup {
     * present, so the components — and their min-doc_id labels — equal
     * the full recompute's exactly. A fresh doc near-dup to TWO settled
     * clusters merges them, exactly as a full recompute would
-    * (DedupSpec plants this case). */
-  def dedupClustersIncremental(t: Tables, threshold: Double = 0.95,
-      maxIters: Int = 50): DataFrame =
-    dedupClustersIncrementalOf(
-      t.documents, pmod(col("doc_id"), lit(8L)) === 7L, threshold, maxIters)
-
-  /** Library form: `isFresh` marks the new ingest slice of `docs`.
+    * (DedupSpec plants this case). `isFresh` marks the new ingest slice
+    * of `docs`.
     *
     * The merge step runs on the QUOTIENT graph: each settled component
     * contracts to its label node (labels are min-member ids, so quotient
@@ -733,7 +728,7 @@ object Dedup {
     quotientMerge(fresh, settledLabels, freshEdges, maxIters)
   }
 
-  /** Builds (once, marker-gated — the TextIndex.materialize pattern)
+  /** Builds (once per source generation, [[graft.sources.Fixtures.once]])
     * the SETTLED corpus's LSH-closure label table for `sfDir` and
     * returns its parquet path: the prior-state artifact
     * [[dedupClustersIncrementalIndexed]] reads, exactly what a
@@ -742,19 +737,11 @@ object Dedup {
     * coverage so the two artifacts describe the same corpus version. */
   def materializeSettledLabels(t: Tables, sfDir: String): String = {
     val spark = t.documents.sparkSession
-    val out = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_settled_labels_v1_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(out, "_LABELS_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    val out = Fixtures.once(spark, "settled_labels_v1", sfDir) { dir =>
       clusterDocsLsh(t.documents.filter(pmod(col("doc_id"), lit(8L)) =!= 7L))
-        .write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(
-          out, "labels").toString)
-      fs.create(marker, true).close()
+        .write.mode("overwrite").parquet(s"$dir/labels")
     }
-    new org.apache.hadoop.fs.Path(out, "labels").toString
+    s"$out/labels"
   }
 
   /** Verified-Jaccard edges between two doc sets (directed a×b,
@@ -856,20 +843,6 @@ object Dedup {
     out
   }
 
-  /** Min-label propagation over an undirected pair graph: every node
-    * takes the smallest label among itself and its neighbors until no
-    * label changes (exact fixpoint, checked each round). Each round's
-    * labels are eagerly checkpointed — an iterative plan otherwise
-    * grows exponentially (each round references the previous plan
-    * several times) and OOMs the planner itself.
-    *
-    * `checkpointDir`: None uses localCheckpoint (executor-local blocks —
-    * fastest, right for a single-JVM or preemption-free cluster); Some
-    * writes reliable checkpoints to that directory (object store/DFS),
-    * so a lost executor costs a task retry instead of the whole
-    * iteration history — the right setting for long dedup jobs on spot
-    * instances. The algorithm is identical either way (the spec runs
-    * both). */
   /** Frees the executor blocks behind a localCheckpoint'd frame. A local
     * checkpoint truncates lineage, so freed blocks CANNOT be recomputed —
     * call only once every consumer of the frame has materialized. The
@@ -970,6 +943,20 @@ object Dedup {
     * this call deletes. */
   private val ccCallId = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Min-label propagation over an undirected pair graph: every node
+    * takes the smallest label among itself and its neighbors until no
+    * label changes (exact fixpoint, checked each round). Each round's
+    * labels are eagerly checkpointed — an iterative plan otherwise
+    * grows exponentially (each round references the previous plan
+    * several times) and OOMs the planner itself.
+    *
+    * `checkpointDir`: None uses localCheckpoint (executor-local blocks —
+    * fastest, right for a single-JVM or preemption-free cluster); Some
+    * writes reliable checkpoints to that directory (object store/DFS),
+    * so a lost executor costs a task retry instead of the whole
+    * iteration history — the right setting for long dedup jobs on spot
+    * instances. The algorithm is identical either way (the spec runs
+    * both). */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession

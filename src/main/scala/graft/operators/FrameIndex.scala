@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.batchStamp
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Persisted FRAME-signature index — the multimodal twin of
   * [[TextIndex]] (text) and [[VectorIndex.curateStream]] (embeddings),
@@ -264,25 +264,19 @@ object FrameIndex {
     * sampled frames outside the seq == 6 ingest slice (seq = sample
     * sequence number mod 8; slice 6 keeps frame_id/10 EVEN, so the
     * ingest carries planted family frames — an odd slice would hold
-    * only noise frames and the probe would be vacuous); marker-gated,
-    * exercises a replayed appendBatch on the seq == 5 slice. */
+    * only noise frames and the probe would be vacuous); built once per
+    * source generation, exercises a replayed appendBatch on the seq == 5
+    * slice. */
   def materialize(t: Tables, sfDir: String): String = {
     val spark = t.events.sparkSession
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_frame_index_v1_b$Buckets" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_INDEX_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    Fixtures.once(spark, s"frame_index_v1_b$Buckets", sfDir) { out =>
       val frames = Multimodal.sampledFrames(t)
       val seq = pmod(graft.functions.intDiv(col("frame_id"), 10L), lit(8L))
-      build(frames.filter(seq =!= 6L && seq =!= 5L), out.toString)
+      build(frames.filter(seq =!= 6L && seq =!= 5L), out)
       val batch = frames.filter(seq === 5L)
-      appendBatch(batch, 0L, out.toString)
-      appendBatch(batch, 0L, out.toString) // replay: must be a no-op
-      compact(spark, out.toString)
-      fs.create(marker, true).close()
+      appendBatch(batch, 0L, out)
+      appendBatch(batch, 0L, out) // replay: must be a no-op
+      compact(spark, out)
     }
-    out.toString
   }
 }

@@ -211,16 +211,6 @@ object Multimodal {
         length(col("blob")).cast("long").as("blob_len"),
         EbmlFunctions.crcValid(col("blob")).as("crc_ok"))
 
-  /** G4/A8 — continuous-stream fragment splitting (parser.py:362-375):
-    * GetMedia delivers fragments back to back on one connection; the
-    * reference finds each boundary via the next EBML header's
-    * DocTypeReadVersion and flushes the previous fragment. Here: events
-    * are packed `groupSize` per stream blob (ordered concat), then the
-    * splitter explodes each blob back into per-fragment rows with
-    * absolute positions, and each fragment's tags are re-parsed to prove
-    * the slices are well-formed. The oracle recomputes positions
-    * arithmetically as the running sum of the deterministic fragment
-    * lengths. One shuffle (the pack groupBy); the split+parse is per-row. */
   /** Shared pack→concat→split→parse stage WITHOUT any output contract:
     * each public query applies its own final ordering, so a consumer
     * like [[mmFrameSample]] doesn't pay [[mmSplitStream]]'s output sort
@@ -256,6 +246,16 @@ object Multimodal {
         col("tg.producer_ts").cast("long").as("producer_ms"),
         col("grp"), col("position"), col("frag_len"), col("crc_ok"))
 
+  /** G4/A8 — continuous-stream fragment splitting (parser.py:362-375):
+    * GetMedia delivers fragments back to back on one connection; the
+    * reference finds each boundary via the next EBML header's
+    * DocTypeReadVersion and flushes the previous fragment. Here: events
+    * are packed `groupSize` per stream blob (ordered concat), then the
+    * splitter explodes each blob back into per-fragment rows with
+    * absolute positions, and each fragment's tags are re-parsed to prove
+    * the slices are well-formed. The oracle recomputes positions
+    * arithmetically as the running sum of the deterministic fragment
+    * lengths. One shuffle (the pack groupBy); the split+parse is per-row. */
   def mmSplitStream(t: Tables, groupSize: Long = 5L): DataFrame =
     splitCore(t, groupSize)
       .select("event_id", "grp", "position", "frag_len", "crc_ok")

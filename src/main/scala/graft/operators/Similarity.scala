@@ -295,15 +295,6 @@ object Similarity {
   def ivfAssign(t: Tables, k: Int = 8, iters: Int = 3): DataFrame =
     ivfAssignVecs(t.embeddings, k, iters)
 
-  /** Nearest-centroid struct (d, cid) as PURE CODEGEN arithmetic:
-    * dist²(v,c) = |v|² − 2⟨v,c⟩ + |c|², with |v|² precomputed per row,
-    * |c|² a driver-side constant, and ⟨v,c⟩ the native dot kernel
-    * against a literal centroid — no UDF, no per-row Seq[Double] boxing
-    * (the round-2 assign UDF boxed every element of every vector, every
-    * iteration). argmin = array_min over (d, cid) structs: lexicographic
-    * ordering breaks distance ties toward the lowest cid, matching the
-    * UDF loop it replaces. greatest(0, ·) clamps the −1e-16 the expansion
-    * can produce for a vector sitting on its centroid. */
   /** One (d, cid) struct per centroid — the shared distance arithmetic
     * BOTH corpus-side assignment and query-side routing build on; a
     * single definition keeps the two provably in agreement. */
@@ -317,6 +308,15 @@ object Similarity {
         lit(i).as("cid"))
     }
 
+  /** Nearest-centroid struct (d, cid) as PURE CODEGEN arithmetic:
+    * dist²(v,c) = |v|² − 2⟨v,c⟩ + |c|², with |v|² precomputed per row,
+    * |c|² a driver-side constant, and ⟨v,c⟩ the native dot kernel
+    * against a literal centroid — no UDF, no per-row Seq[Double] boxing
+    * (the round-2 assign UDF boxed every element of every vector, every
+    * iteration). argmin = array_min over (d, cid) structs: lexicographic
+    * ordering breaks distance ties toward the lowest cid, matching the
+    * UDF loop it replaces. greatest(0, ·) clamps the −1e-16 the expansion
+    * can produce for a vector sitting on its centroid. */
   private[operators] def nearestCentroid(cs: Array[Array[Double]]): org.apache.spark.sql.Column =
     array_min(array(cellStructs(cs): _*))
 
@@ -728,20 +728,6 @@ object Similarity {
       .collect()(0).getLong(0)
   }
 
-  /** E4 — PRODUCT QUANTIZATION: the vector-compression ANN path. Unit
-    * vectors split into `m` subspaces; each subspace gets its own
-    * k-means codebook (`kCells` centroids), and a vector's code is its
-    * m nearest-centroid ids — 64 doubles (512 B) compress to m small
-    * ints (m bytes on disk). Search is ADC: the query precomputes an
-    * m×kCells distance table (driver-side, model-sized) and the
-    * compressed corpus is scanned with ONE codegen table-lookup loop
-    * per row (graft_pq_adc) — at 100 TB the first-pass scan reads and
-    * computes ~64× less than raw vectors. The approximate top `rerank`
-    * candidates are then exactly re-ranked by cosine (a join back on
-    * the candidate ids only). On unit vectors L2 and cosine order
-    * identically (||a−b||² = 2−2cos), so ADC ranking targets the same
-    * ground truth as E1. Rows-only; SimilaritySpec measures recall@5
-    * and pins the compression arithmetic. */
   /** Per-subspace codebooks fit with the SAME Lloyd loop as IVF (each
     * subspace is just k-means over a slice of the persisted unit
     * vectors — cache-served scans, graft_vec_sum means). Returns
@@ -950,6 +936,20 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
+  /** E4 — PRODUCT QUANTIZATION: the vector-compression ANN path. Unit
+    * vectors split into `m` subspaces; each subspace gets its own
+    * k-means codebook (`kCells` centroids), and a vector's code is its
+    * m nearest-centroid ids — 64 doubles (512 B) compress to m small
+    * ints (m bytes on disk). Search is ADC: the query precomputes an
+    * m×kCells distance table (driver-side, model-sized) and the
+    * compressed corpus is scanned with ONE codegen table-lookup loop
+    * per row (graft_pq_adc) — at 100 TB the first-pass scan reads and
+    * computes ~64× less than raw vectors. The approximate top `rerank`
+    * candidates are then exactly re-ranked by cosine (a join back on
+    * the candidate ids only). On unit vectors L2 and cosine order
+    * identically (||a−b||² = 2−2cos), so ADC ranking targets the same
+    * ground truth as E1. Rows-only; SimilaritySpec measures recall@5
+    * and pins the compression arithmetic. */
   def pqTopK(t: Tables, k: Int = 5, m: Int = 8, kCells: Int = 16,
       iters: Int = 5, rerank: Int = 100): DataFrame =
     pqTopKOf(t.embeddings, withNorm(t.embeddings).filter(col("vec_id") < 10),

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.batchStamp
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** D11b — persisted SPAN-HASH index + incremental duplicated-span
   * coverage: the D7/[[VectorIndex]]/[[FrameIndex]] incremental-curation
@@ -118,22 +117,16 @@ object SpanIndex {
   /** Driver-harness index over the sf corpus: settled = doc_id % 8 ∉
     * {6, 7} as the base build, % 8 == 6 as an appended batch (replayed
     * once — the idempotency demonstration), % 8 == 7 left fresh for
-    * [[coverageBatch]]. Marker-gated so bench reruns reuse it. */
+    * [[coverageBatch]]. Built once per source generation
+    * ([[graft.sources.Fixtures.once]]) so bench reruns reuse it. */
   def materialize(t: Tables, sfDir: String): String = {
     val spark = t.documents.sparkSession
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_span_index_v1_k${K}_b$Buckets" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_INDEX_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    Fixtures.once(spark, s"span_index_v1_k${K}_b$Buckets", sfDir) { out =>
       val m = pmod(col("doc_id"), lit(8L))
-      build(t.documents.filter(m =!= 6L && m =!= 7L), out.toString)
+      build(t.documents.filter(m =!= 6L && m =!= 7L), out)
       val batch = t.documents.filter(m === 6L)
-      appendBatch(batch, 0L, out.toString)
-      appendBatch(batch, 0L, out.toString) // replay: must be a no-op
-      fs.create(marker, true).close()
+      appendBatch(batch, 0L, out)
+      appendBatch(batch, 0L, out) // replay: must be a no-op
     }
-    out.toString
   }
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.{batchStamp, words}
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Persisted TEXT-dedup index — the F-side twin of [[VectorIndex]]
   * (round-6 verdict #2 ask): the curation pipeline's exact-hash and
@@ -536,7 +536,7 @@ object TextIndex {
     if (wroteAny) { markerFs.delete(markerPath, false); () }
   }
 
-  /** Builds (once, marker-gated) the index for `sfDir`'s SETTLED
+  /** Builds (once per source generation) the index for `sfDir`'s SETTLED
     * documents — doc_id % 8 in [0, 6] — exercising the full lifecycle
     * (base build on % 8 < 6, an idempotently replayed appendBatch of
     * % 8 == 6, then compact), and returns its directory. The % 8 == 7
@@ -544,23 +544,16 @@ object TextIndex {
     * query dedups against it. */
   def materialize(t: Tables, sfDir: String): String = {
     val spark = t.documents.sparkSession
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      // v2: the round-10 band-table slimming dropped the stored sigs
-      // column — the version bump rebuilds any v1 artifact rather than
-      // letting compact() union mixed schemas
-      s"graft_text_index_v2_b$Buckets" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_INDEX_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    // v2: the round-10 band-table slimming dropped the stored sigs
+    // column — the version bump rebuilds any v1 artifact rather than
+    // letting compact() union mixed schemas
+    Fixtures.once(spark, s"text_index_v2_b$Buckets", sfDir) { out =>
       val docs = t.documents
-      build(docs.filter(pmod(col("doc_id"), lit(8L)) < 6L), out.toString)
+      build(docs.filter(pmod(col("doc_id"), lit(8L)) < 6L), out)
       val batch = docs.filter(pmod(col("doc_id"), lit(8L)) === 6L)
-      appendBatch(batch, 0L, out.toString)
-      appendBatch(batch, 0L, out.toString) // replay: must be a no-op
-      compact(spark, out.toString)
-      fs.create(marker, true).close()
+      appendBatch(batch, 0L, out)
+      appendBatch(batch, 0L, out) // replay: must be a no-op
+      compact(spark, out)
     }
-    out.toString
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.words
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** Text-analysis operators for training-data pipelines (SURVEY §2F).
   *
@@ -298,10 +298,10 @@ object TextOps {
     decontaminateFuzzyCore(docs, benchmark, threshold)
       .orderBy("doc_id", "bench_id")
 
-  /** The orderBy-free core — shared with the streaming twin
-    * ([[graft.streaming.EventStreams.decontaminateFuzzyStream]]): pure
+  /** The orderBy-free core, which a stream runs as is: pure
     * projections + a stream-static broadcast join + per-row filters,
-    * so it runs in append mode with NO state store. */
+    * so it runs in append mode with NO state store. A benchmark update
+    * means restarting the query with a fresh static frame. */
   private[graft] def decontaminateFuzzyCore(docs: DataFrame,
       benchmark: DataFrame, threshold: Double): DataFrame = {
     val tok = (d: DataFrame) => d
@@ -398,19 +398,6 @@ object TextOps {
       .orderBy("doc_id", "rnk")
   }
 
-  /** F8 — deterministic DOMAIN MIXING: per-source keep fractions for
-    * composing a training mixture ("keep all of src0, half of src1,
-    * 10% of the rest"). The keep decision is a pure function of
-    * doc_id — a Knuth multiplicative hash against a per-source
-    * threshold — so the sample is REPRODUCIBLE across runs, cluster
-    * sizes, and partitionings (no RNG state, unlike df.sample), and
-    * expressible in exact int64 arithmetic on any engine: the DuckDB
-    * oracle recomputes the identical decision, making the sample
-    * hash-exact. One scan, no shuffle before the filter: the predicate
-    * is arithmetic so parquet can't use it for row-group pruning, but
-    * it evaluates inside the scan's codegen over a (doc_id, source)
-    * projection — at 100 TB the corpus flows through one 2-column scan
-    * and dies there. */
   /** The mixing keep-decision as a reusable predicate — shared by the
     * batch operator and the streaming twin
     * ([[graft.streaming.EventStreams.mixSampleStream]]) so the two
@@ -448,6 +435,19 @@ object TextOps {
     pmod(h, lit(1000000L)) < thr
   }
 
+  /** F8 — deterministic DOMAIN MIXING: per-source keep fractions for
+    * composing a training mixture ("keep all of src0, half of src1,
+    * 10% of the rest"). The keep decision is a pure function of
+    * doc_id — a Knuth multiplicative hash against a per-source
+    * threshold — so the sample is REPRODUCIBLE across runs, cluster
+    * sizes, and partitionings (no RNG state, unlike df.sample), and
+    * expressible in exact int64 arithmetic on any engine: the DuckDB
+    * oracle recomputes the identical decision, making the sample
+    * hash-exact. One scan, no shuffle before the filter: the predicate
+    * is arithmetic so parquet can't use it for row-group pruning, but
+    * it evaluates inside the scan's codegen over a (doc_id, source)
+    * projection — at 100 TB the corpus flows through one 2-column scan
+    * and dies there. */
   def mixSample(docs: DataFrame, weights: Map[String, Double],
       defaultFrac: Double = 0.0): DataFrame =
     docs.filter(mixKeep(weights, defaultFrac))
@@ -1031,7 +1031,7 @@ object TextOps {
   }
 
   /** The F32 semantic arm's DEPLOY artifact (round 15 — the round-14
-    * verdict's #1 item): persists, marker-gated per sf dir, everything
+    * verdict's #1 item): persists, once per source generation, everything
     * the semantic arm needs so a query never touches the corpus:
     *
     *   - `featmap/` — the corpus's (h, j, sign, idf_u) hashing/idf
@@ -1051,22 +1051,14 @@ object TextOps {
   def materializeHybridSemantic(t: Tables, sfDir: String,
       dim: Int = 64): String = {
     val spark = t.documents.sparkSession
-    val out = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_hybrid_sem_v1_d$dim" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(out, "_INDEX_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    Fixtures.once(spark, s"hybrid_sem_v1_d$dim", sfDir) { out =>
       val (tf, feat) = embedFeatParts(t.documents, dim)
       feat.write.mode("overwrite").parquet(s"$out/featmap")
       val vecs = denseOf(compsOf(tf, feat), dim).localCheckpoint()
       graft.operators.Similarity.withNorm(vecs)
         .write.mode("overwrite").parquet(s"$out/vectors_raw")
       VectorIndex.fit(vecs, s"$out/vec_index")
-      fs.create(marker, true).close()
     }
-    out.toString
   }
 
   /** F32b — HYBRID RETRIEVAL from PERSISTED INDEXES (round 15; the
@@ -1270,9 +1262,9 @@ object TextOps {
     * C10/C10c pairing applied to gating). The sketch threshold is then
     * a source-count-sized broadcast joined back onto a second scoring
     * pass. Rows-only driver check; the spec bounds the kept-set
-    * disagreement vs the exact gate to docs NEAR the cut. */
-  /** Library form over any (doc_id, source, text) frame — the deploy
-    * shape: gate on the SKETCH threshold. */
+    * disagreement vs the exact gate to docs NEAR the cut. Takes any
+    * (doc_id, source, text) frame — the deploy shape: gate on the SKETCH
+    * threshold. */
   def qualityGateApproxOf(docs: DataFrame, accuracy: Int = 10000): DataFrame = {
     val q = docs.select(col("doc_id"), col("source"),
       stopRatioCol.as("stop_ratio"))
@@ -1357,23 +1349,6 @@ object TextOps {
       .orderBy("source", "doc_id")
   }
 
-  /** F14 — deterministic GLOBAL SHUFFLE + SHARDING: the last step of
-    * every training-data pipeline — break correlation between adjacent
-    * source documents by scattering the corpus pseudo-randomly across a
-    * fixed number of output shards, with a total per-shard order, so a
-    * training job streams the shards and sees a reproducible global
-    * permutation. The permutation key is graft_mix64(doc_id): no RNG
-    * state, so the layout is identical across runs, cluster sizes, and
-    * input partitionings (the F8/F9 discipline applied to ordering).
-    *
-    * Scale shape: ONE hash exchange on the shard id + a per-shard sort
-    * — exactly the write topology (each shard = one writer task's
-    * sorted run; at 100 TB, nShards is sized to the target output file
-    * count). There is NO global single-partition sort: the window
-    * partitions by shard. nShards must be a power of two — that is
-    * what makes Spark's signed pmod and the oracle's unsigned modulo
-    * the same function (2^64 ≡ 0 mod 2^k), and binary shard counts
-    * are the natural re-sharding unit anyway. */
   /** F18 — deterministic TRAIN/VALID/TEST split assignment: every
     * published pipeline's final step before packing. The split is a
     * pure function of doc_id — bucket = mix64(doc_id) mod 2^20 against
@@ -1458,6 +1433,23 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** F14 — deterministic GLOBAL SHUFFLE + SHARDING: the last step of
+    * every training-data pipeline — break correlation between adjacent
+    * source documents by scattering the corpus pseudo-randomly across a
+    * fixed number of output shards, with a total per-shard order, so a
+    * training job streams the shards and sees a reproducible global
+    * permutation. The permutation key is graft_mix64(doc_id): no RNG
+    * state, so the layout is identical across runs, cluster sizes, and
+    * input partitionings (the F8/F9 discipline applied to ordering).
+    *
+    * Scale shape: ONE hash exchange on the shard id + a per-shard sort
+    * — exactly the write topology (each shard = one writer task's
+    * sorted run; at 100 TB, nShards is sized to the target output file
+    * count). There is NO global single-partition sort: the window
+    * partitions by shard. nShards must be a power of two — that is
+    * what makes Spark's signed pmod and the oracle's unsigned modulo
+    * the same function (2^64 ≡ 0 mod 2^k), and binary shard counts
+    * are the natural re-sharding unit anyway. */
   def shuffleShards(t: Tables, nShards: Int = 8): DataFrame =
     shuffleShardsOf(t.documents, nShards)
 
@@ -2463,9 +2455,9 @@ object TextOps {
   def chunkDocsOf(docs: DataFrame, size: Int, stride: Int): DataFrame =
     chunkCore(docs, size, stride).orderBy("doc_id", "chunk_id")
 
-  /** The chunking projection without the presentation sort — shared
-    * with the streaming twin (a sort is illegal on an unbounded
-    * append-mode stream; a batch query adds it for stable output). */
+  /** The chunking projection without the presentation sort, which a
+    * stream runs as is (a sort is illegal on an unbounded append-mode
+    * stream; a batch query adds it for stable output). */
   private[graft] def chunkCore(docs: DataFrame, size: Int, stride: Int): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size,
       s"need 0 < stride <= size, got size=$size stride=$stride")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.batchStamp
-import graft.sources.Tables
+import graft.sources.{Fixtures, Tables}
 
 /** PERSISTED vector index — the deployment shape of IVF+PQ at 100 TB:
   * fit ONCE, write the artifact to tables, search MANY times against it.
@@ -866,27 +866,17 @@ object VectorIndex {
       .orderBy("ingest_batch")
   }
 
-  /** Builds (once, marker-gated) the index for `sfDir`'s embeddings at
-    * the default ivfPqTopK parameters and returns its directory — the
-    * idempotent test-side stand-in for an artifact a deployment already
-    * has (the FragmentArchive pattern). */
+  /** Builds (once per source generation) the index for `sfDir`'s
+    * embeddings at the default ivfPqTopK parameters and returns its
+    * directory — the test-side stand-in for an artifact a deployment
+    * already has (the FragmentArchive pattern). */
   def materialize(t: Tables, sfDir: String): String = {
     val spark = t.embeddings.sparkSession
-    // the dir name carries a layout version + the fit params: a code or
+    // the name carries a layout version + the fit params: a code or
     // parameter change must never silently search a stale artifact left
-    // by an earlier run in the shared tmpdir. NOTE hashCode of the
-    // sfDir path is a convenience key for the handful of test SF dirs,
-    // not a collision-free id — deployments name their artifact dirs
-    // explicitly.
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_vec_index_v3_k8_m8_pq16_i5_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_INDEX_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
-      fit(t.embeddings, out.toString)
-      fs.create(marker, true).close()
+    // by an earlier run in the shared tmpdir
+    Fixtures.once(spark, "vec_index_v3_k8_m8_pq16_i5", sfDir) {
+      fit(t.embeddings, _)
     }
-    out.toString
   }
 }

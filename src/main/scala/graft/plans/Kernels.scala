@@ -255,14 +255,18 @@ object Kernels {
       "_FUNC_(event_id, ts_ms, user_id, value_cents, props) - fMP4 clip blob"),
     Kernel("bmff_boxes", Bmff, "boxesArray",
       ArrayType(BmffExpressions.boxType, containsNull = false),
-      "_FUNC_(blob) - array of (typ, position, size, depth) box heads"),
+      "_FUNC_(blob) - array of (typ, position, size, depth) box heads; null on unparseable bytes",
+      nullOnBadInput = true),
     Kernel("bmff_clip", Bmff, "clipRow", BmffExpressions.clipType,
-      "_FUNC_(clip) - the typed clip struct"),
-    Kernel("bmff_clip_payload", of(graft.bmff.Bmff), "clipPayload", BinaryType,
-      "_FUNC_(clip) - the mdat payload bytes"),
+      "_FUNC_(clip) - the typed clip struct; null on unparseable bytes",
+      nullOnBadInput = true),
+    Kernel("bmff_clip_payload", Bmff, "clipPayload", BinaryType,
+      "_FUNC_(clip) - the mdat payload bytes; null on unparseable bytes",
+      nullOnBadInput = true),
     Kernel("bmff_split_clips", Bmff, "splitArray",
       ArrayType(BmffExpressions.sliceType, containsNull = false),
-      "_FUNC_(stream) - array of (position, clip) slices at ftyp boundaries"))
+      "_FUNC_(stream) - array of (position, clip) slices at ftyp boundaries; null on unparseable bytes",
+      nullOnBadInput = true))
 
   private val byName: Map[String, Kernel] = all.map(k => k.name -> k).toMap
   require(byName.size == all.size, "duplicate kernel name")

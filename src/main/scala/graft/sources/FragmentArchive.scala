@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   * prefix of archived media payloads (parser.py's cv2.imwrite tree,
   * :483-486, at archive scale).
   *
-  * The write is idempotent per source dir (marker file) and distributed:
-  * fragments pack into per-group payload files exactly like the
-  * continuous-stream shape (Multimodal.splitCore), and each task writes
+  * The write runs once per source generation ([[Fixtures.once]]) and is
+  * distributed: fragments pack into per-group payload files exactly
+  * like the continuous-stream shape (Multimodal.splitCore), and each task writes
   * its groups through the Hadoop filesystem API — the same code targets
   * local disk or an object store. One groupBy shuffle, then
   * embarrassingly parallel encode+write.
@@ -29,19 +28,11 @@ object FragmentArchive {
     import graft.functions._
     // v2: archives carry a _MANIFEST (per-file tag ranges for the ebml
     // source's file-skip pushdown); the version in the name keeps a
-    // marker-gated v1 archive from being read without one
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_ebml_archive_v2_${math.abs(sfDir.hashCode)}_$groupSize")
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = out.getFileSystem(hconf)
-    val marker = new Path(out, "_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
-      fs.mkdirs(out)
+    // v1 archive from being read without one
+    Fixtures.once(spark, s"ebml_archive_v2_g$groupSize", sfDir) { outStr =>
       // ship the session Hadoop conf entries into the write tasks
       // (shared HadoopConfShip pattern with the ebml source reader)
       val confEntries = HadoopConfShip.capture(spark)
-      val outStr = out.toString
       t.events
         .withColumn("ts_ms", nanosToMs(col("ts")))
         .withColumn("blob", EbmlFunctions.encodeFragment(
@@ -78,10 +69,10 @@ object FragmentArchive {
         .map(r => f"payload_${r.getLong(0)}%06d.mkv," +
           s"${r.getLong(1)},${r.getLong(2)},${r.getLong(3)},${r.getLong(4)}")
         .sorted.mkString("\n")
-      val mf = fs.create(new Path(out, "_MANIFEST"), true)
+      val mfPath = new Path(outStr, "_MANIFEST")
+      val mf = mfPath.getFileSystem(spark.sessionState.newHadoopConf())
+        .create(mfPath, true)
       try mf.write(manifest.getBytes("UTF-8")) finally mf.close()
-      fs.create(marker, true).close()
     }
-    out.toString
   }
 }

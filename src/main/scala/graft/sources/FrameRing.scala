@@ -231,45 +231,31 @@ object FrameRing {
       buckets: Int = DefaultBuckets): Option[Frame] =
     ringOf(spark, dir, streamId, buckets).lastOption
 
-  /** Builds (once, marker-gated — the snapshot-fixture rule) the frame
-    * store over the events table: stream = user, frame = event, the
-    * reference's gap thinning at `minGapMs` with a `maxLen` ring. */
-  private def materializeRing(t: Tables, sfDir: String, maxLen: Int,
-      minGapMs: Long): String = {
+  /** The [Q:frame_ring_state] query: the maintained store read back as
+    * relational rows — (stream, slot, ts, frame, tags) per buffered
+    * frame, slot 1 = oldest buffered (the reference's GetFrame index
+    * + 1). The store builds once per source generation
+    * ([[Fixtures.once]]); the benched query is the serving-store scan,
+    * which is the feature, and its schema is resolved once per store
+    * generation ([[ParquetSchemas]]), so a rebuilt plan starts no
+    * inference job. The oracle
+    * replays the greedy acceptance per stream (the G5c WITH RECURSIVE
+    * next-kept chase) and keeps the newest maxLen. */
+  def ringStateQuery(t: Tables, sfDir: String, maxLen: Int = 4,
+      minGapMs: Long = 600000L): DataFrame = {
     val spark = t.events.sparkSession
-    val out = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_frame_ring_v1_b${DefaultBuckets}_ml${maxLen}" +
-        s"_g${minGapMs}_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(out, "_SEEDED")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    // the frame store over the events table: stream = user, frame =
+    // event, the reference's gap thinning at `minGapMs`
+    val dir = Fixtures.once(spark,
+        s"frame_ring_v1_b${DefaultBuckets}_ml${maxLen}_g$minGapMs", sfDir) { out =>
       val frames = t.events.select(
         col("user_id").as("stream_id"),
         graft.functions.nanosToMs(col("ts")).as("ts_ms"),
         col("event_id").as("frame_id"),
         col("event_type").as("tags"),
         encode(col("event_type"), "UTF-8").as("payload"))
-      applyBatch(spark, out.toString, frames, maxLen, minGapMs)
-      fs.create(marker, true).close()
+      applyBatch(spark, out, frames, maxLen, minGapMs)
     }
-    out.toString
-  }
-
-  /** The [Q:frame_ring_state] query: the maintained store read back as
-    * relational rows — (stream, slot, ts, frame, tags) per buffered
-    * frame, slot 1 = oldest buffered (the reference's GetFrame index
-    * + 1). The store builds ONCE behind a seed marker; the benched
-    * query is the serving-store scan, which is the feature, and its
-    * schema is resolved once per store generation ([[ParquetSchemas]]),
-    * so a rebuilt plan starts no inference job. The oracle
-    * replays the greedy acceptance per stream (the G5c WITH RECURSIVE
-    * next-kept chase) and keeps the newest maxLen. */
-  def ringStateQuery(t: Tables, sfDir: String, maxLen: Int = 4,
-      minGapMs: Long = 600000L): DataFrame = {
-    val spark = t.events.sparkSession
-    val dir = materializeRing(t, sfDir, maxLen, minGapMs)
     ParquetSchemas.read(spark, dir)
       .select(col("stream_id"), posexplode(col("ring")).as(Seq("pos", "f")))
       .select(col("stream_id"), (col("pos") + 1L).cast("long").as("slot"),

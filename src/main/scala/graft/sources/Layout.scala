@@ -98,30 +98,23 @@ object Layout {
     * partitions this is the difference between scanning 3 years and
     * scanning the qualifying week — for free, no manual predicate.
     *
-    * The fixture (marker-gated) writes events day-partitioned — the
-    * standard fact layout every warehouse uses — and the query joins
+    * The fixture (built once, [[Fixtures.once]]) writes events
+    * day-partitioned — the standard fact layout every warehouse uses —
+    * and the query joins
     * it to a dim carrying the filter (day % 7 = 2: "Tuesdays"), whose
     * qualifying days are only known after the dim evaluates. The SPEC
     * pins both the injected `dynamicpruning` filter in the plan and
     * that the files actually read all belong to qualifying days. */
   def materializeDayPartitioned(t: Tables, sfDir: String): String = {
     val spark = t.events.sparkSession
-    val out = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_events_by_day_v1_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(out, "_SEEDED")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    Fixtures.once(spark, "events_by_day_v1", sfDir) { out =>
       t.events.select(
           graft.functions.intDiv(graft.functions.nanosToMs(col("ts")),
             86400000L).as("day"),
           col("event_id"), col("user_id"), col("event_type"),
           graft.functions.cents(col("value")).as("value_c"))
-        .write.partitionBy("day").parquet(out.toString)
-      fs.create(marker, true).close()
+        .write.partitionBy("day").parquet(out)
     }
-    out.toString
   }
 
   /** The [Q:dpp_join] query: day-partitioned fact ⋈ filtered day dim,

@@ -219,22 +219,14 @@ object Snapshot {
         col("event_type").as("typ"),
         graft.functions.cents(col("value")).as("value_c"),
         col("event_id"))
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_cdc_snapshot_v1_b$DefaultBuckets" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    // the marker lives INSIDE the snapshot (underscore files are
-    // invisible to parquet reads; dynamic overwrite touches only
-    // bucket= dirs): a sibling marker could outlive a cleaned-up
-    // snapshot dir and silently skip the seed forever
-    val marker = new Path(out, "_SEEDED")
     def slice(i: Int) = changes.filter(col("event_id") % 4 === i).drop("event_id")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
-      mergeCdc(spark, out.toString, slice(3), "user_id")
-      fs.create(marker, true).close()
+    // dynamic overwrite touches only bucket= dirs, so the merges below
+    // leave the seed's marker in place
+    val out = Fixtures.once(spark, s"cdc_snapshot_v1_b$DefaultBuckets", sfDir) {
+      mergeCdc(spark, _, slice(3), "user_id")
     }
-    for (i <- Seq(1, 0, 2)) mergeCdc(spark, out.toString, slice(i), "user_id")
-    readLive(spark, out.toString)
+    for (i <- Seq(1, 0, 2)) mergeCdc(spark, out, slice(i), "user_id")
+    readLive(spark, out)
       .select(col("user_id"), col("ver.event_id").as("last_event_id"),
         col("ver.ts_ms").as("last_ms"), col("typ").as("last_type"),
         col("value_c").as("last_value_c"))
@@ -260,14 +252,8 @@ object Snapshot {
       col("o_orderpriority").as("priority"))
     // v2: the insert-key offset moved to 1e12 — the fixture dir must
     // not carry rows merged under the old constant
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_snapshot_v2_b$DefaultBuckets" + s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_BASE_SUCCESS")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
-      writeBase(baseDf, "k", out.toString)
-      fs.create(marker, true).close()
+    val out = Fixtures.once(spark, s"snapshot_v2_b$DefaultBuckets", sfDir) {
+      writeBase(baseDf, "k", _)
     }
     val upserts = baseDf.filter(col("k") % 7 === 3 && col("k") % 11 =!= 5)
       .withColumn("status", lit("M"))
@@ -283,8 +269,8 @@ object Snapshot {
       .withColumn("op", lit("U"))
     val deletes = baseDf.filter(col("k") % 11 === 5)
       .withColumn("op", lit("D"))
-    merge(spark, out.toString,
+    merge(spark, out,
       upserts.unionByName(inserts).unionByName(deletes), "k")
-    read(spark, out.toString).orderBy("k")
+    read(spark, out).orderBy("k")
   }
 }

@@ -428,23 +428,10 @@ object VersionedSnapshot {
     }
   }
 
-  /** The [Q:snapshot_time_travel] fixture: the merge_cdc changelog
-    * (events keyed by user_id, ver = (ts_ms, event_id), op = D on
-    * 'error') applied in the SAME out-of-order batch sequence
-    * (event_id % 4 slices 3 → 1 → 0 → 2), each as one published
-    * version — then read back AS OF version 2, i.e. the table as it
-    * stood when only slices {3, 1} had landed, AFTER versions 3 and 4
-    * exist. The oracle replays the latest-wins election restricted to
-    * those two slices, so the hash gate proves historical reads are
-    * insulated from later commits — including later deletes and later
-    * re-upserts (slice 0/2 rows are invisible however they interleave).
-    * History builds once (marker-gated); the benched query is the
-    * manifest-driven pruned read, which is the feature. */
-  /** Builds (once, marker-gated) the 5-version history both H16
-    * queries read: v0 empty init, then one version per out-of-order
-    * changelog slice — v1={3}, v2={3,1}, v3+={0}, v4+={2}. The marker
-    * lives INSIDE the snapshot (the mergeCdcQuery rule: underscore
-    * files are invisible to parquet reads). */
+  /** Builds (once per source generation, [[Fixtures.once]]) the
+    * 5-version history both H16 queries read: v0 empty init, then one
+    * version per out-of-order changelog slice — v1={3}, v2={3,1},
+    * v3+={0}, v4+={2}. */
   private def materializeHistory(t: Tables, sfDir: String): String = {
     val spark = t.events.sparkSession
     val changes = t.events
@@ -455,21 +442,12 @@ object VersionedSnapshot {
         col("event_type").as("typ"),
         graft.functions.cents(col("value")).as("value_c"),
         col("event_id"))
-    val out = new Path(System.getProperty("java.io.tmpdir"),
-      s"graft_tt_snapshot_v2_b${Snapshot.DefaultBuckets}" +
-        s"_${math.abs(sfDir.hashCode)}")
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(out, "_SEEDED")
-    if (!fs.exists(marker)) {
-      fs.delete(out, true)
+    Fixtures.once(spark, s"tt_snapshot_v2_b${Snapshot.DefaultBuckets}", sfDir) { out =>
       def slice(i: Int) = changes.filter(col("event_id") % 4 === i)
         .drop("event_id")
-      init(slice(3).filter(lit(false)).drop("op"), "user_id", out.toString)
-      for (i <- Seq(3, 1, 0, 2)) applyChanges(spark, out.toString,
-        slice(i), "user_id")
-      fs.create(marker, true).close()
+      init(slice(3).filter(lit(false)).drop("op"), "user_id", out)
+      for (i <- Seq(3, 1, 0, 2)) applyChanges(spark, out, slice(i), "user_id")
     }
-    out.toString
   }
 
   /** The [Q:snapshot_changes] fixture: `table_changes(v2, v4]` over the
@@ -489,6 +467,18 @@ object VersionedSnapshot {
       .orderBy("user_id")
   }
 
+  /** The [Q:snapshot_time_travel] fixture: the merge_cdc changelog
+    * (events keyed by user_id, ver = (ts_ms, event_id), op = D on
+    * 'error') applied in the SAME out-of-order batch sequence
+    * (event_id % 4 slices 3 → 1 → 0 → 2), each as one published
+    * version — then read back AS OF version 2, i.e. the table as it
+    * stood when only slices {3, 1} had landed, AFTER versions 3 and 4
+    * exist. The oracle replays the latest-wins election restricted to
+    * those two slices, so the hash gate proves historical reads are
+    * insulated from later commits — including later deletes and later
+    * re-upserts (slice 0/2 rows are invisible however they interleave).
+    * History builds once; the benched query is the
+    * manifest-driven pruned read, which is the feature. */
   def timeTravelQuery(t: Tables, sfDir: String): DataFrame = {
     val spark = t.events.sparkSession
     val dir = materializeHistory(t, sfDir)

@@ -221,44 +221,6 @@ object EventStreams {
     docs.filter(graft.operators.TextOps.keepByPpm(rates))
       .select(col("doc_id"), col("source"))
 
-  /** F18 streaming twin — split assignment as documents ARRIVE: the
-    * split is a pure function of doc_id (shared
-    * [[graft.operators.TextOps.splitAssignCore]] builder), so the gate
-    * is a stateless projection — append mode, no state store, no
-    * shuffle — and a document gets the SAME split whether it arrived
-    * in the batch bootstrap or on the stream. */
-  def splitAssignStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.splitAssignCore(docs)
-
-  /** F26 streaming twin — overlapping token-window CHUNKING as
-    * documents ARRIVE: a document's chunks are a pure function of its
-    * own text (shared [[graft.operators.TextOps.chunkCore]] builder —
-    * the batch form only adds a presentation sort), so the embedding-
-    * prep explode runs at ingest as a stateless projection: append
-    * mode, no state store, no shuffle, and a document chunks
-    * identically whether it arrived in the batch bootstrap or on the
-    * stream. */
-  def chunkDocsStream(docs: DataFrame, size: Int = 64,
-      stride: Int = 48): DataFrame =
-    graft.operators.TextOps.chunkCore(docs, size, stride)
-
-  /** F11 streaming twin — PII redaction as documents ARRIVE: the SAME
-    * per-row regex projection as the batch operator (shared builder
-    * [[graft.operators.TextOps.redactPiiOf]]), so batch and stream
-    * provably agree row for row. Third stateless hygiene gate: pure
-    * projection, append mode, NO state store, no shuffle. */
-  def redactPiiStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.redactPiiOf(docs)
-
-  /** F12 streaming twin — normalization as documents ARRIVE: the same
-    * kernel + replace chain as the batch operator (shared builder
-    * [[graft.operators.TextOps.normalizeTextOf]]). Stateless projection,
-    * append mode, no state store — normalization belongs at INGEST so
-    * every downstream gate (dedup, decontamination, quality) sees
-    * canonical bytes. */
-  def normalizeTextStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.normalizeTextOf(docs)
-
   /** F10 streaming twin — the Gopher repetition-quality gate as
     * documents ARRIVE: the shared per-row kernel
     * ([[graft.operators.TextOps.repetitionSignalsOf]]) scores each doc,
@@ -274,19 +236,6 @@ object EventStreams {
       .filter(col("dup_block_frac") > maxDupBlockFrac ||
         col("top2_frac") > maxTop2Frac)
       .select(col("doc_id"), col("dup_block_frac"), col("top2_frac"))
-
-  /** F6b streaming twin — FUZZY decontamination as documents ARRIVE:
-    * the SAME core as the batch operator (shared builder
-    * [[graft.operators.TextOps.decontaminateFuzzyCore]] — per-row
-    * minhash band signatures, a stream-static BROADCAST join against
-    * the model-sized benchmark band table, the first-agreeing-band
-    * election, exact-Jaccard verification), minus only the batch
-    * output sort. Append mode, NO state store; a benchmark update
-    * means restarting the query with a fresh static frame, exactly
-    * like [[decontaminateStream]]'s gram array. */
-  def decontaminateFuzzyStream(docs: DataFrame, benchmark: DataFrame,
-      threshold: Double = 0.9): DataFrame =
-    graft.operators.TextOps.decontaminateFuzzyCore(docs, benchmark, threshold)
 
   /** F16 streaming twin — quality gating as documents ARRIVE: the SAME
     * score as the batch gate (shared builder

@@ -28,6 +28,14 @@ import org.apache.spark.sql.types._
   */
 object FragmentSource {
 
+  /** The binaryFile source's fixed schema — streaming file sources
+    * require it spelled out. */
+  private val binaryFileSchema = StructType(Seq(
+    StructField("path", StringType),
+    StructField("modificationTime", TimestampType),
+    StructField("length", LongType),
+    StructField("content", BinaryType)))
+
   /** Stream of raw fragment blobs from a directory: one file = one
     * fragment payload. `maxFilesPerTrigger` bounds micro-batch size the
     * way the reference's chunked `stream.read(...)` bounds one pipe
@@ -38,14 +46,6 @@ object FragmentSource {
     * GetMedia captures (MKV fragments are seconds of media), but an
     * operator pointing this at multi-GB payload archives should re-chunk
     * them upstream; a row must fit in executor memory. */
-  /** The binaryFile source's fixed schema — streaming file sources
-    * require it spelled out. */
-  private val binaryFileSchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
-
   def fragmentStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1000): DataFrame =
     spark.readStream

@@ -39,7 +39,7 @@ class BucketingSpec extends SparkSpec {
   test("enrichEventsBucketed (the driver-gated H10 query) joins exchange-free") {
     // drop catalog + files so the query's catalog-gated materialize runs
     // from scratch in this session
-    val tag = Bucketing.sourceTag(spark, sfDir)
+    val tag = Fixtures.tag(spark, sfDir)
     for (base <- Seq("b_enrich_events", "b_enrich_customer")) {
       spark.sql(s"DROP TABLE IF EXISTS ${base}_$tag")
       val dir = new java.io.File(
@@ -83,11 +83,11 @@ class BucketingSpec extends SparkSpec {
     }
     writeSrc(10L)
     val t2 = Tables(spark, dir)
-    val tagBefore = Bucketing.sourceTag(spark, dir)
+    val tagBefore = Fixtures.tag(spark, dir)
     val (e1, c1) = Bucketing.materializeEnrich(t2, dir)
     val n1 = spark.table(e1).count()
     writeSrc(20L) // the driver regenerates the parquet in place
-    val tagAfter = Bucketing.sourceTag(spark, dir)
+    val tagAfter = Fixtures.tag(spark, dir)
     assert(tagAfter != tagBefore,
       "source regeneration did not change the fingerprint tag")
     val (e2, _) = Bucketing.materializeEnrich(Tables(spark, dir), dir)

@@ -663,7 +663,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = (0L until 400L).map(d => (d, s"src${d % 3}"))
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.splitAssignStream(
+    val query = graft.operators.TextOps.splitAssignCore(
         input.toDF().toDF("doc_id", "source"))
       .writeStream.format("memory").queryName("split_stream")
       .outputMode("append").start()
@@ -693,8 +693,8 @@ class StreamingSpec extends SparkSpec {
       (2L, "short doc"),
       (3L, "")) // token-empty: no chunks
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.chunkDocsStream(
-        input.toDF().toDF("doc_id", "text"))
+    val query = graft.operators.TextOps.chunkCore(
+        input.toDF().toDF("doc_id", "text"), 64, 48)
       .writeStream.format("memory").queryName("chunk_stream")
       .outputMode("append").start()
     try {
@@ -725,8 +725,8 @@ class StreamingSpec extends SparkSpec {
       (100L, "the quick brown fox jumps over the lazy dog tonight and always"))
       .toDF("doc_id", "text")
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.decontaminateFuzzyStream(
-        input.toDF().toDF("doc_id", "text"), bench)
+    val query = graft.operators.TextOps.decontaminateFuzzyCore(
+        input.toDF().toDF("doc_id", "text"), bench, 0.9)
       .writeStream.format("memory").queryName("fuzzy_decon")
       .outputMode("append").start()
     try {
@@ -869,7 +869,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "call +1-555-0100 or visit 10.0.0.7 now"),
       (3L, "no pii in this one"))
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.redactPiiStream(input.toDF().toDF("doc_id", "text"))
+    val query = graft.operators.TextOps.redactPiiOf(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("pii_stream")
       .outputMode("append").start()
     try {
@@ -898,7 +898,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "zero\u200bwidth"),
       (3L, "plain ascii"))
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.normalizeTextStream(input.toDF().toDF("doc_id", "text"))
+    val query = graft.operators.TextOps.normalizeTextOf(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("norm_stream")
       .outputMode("append").start()
     try {
