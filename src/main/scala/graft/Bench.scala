@@ -14,51 +14,57 @@ import java.nio.file.{Files, Paths}
   *    projection-heavy queries → materialize through the `noop` sink,
   *    which evaluates every output column without collecting to the
   *    driver.
+  *
+  * Runs in [[SparkEntry.runTool]] (subset: SPARK_GRAFT_BENCH_ONLY). A
+  * query that throws reports -1 and is listed under `failed`; Bench still
+  * exits 0, as its JSON line is the result, failures included.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = graft.core.GraftSession.builder("graft-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def materialize(name: String): (Double, Boolean) = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // OUTSIDE the timer: free the dead localCheckpoint blocks this run
-      // created (only those: a checkpoint that outlives its run, held
-      // by a caller, stays readable). Each run builds fresh checkpoints
-      // (no cross-run reuse exists to lose), but the superseded blocks
-      // are only reclaimed by ContextCleaner on DRIVER GC — on a large
-      // heap (the driver's 89 g run) GC can stay away for the whole
-      // 192×4 loop, so ~3,000 dead working sets accumulate toward the
-      // storage cap and the
-      // allocation-heavy queries late in the alphabet (the mm_*/mp4_*
-      // blob family) run against a full old gen (round-20 verdict
-      // item 1). CacheManager-cached relations are NOT touched: their
-      // cross-run reuse is existing measured behavior.
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!before(id) && r.isCheckpointed) r.unpersist(blocking = false)
-      }
-      (sec, ok)
-    }
-
     // optional comma-separated subset (isolation experiments: a query's
     // in-loop min vs its alone-in-the-JVM min separates plan cost from
     // loop-state noise — JIT/codegen/GC accumulated over 70×4 runs)
-    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    names.foreach(materialize) // warmup: JVM + codegen + parquet footers
+    SparkEntry.runTool("graft-bench", "bench",
+        sys.env.get("SPARK_GRAFT_BENCH_ONLY")) { run =>
+      report(sfDir, runs, run.spark.sparkContext.defaultParallelism,
+        measure(run, sfDir, runs))
+    }
+  }
+
+  /** Per query: (name, median s, min s, GC ms over its timed runs); a
+    * query that threw in any timed run reports -1 for both times. */
+  private def measure(run: SparkEntry.ToolRun, sfDir: String, runs: Int)
+      : Seq[(String, Double, Double, Long)] = {
+    val sc = run.spark.sparkContext
+    def materialize(name: String): Double = {
+      val before = sc.getPersistentRDDs.keySet
+      val t0 = System.nanoTime()
+      try {
+        SparkEntry.queries(name)(run.spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        // OUTSIDE the timer: free the dead localCheckpoint blocks this run
+        // created (only those: a checkpoint that outlives its run, held
+        // by a caller, stays readable). Each run builds fresh checkpoints
+        // (no cross-run reuse exists to lose), but the superseded blocks
+        // are only reclaimed by ContextCleaner on DRIVER GC — on a large
+        // heap (the driver's 89 g run) GC can stay away for the whole
+        // 192×4 loop, so ~3,000 dead working sets accumulate toward the
+        // storage cap and the
+        // allocation-heavy queries late in the alphabet (the mm_*/mp4_*
+        // blob family) run against a full old gen (round-20 verdict
+        // item 1). CacheManager-cached relations are NOT touched: their
+        // cross-run reuse is existing measured behavior.
+        sc.getPersistentRDDs.foreach { case (id, r) =>
+          if (!before(id) && r.isCheckpointed) r.unpersist(blocking = false)
+        }
+      }
+    }
+
+    run.each(name => materialize(name)) // warmup: JVM + codegen + parquet footers
     // a failing query must NOT enter the totals as a fast success —
     // it reports -1 and lands in "failed" so a broken build can't
     // masquerade as a perf win
@@ -68,18 +74,28 @@ object Bench {
       gcBeans.forEach(b => ms += math.max(0L, b.getCollectionTime))
       ms
     }
-    val timings = names.map { name =>
+    val secs = scala.collection.mutable.Map.empty[String, Seq[Double]]
+    val gcMs = scala.collection.mutable.Map.empty[String, Long]
+    run.each { name =>
       val g0 = gcNowMs
-      val rs = (1 to runs).map(_ => materialize(name))
-      val (med, min) =
-        if (rs.forall(_._2))
-          (rs.map(_._1).sorted.apply(rs.length / 2), rs.map(_._1).min)
-        else (-1.0, -1.0)
       // GC delta across the query's timed runs (round-20 verdict item
       // 2): attributes a per-query wall spike to collector pressure vs
       // plan drift from the artifact alone
-      (name, med, min, gcNowMs - g0)
+      try secs(name) = (1 to runs).map(_ => materialize(name))
+      finally gcMs(name) = gcNowMs - g0
     }
+    run.names.map { name =>
+      secs.get(name) match {
+        case Some(rs) => (name, rs.sorted.apply(rs.length / 2), rs.min, gcMs(name))
+        case None => (name, -1.0, -1.0, gcMs(name))
+      }
+    }
+  }
+
+  /** Writes the full JSON line to `bench_out.json` and prints the compact
+    * one. */
+  private def report(sfDir: String, runs: Int, cpus: Int,
+      timings: Seq[(String, Double, Double, Long)]): Unit = {
     val failed = timings.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
     val qs = timings.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -115,7 +131,8 @@ object Bench {
         .mkString("[", ",", "]")
     }
     // "cpus" (round-20 verdict item 7): without it an 8-core artifact
-    // is indistinguishable from a 32-core one
+    // is indistinguishable from a 32-core one; taken from the session
+    // that ran, so it cannot disagree with it
     val env =
       s""""env":{"cpus":$cpus,"heap_used_mb":${(rt.totalMemory - rt.freeMemory) / (1024 * 1024)},""" +
       s""""heap_max_mb":${rt.maxMemory / (1024 * 1024)},""" +
@@ -142,6 +159,5 @@ object Bench {
       s""""full":"bench_out.json","sf":"$sfDir","runs":$runs,"cpus":$cpus,""" +
       s""""failed":${failed.mkString("[", ",", "]")}}"""
     println(compact)
-    spark.stop()
   }
 }

@@ -1,23 +1,19 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare. Exits 1 naming the queries
-  * that threw: tools/parity.py compares only the result dirs that exist. */
+/** Correctness dump: each catalog query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. Runs in [[SparkEntry.runTool]]
+  * (subset: SPARK_GRAFT_VERIFY_ONLY=name,name). Exits 1 naming the
+  * queries that threw: tools/parity.py compares only the result dirs that
+  * exist. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
-    val spark = graft.core.GraftSession.builder("graft-verify").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val failed = names.filterNot { name =>
-      try {
-        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+    val failed = SparkEntry.runTool("graft-verify", "verify",
+        sys.env.get("SPARK_GRAFT_VERIFY_ONLY"), logLevel = "WARN") { run =>
+      run.each { name =>
+        SparkEntry.queries(name)(run.spark, sfDir).coalesce(1).write
           .mode("overwrite").parquet(s"$outDir/$name")
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        false
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,7 +31,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.length} queries failed: " +
         failed.mkString(", "))

@@ -210,17 +210,6 @@ object EventStreams {
     docs.filter(graft.operators.TextOps.mixKeep(weights, defaultFrac))
       .select(col("doc_id"), col("source"))
 
-  /** F17 streaming twin — temperature sampling as documents ARRIVE:
-    * the per-source rates are pinned driver-side state computed from a
-    * settled corpus snapshot (the IVF-centroid class of state), so the
-    * gate is a pure projection filter — append mode, no state store,
-    * no shuffle — and provably the batch keep decision row for row
-    * (shared [[graft.operators.TextOps.keepByPpm]] builder). */
-  def sampleTemperatureStream(docs: DataFrame,
-      rates: Seq[(String, Long)]): DataFrame =
-    docs.filter(graft.operators.TextOps.keepByPpm(rates))
-      .select(col("doc_id"), col("source"))
-
   /** F10 streaming twin — the Gopher repetition-quality gate as
     * documents ARRIVE: the shared per-row kernel
     * ([[graft.operators.TextOps.repetitionSignalsOf]]) scores each doc,
@@ -258,20 +247,6 @@ object EventStreams {
       .filter(col("stop_ratio") >= col("p50_thr"))
       .select(col("source"), col("doc_id"), col("stop_ratio"), col("p50_thr"))
   }
-
-  /** D8b streaming twin — boilerplate removal as documents ARRIVE: the
-    * boilerplate list comes from a periodic batch election over the
-    * settled corpus ([[graft.operators.Dedup.boilerplateHashes]] —
-    * model-sized, like benchmark grams or IVF centroids) and the live
-    * gate is the SAME per-row split + binary-search probe + reassembly
-    * as the pinned-list batch form (shared builder
-    * [[graft.operators.Dedup.removeBoilerplateWith]]). Stateless
-    * projection, append mode, no state store, no shuffle. */
-  def boilerplateGateStream(docs: DataFrame, sortedHashes: Array[Long],
-      blockWords: Int = 8, delim: String = " "): DataFrame =
-    graft.operators.Dedup.removeBoilerplateWith(docs,
-      graft.operators.Dedup.wordBlockParas(col("text"), blockWords),
-      delim, sortedHashes)
 
   /** B23 streaming twin — LIVE changelog compaction: the identical
     * max-struct election as [[graft.operators.EventOps.latestState]]

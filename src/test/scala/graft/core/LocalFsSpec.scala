@@ -35,8 +35,9 @@ class LocalFsSpec extends AnyFunSuite {
     def side(fs: RawLocalFileSystem, afs: String): T = {
       val c = conf(umask, afs)
       fs.initialize(URI.create("file:///"), c)
-      body(fs, FileContext.getLocalFSFileContext(c),
-        Files.createTempDirectory("graft-localfs"))
+      val dir = Files.createTempDirectory("graft-localfs")
+      try body(fs, FileContext.getLocalFSFileContext(c), dir)
+      finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
     (side(new RawLocalFileSystem, stockAfs), side(new NioRawLocalFileSystem, nioAfs))
   }

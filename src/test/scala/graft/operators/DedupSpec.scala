@@ -151,7 +151,7 @@ class DedupSpec extends SparkSpec {
     // reliable-checkpoint mode (spot-instance deployments) must produce
     // identical clusters, write real checkpoints, AND clean up
     // superseded rounds — only the final labels round may remain
-    val dir = java.nio.file.Files.createTempDirectory("cc_chk").toString
+    val dir = tempDir("cc_chk")
     val prevDir = spark.sparkContext.getCheckpointDir
     val reliable = Dedup.connectedComponents(nodes, pairs,
         checkpointDir = Some(dir)).collect()
@@ -482,7 +482,7 @@ class DedupSpec extends SparkSpec {
   test("indexed incremental clustering (D10 deploy shape) equals the full LSH recompute") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("d10idx").toString
+    val dir = tempDir("d10idx")
     // same bridge fixture as the exact-tier test: fresh 15 merges the
     // two settled clusters through j≈0.951 edges
     def txt(idx: Seq[Int]) = idx.map(i => s"w$i").mkString(" ")
@@ -509,7 +509,7 @@ class DedupSpec extends SparkSpec {
     assert(Seq(2L, 3L, 4L, 15L).forall(id => inc(id) == inc(1L)),
       s"fresh bridge did not merge the settled clusters: $inc")
     // and on the real corpus: the %8 split against the sf0.001 documents
-    val cdir = java.nio.file.Files.createTempDirectory("d10idx_corpus").toString
+    val cdir = tempDir("d10idx_corpus")
     val corpusFresh = pmod(col("doc_id"), lit(8L)) === 7L
     val corpusSettled = t.documents.filter(!corpusFresh)
     TextIndex.build(corpusSettled, cdir)

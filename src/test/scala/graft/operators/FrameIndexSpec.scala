@@ -28,20 +28,20 @@ class FrameIndexSpec extends SparkSpec {
     val fresh = Multimodal.sampledFrames(t).filter(freshSeq === 6L)
     val probe = FrameIndex.dedupBatch(fresh, dir)
     probe.collect()
-    val plan = probe.queryExecution.executedPlan.toString
+    val roots = scanRoots(probe)
     // batch signatures are checkpointed at call time, the settled side
     // is the bands parquet — the executed probe plan reads NO events
     // source at all
-    assert(!plan.contains("events.parquet"),
-      s"probe plan rescans the media source:\n$plan")
-    assert(plan.contains("bands"), s"probe plan does not read the index:\n$plan")
+    assert(!roots.exists(_.getName == "events.parquet"),
+      s"probe plan rescans the media source: $roots")
+    assert(roots.exists(_.getName == "bands"), s"probe plan does not read the index: $roots")
   }
 
   private def frame(bits: Long): Array[Byte] = ImageKernels.bmpEncode(bits)
 
   test("curateKeepers: settled wins at any id; within-batch min-id survives; novel frames pass") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fi_keep").toString
+    val dir = tempDir("graft_fi_keep")
     // settled library: one frame with pattern A at id 500
     FrameIndex.build(Seq((500L, frame(0x0F0FL))).toDF("frame_id", "frame"), dir)
     // batch: id 100 dups settled-500 (smaller id — settled must STILL
@@ -57,7 +57,7 @@ class FrameIndexSpec extends SparkSpec {
 
   test("compact folds batches into base; a crash before the sweep leaves duplicates the probe's distinct folds") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fi_compact").toString
+    val dir = tempDir("graft_fi_compact")
     FrameIndex.build(Seq((1L, frame(0x1111L))).toDF("frame_id", "frame"), dir)
     FrameIndex.appendBatch(Seq((2L, frame(0x2222_0000_FFFFL))).toDF("frame_id", "frame"), 3L, dir)
     // crash seam: base now holds the folded rows AND batch 3 still exists
@@ -85,7 +85,7 @@ class FrameIndexSpec extends SparkSpec {
   test("curateStream: probe-keep-index loop drops cross-batch near-dups (G7b)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_fi_stream").toString
+    val root = tempDir("graft_fi_stream")
     val (dir, keptDir, ckpt) = (s"$root/index", s"$root/kept", s"$root/ckpt")
     FrameIndex.build(Seq((1L, frame(0x1111L))).toDF("frame_id", "frame"), dir)
     val input = org.apache.spark.sql.execution.streaming.runtime

@@ -84,7 +84,7 @@ class IvfSpec extends SparkSpec {
 
   test("prefit index search equals the inline ivf+pq search row for row") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_eq").toString
+    val dir = tempDir("graft_idx_eq")
     VectorIndex.fit(t.embeddings, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -125,8 +125,8 @@ class IvfSpec extends SparkSpec {
       // two indexes fit at different Lloyd budgets: fit cost scales
       // with iters, search cost must NOT — that asymmetry IS the
       // fit/search split
-      val dirA = java.nio.file.Files.createTempDirectory("graft_idx_a").toString
-      val dirB = java.nio.file.Files.createTempDirectory("graft_idx_b").toString
+      val dirA = tempDir("graft_idx_a")
+      val dirB = tempDir("graft_idx_b")
       VectorIndex.fit(t.embeddings, dirA, iters = 1)
       VectorIndex.fit(t.embeddings, dirB, iters = 5)
       val fitJobs = settle()
@@ -162,7 +162,7 @@ class IvfSpec extends SparkSpec {
   test("prefit exact-tier ivf search reaches recall >= 0.6 with zero fit jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_ivf").toString
+    val dir = tempDir("graft_idx_ivf")
     VectorIndex.fit(t.embeddings, dir)
     val fitGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -190,7 +190,7 @@ class IvfSpec extends SparkSpec {
 
   test("exact-tier search scans only the pruned vectors table, never the corpus") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_exact_plan").toString
+    val dir = tempDir("graft_idx_exact_plan")
     VectorIndex.fit(t.embeddings, dir)
     val q = Similarity.withNorm(t.embeddings).filter(col("vec_id") < 3)
     val df = VectorIndex.searchIvfTopK(q, dir)
@@ -220,7 +220,7 @@ class IvfSpec extends SparkSpec {
 
   test("compaction folds streamed batches to one directory per cell, search-identically") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_compact").toString
+    val dir = tempDir("graft_idx_compact")
     val first = t.embeddings.filter(col("vec_id") < 300)
     VectorIndex.fit(first, dir)
     // three "micro-batches" land as three ingest_batch directories
@@ -263,7 +263,7 @@ class IvfSpec extends SparkSpec {
 
   test("crashed compact leaves the in-progress marker; the re-run clears it search-identically") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_crash").toString
+    val dir = tempDir("graft_idx_crash")
     VectorIndex.fit(t.embeddings.filter(col("vec_id") < 350), dir)
     Seq((350L, 420L, 0L), (420L, 500L, 1L)).foreach { case (lo, hi, b) =>
       VectorIndex.appendBatch(
@@ -300,7 +300,7 @@ class IvfSpec extends SparkSpec {
   test("drift report flags shifted-distribution appends, not in-distribution ones") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_drift").toString
+    val dir = tempDir("graft_idx_drift")
     VectorIndex.fit(t.embeddings.filter(col("vec_id") < 400), dir)
     // batch 0: in-distribution — more rows drawn from the same corpus
     VectorIndex.appendBatch(
@@ -329,7 +329,7 @@ class IvfSpec extends SparkSpec {
 
   test("rebalance refits from the artifact's own vectors and heals drift skew") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_rebal").toString
+    val dir = tempDir("graft_idx_rebal")
     VectorIndex.fit(t.embeddings.filter(col("vec_id") < 400), dir)
     VectorIndex.appendBatch(t.embeddings.filter(col("vec_id") >= 400), 0L, dir)
     // the same one-mode drifted batch the drift-report test uses: under
@@ -383,8 +383,8 @@ class IvfSpec extends SparkSpec {
     // simulate the deployment: a long-lived search JVM caches the
     // model, an out-of-process refit rewrites the artifact — the next
     // load must pick up the new generation, not serve the stale cache
-    val dirA = java.nio.file.Files.createTempDirectory("graft_idx_vA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_idx_vB").toString
+    val dirA = tempDir("graft_idx_vA")
+    val dirB = tempDir("graft_idx_vB")
     // both slices keep vec_ids 0..k-1 (the deterministic-init contract)
     // but differ beyond them, so the two fits produce different models
     VectorIndex.fit(t.embeddings.filter(col("vec_id") < 100), dirA, iters = 1)
@@ -415,7 +415,7 @@ class IvfSpec extends SparkSpec {
 
   test("adc-only prefit search scans only the codes table") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_adc").toString
+    val dir = tempDir("graft_idx_adc")
     VectorIndex.fit(t.embeddings, dir)
     val q = Similarity.withNorm(t.embeddings).filter(col("vec_id") < 3)
     val df = VectorIndex.searchAdc(q, dir)
@@ -437,7 +437,7 @@ class IvfSpec extends SparkSpec {
 
   test("incremental append joins the index without refit and is searchable") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_app").toString
+    val dir = tempDir("graft_idx_app")
     val first = t.embeddings.filter(col("vec_id") < 250)
     val rest = t.embeddings.filter(col("vec_id") >= 250)
     VectorIndex.fit(first, dir)
@@ -464,7 +464,7 @@ class IvfSpec extends SparkSpec {
 
   test("prefit search prunes the codes scan to the probed cells") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_prune").toString
+    val dir = tempDir("graft_idx_prune")
     VectorIndex.fit(t.embeddings, dir)
     val q = Similarity.withNorm(t.embeddings).filter(col("vec_id") < 3)
     val df = VectorIndex.searchTopK(t.embeddings, q, dir)
@@ -506,7 +506,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("run registration is idempotent per checkpoint and fails on a namespace collision") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_runs").toString
+    val dir = tempDir("graft_idx_runs")
     val runId = VectorIndex.streamRunId("/tmp/ckpt_a")
     // first registration claims the namespace; a restart of the same
     // stream (same checkpoint) re-registers without error
@@ -530,7 +530,7 @@ class IvfSpec extends SparkSpec {
     // The loser's retry loop must pick up the late payload and arbitrate
     // normally — succeed for the same checkpoint, collision for another —
     // rather than declaring the registration corrupt.
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_runs3").toString
+    val dir = tempDir("graft_idx_runs3")
     val runId = VectorIndex.streamRunId("/tmp/ckpt_race")
     val marker = java.nio.file.Paths.get(
       s"$dir/_runs/run_${java.lang.Long.toHexString(runId >>> 40)}")
@@ -549,7 +549,7 @@ class IvfSpec extends SparkSpec {
     // a registering stream that dies between create and write leaves a
     // 0-byte owner file; without the dedicated check the TRUE owner's
     // restart would forever read as a collision against ''
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_runs2").toString
+    val dir = tempDir("graft_idx_runs2")
     val runId = VectorIndex.streamRunId("/tmp/ckpt_c")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/_runs"))
     java.nio.file.Files.write(

@@ -436,7 +436,7 @@ class SimilaritySpec extends SparkSpec {
   test("index-sourced MMR equals the oracle tier with zero fit jobs (E12 over E5)") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_mmr_idx").toString
+    val dir = tempDir("graft_mmr_idx")
     VectorIndex.fit(t.embeddings, dir)
     val fitJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -661,7 +661,7 @@ class SimilaritySpec extends SparkSpec {
   test("indexed knn-join at full probe equals the brute knn with zero fit jobs (E14b)") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_knn_idx").toString
+    val dir = tempDir("graft_knn_idx")
     VectorIndex.fit(t.embeddings, dir)
     val fitJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {

@@ -11,7 +11,7 @@ import graft.SparkSpec
 class TextIndexSpec extends SparkSpec {
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-text-index-spec").toString
+    tempDir("graft-text-index-spec")
 
   private val isNew = pmod(col("doc_id"), lit(8L)) === 7L
 

@@ -13,7 +13,7 @@ import graft.SparkSpec
 class VectorCurateSpec extends SparkSpec {
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-vec-curate").toString
+    tempDir("graft-vec-curate")
 
   // settled corpus keeps vec_ids 0..439 (fit's deterministic init needs
   // the k lowest ids present); the "new ingest" is the 440..499 tail,

@@ -75,7 +75,7 @@ class BucketingSpec extends SparkSpec {
     // entry must NOT keep serving the old bucketed twins. The gate tag
     // fingerprints the source files, so a rewrite (new len/mtime) yields
     // a new tag → new table names → fresh materialize.
-    val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
+    val dir = tempDir("graft_regen")
     def writeSrc(userCap: Long): Unit = {
       t.events.filter(col("user_id") <= userCap)
         .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -11,16 +11,15 @@ import graft.SparkSpec
   * is redone, and a rebuild sweeps only its own dead generations. */
 class FixturesSpec extends SparkSpec {
 
-  private def delete(dirs: String*): Unit = dirs.map(Paths.get(_)).filter(Files.exists(_))
-    .foreach(Files.walk(_).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_)))
-
   /** Writes the spec's events up to `userCap` as `sf`'s events table. */
   private def writeEvents(sf: String, userCap: Long): Unit =
     t.events.filter(col("user_id") <= userCap)
       .write.mode("overwrite").parquet(s"$sf/events.parquet")
 
+  /** A fresh source dir; it and the fixtures built from it are deleted
+    * after the last test (`SparkSpec.tempDir`). */
   private def source(): String = {
-    val sf = Files.createTempDirectory("graft_fixtures_src").toString
+    val sf = tempDir("graft_fixtures_src")
     writeEvents(sf, 10L)
     sf
   }
@@ -46,19 +45,16 @@ class FixturesSpec extends SparkSpec {
     val after = Layout.materializeDayPartitioned(Tables(spark, sf), sf)
     def ids(dir: String) = spark.read.parquet(dir).select("event_id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    try {
-      assert(after != before, "a rewritten source reused the stale fixture dir")
-      assert(ids(after) == ids(s"$sf/events.parquet"),
-        "the rebuilt fixture must hold the regenerated events")
-    } finally delete(before, after, sf)
+    assert(after != before, "a rewritten source reused the stale fixture dir")
+    assert(ids(after) == ids(s"$sf/events.parquet"),
+      "the rebuilt fixture must hold the regenerated events")
   }
 
   test("an unchanged source returns the same dir without building again") {
     val sf = source()
     builds = 0
     val dir = once(sf)
-    try assert(once(sf) == dir && builds == 1, s"$builds builds")
-    finally delete(dir, sf)
+    assert(once(sf) == dir && builds == 1, s"$builds builds")
   }
 
   test("a build that throws leaves no marker, and the next call rebuilds") {
@@ -66,8 +62,7 @@ class FixturesSpec extends SparkSpec {
     builds = 0
     intercept[IllegalStateException](once(sf, fail = true))
     val dir = once(sf)
-    try assert(builds == 2 && once(sf) == dir && builds == 2, s"$builds builds")
-    finally delete(dir, sf)
+    assert(builds == 2 && once(sf) == dir && builds == 2, s"$builds builds")
   }
 
   test("a rebuild sweeps its dead generation and leaves other sources' fixtures") {
@@ -75,11 +70,9 @@ class FixturesSpec extends SparkSpec {
     val (a1, b1) = (once(a), once(b))
     writeEvents(a, 20L)
     val a2 = once(a)
-    try {
-      assert(a2 != a1)
-      assert(!Files.exists(Paths.get(a1)), "the dead generation was not swept")
-      builds = 0
-      assert(once(b) == b1 && builds == 0, "another source's fixture was swept")
-    } finally delete(a1, a2, b1, a, b)
+    assert(a2 != a1)
+    assert(!Files.exists(Paths.get(a1)), "the dead generation was not swept")
+    builds = 0
+    assert(once(b) == b1 && builds == 0, "another source's fixture was swept")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class FrameRingSpec extends SparkSpec {
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_frame_ring").toString +
+    tempDir("graft_frame_ring") +
       "/store"
 
   private def mkPayload(id: Long): Array[Byte] =
@@ -57,7 +57,7 @@ class FrameRingSpec extends SparkSpec {
         input.toDF().toDF("stream_id", "ts_ms", "frame_id", "tags", "payload"),
         streamDir, maxLen, gap)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("frame_ring_ck").toString)
+        tempDir("frame_ring_ck"))
       .start()
     try {
       input.addData(all.take(3): _*); q.processAllAvailable()
@@ -116,7 +116,7 @@ class FrameRingSpec extends SparkSpec {
     // directory of fMP4 segments ingests through the clip splitter,
     // maintains the bounded per-stream ring, and serves point reads —
     // one query graph from bytes on disk to GetLastFrame
-    val inDir = Files.createTempDirectory("graft_e2e_clips").toString
+    val inDir = tempDir("graft_e2e_clips")
     val storeDir = freshDir()
     def clipOf(id: Long, ts: Long, uid: Long) =
       graft.bmff.Bmff.buildClip(id, ts, uid, id * 3L,
@@ -136,7 +136,7 @@ class FrameRingSpec extends SparkSpec {
         encode(col("value_c").cast("string"), "UTF-8").as("payload"))
     val q = FrameRing.maintainStream(frames, storeDir, maxLen = 2)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_e2e_ck").toString)
+        tempDir("graft_e2e_ck"))
       .start()
     try q.processAllAvailable() finally q.stop()
     // maxLen 2 evicts stream 5's oldest frame; GetLastFrame = newest
@@ -162,9 +162,9 @@ class FrameRingSpec extends SparkSpec {
     // KILLED twice; each restart reuses the checkpoint (the
     // CONTINUATION_TOKEN analog) and consumed segments are deleted
     // between runs, like the reference's drained pipe.
-    val inDir = Files.createTempDirectory("graft_live_clips").toString
+    val inDir = tempDir("graft_live_clips")
     val storeDir = freshDir()
-    val ckDir = Files.createTempDirectory("graft_live_ck").toString
+    val ckDir = tempDir("graft_live_ck")
     val maxLen = 2
     val gap = 300L
     def clipOf(id: Long, ts: Long, uid: Long) =
@@ -308,7 +308,7 @@ class FrameRingSpec extends SparkSpec {
         input.toDF().toDF("stream_id", "ts_ms", "frame_id", "tags", "payload"),
         dir, maxLen = 5, catching = () => catching)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("frame_ring_gate_ck").toString)
+        tempDir("frame_ring_gate_ck"))
       .start()
     try {
       input.addData((1L, 10L, 1L, "a", mkPayload(1L)))

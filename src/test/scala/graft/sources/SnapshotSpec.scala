@@ -18,7 +18,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_snapshot_spec").toString + "/snap"
+    tempDir("graft_snapshot_spec") + "/snap"
 
   private def baseDf(keys: Seq[Long]) = {
     import spark.implicits._
@@ -146,7 +146,7 @@ class SnapshotSpec extends SparkSpec {
         Snapshot.mergeCdc(spark, dir, batch, "k")
       }
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("cdc_ck").toString)
+      .option("checkpointLocation", tempDir("cdc_ck"))
       .start()
     input.addData((1L, 2L, "U", "b1"), (2L, 1L, "U", "x"))
     q.processAllAvailable()

@@ -8,7 +8,7 @@ import graft.SparkSpec
   * writes (the frame-persistence analog, parser.py:483-486). */
 class SourcesSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graft-sources").toString
+  private def tmp(): String = tempDir("graft-sources")
 
   test("csv round-trip with explicit schema") {
     val dir = tmp() + "/csv"

@@ -9,7 +9,7 @@ class VersionedSnapshotSpec extends SparkSpec {
     lit(id).as("event_id"))
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("vsnap").toString + "/t"
+    tempDir("vsnap") + "/t"
 
   private def liveMap(path: String, v: Long): Map[Long, (String, Long)] =
     VersionedSnapshot.readLiveAsOf(spark, path, v)
@@ -239,7 +239,7 @@ class VersionedSnapshotSpec extends SparkSpec {
     val changes = input.toDF().toDF("k", "ts_ms", "event_id", "op", "typ")
       .select(col("k"), struct(col("ts_ms"), col("event_id")).as("ver"),
         col("op"), col("typ"))
-    val ck = java.nio.file.Files.createTempDirectory("vsnap_ck").toString
+    val ck = tempDir("vsnap_ck")
     val q = VersionedSnapshot.applyChangesStream(changes, dir, "k", ck)
     try {
       input.addData((3L, 20L, 2L, "U", "c"), (1L, 20L, 3L, "D", "x"))
@@ -267,7 +267,7 @@ class VersionedSnapshotSpec extends SparkSpec {
     val changes = input.toDF().toDF("k", "ts_ms", "event_id", "op", "typ")
       .select(col("k"), struct(col("ts_ms"), col("event_id")).as("ver"),
         col("op"), col("typ"))
-    val ck = java.nio.file.Files.createTempDirectory("vsnap_crash_ck").toString
+    val ck = tempDir("vsnap_crash_ck")
     // the applyChangesStream sink with a crash injected IN the window
     // the stamp exists to close: the manifest rename (publish) has
     // happened, the micro-batch epoch commit has not

@@ -53,9 +53,9 @@ class KinesisSourceSpec extends graft.SparkSpec {
     // no replay of committed records, no gap — even though the run-1
     // files are gone (the reference's drained pipe).
     import java.nio.file.{Files, Paths}
-    val inDir = Files.createTempDirectory("graft_kin_in").toString
-    val outDir = Files.createTempDirectory("graft_kin_out").toString + "/got"
-    val freshChk = Files.createTempDirectory("graft_kin_chk").toString
+    val inDir = tempDir("graft_kin_in")
+    val outDir = tempDir("graft_kin_out") + "/got"
+    val freshChk = tempDir("graft_kin_chk")
     def writeFrag(i: Int): Unit =
       Files.write(Paths.get(inDir, f"frag$i%05d.mkv"),
         graft.ebml.EbmlFunctions.buildFragment(

@@ -521,8 +521,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import EventStreams.Event
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cdc_e2e").toString + "/state"
+    val dir = tempDir("graft_cdc_e2e") + "/state"
     val input = MemoryStream[Event]
     // the H13b deployment loop: each micro-batch becomes a raw CDC
     // changelog (ver = (ts_ms, event_id), error = tombstone) and is
@@ -539,7 +538,7 @@ class StreamingSpec extends SparkSpec {
       }
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cdc_e2e_ck").toString)
+        tempDir("cdc_e2e_ck"))
       .start()
     // out-of-version-order batches: user 10's final state lands first
     input.addData(Event(5, ts(50), 10, "purchase", 2.0),
@@ -637,8 +636,10 @@ class StreamingSpec extends SparkSpec {
     val batchDf = docs.toDF("doc_id", "source")
     val rates = graft.operators.TextOps.temperatureRates(batchDf, targetFrac = 0.5)
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.sampleTemperatureStream(
-        input.toDF().toDF("doc_id", "source"), rates)
+    // the stream is the batch builder's keepByPpm filter on arriving rows
+    val query = input.toDF().toDF("doc_id", "source")
+      .filter(graft.operators.TextOps.keepByPpm(rates))
+      .select("doc_id", "source")
       .writeStream.format("memory").queryName("temp_stream")
       .outputMode("append").start()
     try {
@@ -791,8 +792,10 @@ class StreamingSpec extends SparkSpec {
     val docs = t.documents.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val input = MemoryStream[(Long, String)]
-    val query = EventStreams.boilerplateGateStream(
-        input.toDF().toDF("doc_id", "text"), hashes)
+    val query = graft.operators.Dedup.removeBoilerplateWith(
+        input.toDF().toDF("doc_id", "text"),
+        graft.operators.Dedup.wordBlockParas(
+          org.apache.spark.sql.functions.col("text"), 8), " ", hashes)
       .writeStream.format("memory").queryName("boiler_stream")
       .outputMode("append").start()
     try {
@@ -957,8 +960,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import graft.operators.{Similarity, VectorIndex}
     val t = graft.sources.Tables(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_idx_ckpt").toString
+    val dir = tempDir("graft_idx_stream")
+    val ckpt = tempDir("graft_idx_ckpt")
     VectorIndex.fit(t.embeddings, dir)
     val baseCount = spark.read.parquet(s"$dir/codes").count()
     // stream in copies of corpus vectors 0-2 under fresh ids
@@ -998,7 +1001,7 @@ class StreamingSpec extends SparkSpec {
     // while a DIFFERENT stream (new checkpoint) appending the same rows
     // lands in its own namespace instead of silently overwriting this
     // one's batch 0 (round-5 advice)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_idx_ckpt2").toString
+    val ckpt2 = tempDir("graft_idx_ckpt2")
     assert(VectorIndex.streamRunId(ckpt2) != VectorIndex.streamRunId(ckpt))
   }
 
@@ -1142,9 +1145,9 @@ class StreamingSpec extends SparkSpec {
   test("directory fragment source resumes from checkpoint like a continuation token") {
     import java.nio.file.{Files, Paths}
     import graft.ebml.EbmlFunctions
-    val inDir = Files.createTempDirectory("graft_frags").toString
-    val chkDir = Files.createTempDirectory("graft_chk").toString
-    val outDir = Files.createTempDirectory("graft_out").toString + "/rates"
+    val inDir = tempDir("graft_frags")
+    val chkDir = tempDir("graft_chk")
+    val outDir = tempDir("graft_out") + "/rates"
     val t0 = 1704067200000L // 2024-01-01 00:00 UTC
     def blob(i: Int, producer: Long): Array[Byte] =
       EbmlFunctions.buildFragment(i.toLong, t0 + i * 60000L, producer, 100L, s"f$i")
@@ -1226,9 +1229,9 @@ class StreamingSpec extends SparkSpec {
   test("consumer app e2e: split, dedup replays, persist with retention, resume") {
     import java.nio.file.{Files, Paths}
     import graft.ebml.{Ebml, EbmlFunctions}
-    val inDir = Files.createTempDirectory("graft_app_in").toString
-    val chkDir = Files.createTempDirectory("graft_app_chk").toString
-    val storeDir = Files.createTempDirectory("graft_app_store").toString + "/frames"
+    val inDir = tempDir("graft_app_in")
+    val chkDir = tempDir("graft_app_chk")
+    val storeDir = tempDir("graft_app_store") + "/frames"
     val t0 = 1704067200000L // 2024-01-01 00:00 UTC
     def blob(i: Int): Array[Byte] =
       EbmlFunctions.buildFragment(i.toLong, t0 + i * 60000L, 10L, 100L, s"f$i")
@@ -1257,9 +1260,9 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.metrics.source.CodegenMetrics
     import graft.ebml.{Ebml, EbmlFunctions}
-    val inDir = Files.createTempDirectory("graft_codegen_in").toString
-    val chkDir = Files.createTempDirectory("graft_codegen_chk").toString
-    val storeDir = Files.createTempDirectory("graft_codegen_store").toString + "/frames"
+    val inDir = tempDir("graft_codegen_in")
+    val chkDir = tempDir("graft_codegen_chk")
+    val storeDir = tempDir("graft_codegen_store") + "/frames"
     val t0 = 1704067200000L // 2024-01-01 00:00 UTC
     def blob(i: Int): Array[Byte] =
       EbmlFunctions.buildFragment(i.toLong, t0 + i * 60000L, 10L, 100L, s"f$i")
@@ -1286,7 +1289,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val storeDir = Files.createTempDirectory("graft_idem").toString + "/frames"
+    val storeDir = tempDir("graft_idem") + "/frames"
     val batch = Seq((1L, "00001"), (2L, "00001"), (3L, "00002"))
       .toDF("fragment_number", "bucket")
     ConsumerApp.persistBatch(batch, batchId = 7L, storeDir, keepNewest = 10)
@@ -1518,9 +1521,9 @@ class StreamingSpec extends SparkSpec {
 
   test("fMP4 clip ingestion: segment files split at ftyp boundaries, typed fields stream out statelessly (B13b)") {
     import java.nio.file.{Files, Paths}
-    val inDir = Files.createTempDirectory("graft_clips_in").toString
-    val outDir = Files.createTempDirectory("graft_clips_out").toString + "/p"
-    val chkDir = Files.createTempDirectory("graft_clips_chk").toString
+    val inDir = tempDir("graft_clips_in")
+    val outDir = tempDir("graft_clips_out") + "/p"
+    val chkDir = tempDir("graft_clips_chk")
     def clipOf(id: Long, uid: Long) =
       graft.bmff.Bmff.buildClip(id, id * 1000L, uid, id * 7L,
         s"p$id".getBytes("UTF-8"))
