@@ -147,7 +147,7 @@ private[graft] object OracleSql {
     sigs AS (SELECT doc_id, unnest($folds) AS sig, unnest(range(4)) AS band FROM sigl)"""
   }
 
-  /** decontaminate_fuzzy: the EXACT output of TextOps.decontaminateFuzzy
+  /** decontaminate_fuzzy: the EXACT output of TextOps.decontaminateFuzzyAgainst
     * — minhash band signatures over ALL documents, candidates split by
     * the F6 rule (corpus % 100 <> 0 vs benchmark % 100 = 0), DISTINCT
     * per pair (= the first-agreeing-band election), verified at exact
@@ -611,7 +611,7 @@ private[graft] object OracleSql {
     SELECT source, rn, doc_id FROM r WHERE rn <= 10 ORDER BY source, rn"""
   }
 
-  /** shuffle_shards: the EXACT output of TextOps.shuffleShards — shard
+  /** shuffle_shards: the EXACT output of TextOps.shuffleShardsOf — shard
     * = mix64(doc_id) mod 8 (unsigned modulo ≡ Spark's signed pmod
     * because 8 divides 2^64), per-shard sequence by SIGNED mix64 order
     * (unsigned order over sign-flipped values), doc_id tie-break. */
@@ -665,7 +665,7 @@ private[graft] object OracleSql {
     FROM h ORDER BY doc_id"""
   }
 
-  /** mix_token_budget: the EXACT output of TextOps.mixTokenBudget —
+  /** mix_token_budget: the EXACT output of TextOps.mixTokenBudgetOf —
     * per-source running whitespace-token total in signed-mix64 priority
     * order (doc_id tie-break), keep while the inclusive total fits the
     * source's budget (src0 100000 / src1 800 / default 400). */

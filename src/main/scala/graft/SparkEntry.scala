@@ -20,6 +20,13 @@ object SparkEntry {
 
   private def tables(s: SparkSession, dir: String): Tables = Tables(s, dir)
 
+  /** The decontamination split over the test corpus: every 100th
+    * document plays the benchmark set, the rest are the corpus. */
+  private def corpusDocs(t: Tables): DataFrame =
+    t.documents.filter(col("doc_id") % 100L =!= 0L)
+  private def benchDocs(t: Tables): DataFrame =
+    t.documents.filter(col("doc_id") % 100L === 0L)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Analytics.q3ShippingPriority(tables(spark, "/root/testdata/sf0.001"))
@@ -370,14 +377,17 @@ object SparkEntry {
   lazy val catalog: Seq[Query] = Seq(
     // the k-means fixpoint itself, replayed in DuckDB — possible since
     // the round-6 canonical-order reduction made the fit bit-reproducible
-    Query("ivf_assign", (s, d) => Similarity.ivfAssign(tables(s, d)), OracleSql.ivfAssign),
+    Query("ivf_assign", (s, d) =>
+      Similarity.ivfAssignVecs(tables(s, d).embeddings, k = 8, iters = 3),
+      OracleSql.ivfAssign),
     // full IVF search — hash-exact since round 6: the canonical fit
     // makes routing + in-cell ranking replayable (OracleSql.ivfTopK)
     Query("ivf_topk", (s, d) => Similarity.ivfTopK(tables(s, d)), OracleSql.ivfTopK),
     // E14: every vector's top-k neighbors via the cell-keyed shuffle
     // join (the all-rows form of IVF search)
     // oracle: the fit + both-side cell assignment + cell join + top-3
-    Query("knn_join", (s, d) => Similarity.knnJoin(tables(s, d)), OracleSql.knnJoin),
+    Query("knn_join", (s, d) => Similarity.knnJoinOf(tables(s, d).embeddings,
+      k = 3, kCells = 8, nprobe = 2, iters = 3), OracleSql.knnJoin),
     // E14b: the deploy-shape sized form — kCells from the occupancy
     // rule (⌈n/128⌉, one count job), so candidate volume stays linear
     // as the corpus grows; the fixed-kCells fixture above stays as the
@@ -387,10 +397,12 @@ object SparkEntry {
     // SF itself — sf0.01's 500 vectors give 4 cells (the oracle's
     // sfguard pins and verifies it), sf0.1's 2,000 give 16 — so the
     // correctness gate, not just the spec, distinguishes the paths
-    Query("knn_join_sized", (s, d) =>
-      Similarity.knnJoinSized(tables(s, d).embeddings, k = 3, nprobe = 2,
-        iters = 3, targetOccupancy = 128L),
-      OracleSql.knnJoinSized),
+    Query("knn_join_sized", (s, d) => {
+      val e = tables(s, d).embeddings
+      Similarity.knnJoinOf(e, k = 3,
+        kCells = Similarity.kCellsFor(e.count(), targetOccupancy = 128L),
+        nprobe = 2, iters = 3)
+    }, OracleSql.knnJoinSized),
     // E15: metadata-filtered top-k — the predicate applies BEFORE the
     // ranking (pre-filter semantics), pushed into the corpus scan
     // oracle: ivf_topk's replay with the label predicate on the data side
@@ -465,18 +477,32 @@ object SparkEntry {
       OracleSql.dedupEmbedLsh),
     Query("sample_k_per_source", (s, d) => TextOps.sampleKPerSource(tables(s, d)),
       OracleSql.sampleKPerSource),
-    Query("shuffle_shards", (s, d) => TextOps.shuffleShards(tables(s, d)), OracleSql.shuffleShards),
+    Query("shuffle_shards", (s, d) =>
+      TextOps.shuffleShardsOf(tables(s, d).documents, nShards = 8),
+      OracleSql.shuffleShards),
     Query("split_assign", (s, d) => TextOps.splitAssign(tables(s, d)), OracleSql.splitAssign),
-    Query("profile_documents", (s, d) => Analytics.profileDocuments(tables(s, d)),
+    Query("profile_documents", (s, d) =>
+      Analytics.profileTableOf(tables(s, d).documents,
+        Seq("doc_id", "text", "lang", "source", "n_chars"),
+        hashDistinct = Set("text")),
       OracleSql.profileDocuments),
-    Query("mix_token_budget", (s, d) => TextOps.mixTokenBudget(tables(s, d)),
+    // src0's budget never binds (take-all), src1's binds tightly, the
+    // default binds everywhere: all three regimes in one query
+    Query("mix_token_budget", (s, d) =>
+      TextOps.mixTokenBudgetOf(tables(s, d).documents,
+        Map("src0" -> 100000L, "src1" -> 800L), defaultBudget = 400L),
       OracleSql.mixTokenBudget),
-    Query("decontaminate_fuzzy", (s, d) => TextOps.decontaminateFuzzy(tables(s, d)),
+    // the F6 split (every 100th doc plays the benchmark set), fuzzy probe
+    Query("decontaminate_fuzzy", (s, d) => {
+      val t = tables(s, d)
+      TextOps.decontaminateFuzzyAgainst(corpusDocs(t), benchDocs(t),
+        threshold = 0.9)
+    },
       OracleSql.decontaminateFuzzy),
     // F16: the same stop_ratio as qualityBody, per-source rank-selected
     // median threshold (value at floor((n-1)/2)+1 in (score, doc_id)
     // order), filter on VALUE so median ties stay in
-    Query("quality_gate", (s, d) => TextOps.qualityGate(tables(s, d)),
+    Query("quality_gate", (s, d) => TextOps.qualityGateOf(tables(s, d).documents),
       """WITH d AS (SELECT doc_id, source,
           regexp_extract_all(lower(text),'[a-z]+') AS toks FROM documents),
         q AS (SELECT doc_id, source,
@@ -518,7 +544,8 @@ object SparkEntry {
         WHERE stop_ratio >= p50_thr ORDER BY r.source, doc_id"""),
     // scale path: LSH-candidate edges + exact-kernel verify; DedupSpec
     // asserts cluster equality with dedup_clusters at sf0.001
-    Query("dedup_clusters_lsh", (s, d) => Dedup.dedupClustersLsh(tables(s, d)),
+    Query("dedup_clusters_lsh", (s, d) => Dedup.clusterDocsLsh(
+      tables(s, d).documents, threshold = 0.95, maxIters = 50),
       OracleSql.dedupClustersLsh),
     // embedding clustering over the LSH-verified pairs; DedupSpec
     // asserts it refines the brute-force clustering
@@ -531,13 +558,14 @@ object SparkEntry {
     // per-source excess loss under the α-weighted mixture unigram LM
     // oracle: the 3-round deterministic DoReMi fixpoint replayed as
     // chained CTEs — same quantization points, same floor divisions
-    Query("doremi_mixture", (s, d) => TextOps.doremiWeights(tables(s, d)),
+    Query("doremi_mixture", (s, d) => TextOps.doremiWeightsOf(
+      tables(s, d).documents, iters = 3, capU = 20000000L),
       OracleSql.doremiWeights(3, 20000000L)),
     // F33: count-of-counts spectrum + Good-Turing adjusted counts —
     // the OOV-mass / vocabulary-growth audit
     // oracle: spectrum + cumulative permilles + raw Good-Turing r* — the
     // r+1 row joined explicitly (the spectrum is not contiguous)
-    Query("vocab_spectrum", (s, d) => TextOps.vocabSpectrum(tables(s, d)),
+    Query("vocab_spectrum", (s, d) => TextOps.vocabSpectrumOf(tables(s, d).documents),
       """WITH v AS (SELECT word, count(*)::BIGINT AS r FROM (
             SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
             FROM documents) GROUP BY word),
@@ -560,7 +588,8 @@ object SparkEntry {
     // distinct vocabularies)
     // oracle: the bigram fixpoint replayed the same way — pooled
     // transition masses, context totals from the clamped masses
-    Query("doremi_mixture2", (s, d) => TextOps.doremiWeights2(tables(s, d)),
+    Query("doremi_mixture2", (s, d) => TextOps.doremiWeights2Of(
+      tables(s, d).documents, iters = 3, capU = 20000000L),
       OracleSql.doremiWeights2(3, 20000000L)),
     Query("ann_lsh_topk", (s, d) => Similarity.annLshTopK(tables(s, d)), OracleSql.annLshTopK),
     // E13: the eval loop itself — recall@k/MRR/nDCG of the LSH arm
@@ -759,7 +788,7 @@ object SparkEntry {
     // oracle: the C10 exact rank rule for both medians; the 3·1.4826·MAD
     // Gaussian-consistent threshold as the exact integer comparison
     // dev·10000 > 44478·mad (no float threshold on either engine)
-    Query("mad_outliers", (s, d) => Analytics.madOutliers(tables(s, d)),
+    Query("mad_outliers", (s, d) => Analytics.madOutliersOf(tables(s, d).events),
       s"""WITH s AS (SELECT event_type, $centsValue AS v_c, event_id FROM events),
         w1 AS (SELECT event_type, v_c,
           row_number() OVER (PARTITION BY event_type ORDER BY v_c, event_id) AS rn,
@@ -1174,7 +1203,9 @@ object SparkEntry {
     // BOTH engines because Spark's pmod is non-negative while DuckDB's
     // % follows the dividend's sign) — the sample itself is hash-exact,
     // not just its size
-    Query("mix_sample", (s, d) => TextOps.mixSampleDocs(tables(s, d)),
+    // the mixing query shape: all of src0, half of src1, 10% of the rest
+    Query("mix_sample", (s, d) => TextOps.mixSample(tables(s, d).documents,
+      Map("src0" -> 1.0, "src1" -> 0.5), defaultFrac = 0.1),
       """SELECT doc_id, source FROM documents
         WHERE ((abs(doc_id) % 1000000007) * 2654435761) % 1000000007 % 1000000 <
           CASE WHEN source = 'src0' THEN 1000000
@@ -1186,7 +1217,7 @@ object SparkEntry {
     // Z folds sqrt(n) in source-name order from 0.0 (list_reduce over
     // an ORDER BY source list), and every mul/div runs in the Scala
     // order — then the same Knuth-hash keep decision as mix_sample
-    Query("sample_temperature", (s, d) => TextOps.sampleTemperatureDocs(tables(s, d)),
+    Query("sample_temperature", (s, d) => TextOps.sampleTemperature(tables(s, d).documents),
       """WITH c AS (SELECT source, count(*)::BIGINT AS n
           FROM documents GROUP BY source),
         z AS (SELECT
@@ -1208,7 +1239,7 @@ object SparkEntry {
     // D12: per-source doc/token savings under the D1 keeper election
     // oracle: keeper election replayed by RAW text (collision-proof, the
     // D1 rule), savings as floor-division permille
-    Query("dedup_savings", (s, d) => Dedup.dedupSavings(tables(s, d)),
+    Query("dedup_savings", (s, d) => Dedup.dedupSavingsOf(tables(s, d).documents),
       """WITH k AS (SELECT doc_id, source,
           cast(len(regexp_extract_all(text,'\S+')) as bigint) AS n_tok,
           CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY text)
@@ -1229,7 +1260,8 @@ object SparkEntry {
     // order), same space-joined reassembly — the oracle elects by raw
     // paragraph text where Spark elects by the 128-bit hash, so any
     // hash collision at test SF fails this gate loudly (the D1 rule)
-    Query("dedup_paragraph", (s, d) => Dedup.dedupParagraphsBlocks(tables(s, d)),
+    Query("dedup_paragraph", (s, d) => Dedup.dedupParagraphs(tables(s, d).documents,
+      Dedup.wordBlockParas(col("text"), 8), " "),
       """WITH w AS (SELECT doc_id,
           unnest(string_split(text, ' ')) AS word,
           generate_subscripts(string_split(text, ' '), 1) AS i
@@ -1249,7 +1281,8 @@ object SparkEntry {
     // D8b: same 8-word blocks; the oracle elects boilerplate by raw
     // paragraph text (count of DISTINCT docs >= 3) where Spark elects by
     // the 128-bit hash — a collision at test SF fails loudly (D1 rule)
-    Query("boilerplate_removal", (s, d) => Dedup.removeBoilerplateBlocks(tables(s, d)),
+    Query("boilerplate_removal", (s, d) => Dedup.removeBoilerplate(tables(s, d).documents,
+      Dedup.wordBlockParas(col("text"), 8), " ", minDocs = 3),
       """WITH w AS (SELECT doc_id,
           unnest(string_split(text, ' ')) AS word,
           generate_subscripts(string_split(text, ' '), 1) AS i
@@ -1268,7 +1301,9 @@ object SparkEntry {
           coalesce(string_agg(para, ' ' ORDER BY idx)
             FILTER (WHERE NOT dropped), '') AS text
         FROM r GROUP BY doc_id ORDER BY doc_id"""),
-    Query("dedup_jaccard_pairs", (s, d) => Dedup.jaccardPairs(tables(s, d)), JaccardPairsSql),
+    Query("dedup_jaccard_pairs", (s, d) =>
+      Dedup.jaccardPairsOf(tables(s, d).documents, threshold = 0.95),
+      JaccardPairsSql),
     // D13: precision/recall census of the LSH candidate stage vs the
     // exact-Jaccard truth — the banding-layout tuning number
     // oracle: both stages replayed as nested derived tables, full-outer
@@ -1342,7 +1377,7 @@ object SparkEntry {
     // oracle: ln is taken once per DISTINCT word and quantized to integer
     // micro-nats immediately; per-doc arithmetic is exact int64 + the
     // same two-division 4dp-rounded average as the Spark side
-    Query("lm_quality", (s, d) => TextOps.lmQuality(tables(s, d)),
+    Query("lm_quality", (s, d) => TextOps.lmQualityOf(tables(s, d).documents),
       """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word FROM documents),
         v AS (SELECT word, count(*) AS n_w FROM tok GROUP BY word),
         tot AS (SELECT cast(sum(n_w) as bigint) AS n_total FROM v),
@@ -1355,7 +1390,10 @@ object SparkEntry {
     // token is in the training tables, so the backoff branches are
     // legitimately absent here (the spec exercises them on an external
     // score set); ln once per distinct (bi)gram, micro-nat quantized
-    Query("lm_quality2", (s, d) => TextOps.lmQuality2(tables(s, d)), Lm2Sql),
+    Query("lm_quality2", (s, d) => {
+      val t = tables(s, d)
+      TextOps.lmQuality2Of(t.documents, t.documents)
+    }, Lm2Sql),
     // F19b deploy split: train on the F18 train cohort, score the
     // held-out docs — the backoff tiers (unseen bigram → α·unigram,
     // OOV → α/N) are EXERCISED by the hash gate, not just the spec
@@ -1365,14 +1403,19 @@ object SparkEntry {
         docs.filter(col("doc_id") % 10 === 0))
     }, Lm2HoldoutSql),
     // F19d trigram stupid-backoff LM (one order past F19b)
-    Query("lm_quality3", (s, d) => TextOps.lmQuality3(tables(s, d)), Lm3Sql),
+    Query("lm_quality3", (s, d) => {
+      val t = tables(s, d)
+      TextOps.lmQuality3Of(t.documents, t.documents)
+    }, Lm3Sql),
     // F29 deterministic hashed TF-IDF text->vector featurizer
-    Query("embed_docs", (s, d) => TextOps.embedDocs(tables(s, d)), OracleSql.embedDocs(64)),
+    Query("embed_docs", (s, d) =>
+      TextOps.embedDocsLong(tables(s, d).documents, dim = 64),
+      OracleSql.embedDocs(64)),
     // F29 ∘ E1: semantic search over raw text end to end
     Query("embed_search_topk", (s, d) => TextOps.embedSearchTopK(tables(s, d)),
       OracleSql.embedSearch(64, 5, 50)),
     // E11: per-label embedding-space cohesion monitor
-    Query("embed_label_stats", (s, d) => Similarity.embedStats(tables(s, d)),
+    Query("embed_label_stats", (s, d) => Similarity.embedStatsOf(tables(s, d).embeddings),
       OracleSql.embedStats(64)),
     // F19c: CCNet terciles over the F19b score — ntile(3) on the total
     // (avg_nll4, doc_id) order per source; standard-SQL ntile sizing is
@@ -1385,7 +1428,7 @@ object SparkEntry {
         SELECT doc_id, source, avg_nll4,
           CASE WHEN t = 1 THEN 'head' WHEN t = 2 THEN 'middle' ELSE 'tail' END AS bucket
         FROM j ORDER BY doc_id"""),
-    Query("bpe_pair_counts", (s, d) => TextOps.bpePairCounts(tables(s, d)),
+    Query("bpe_pair_counts", (s, d) => TextOps.bpePairCountsOf(tables(s, d).documents, k = 20),
       """WITH tok AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word FROM documents),
         wf AS (SELECT word, count(*) AS n FROM tok GROUP BY word),
         p AS (SELECT substr(word, cast(i as integer), 2) AS pair, n FROM
@@ -1396,22 +1439,31 @@ object SparkEntry {
     // over a substring candidate vocabulary, then per-doc encode
     // oracle: the unigram-LM Viterbi-EM replay (generated per-round DP
     // unroll + backtrack + re-election CTEs — OracleSql.unigramTokenizer)
-    Query("unigram_tokenizer", (s, d) => TextOps.unigramTokenizer(tables(s, d)),
+    Query("unigram_tokenizer", (s, d) => TextOps.unigramTokenizerOf(tables(s, d).documents,
+      vocabMulti = 24, rounds = 2),
       OracleSql.unigramTokenizer(24, 2)),
     // F20b: generated k-round merge-loop replay (elect / re-segment /
     // recount over the vocab CTEs — OracleSql.bpeMerges)
-    Query("bpe_merges", (s, d) => TextOps.bpeMerges(tables(s, d)), OracleSql.bpeMerges(8)),
+    Query("bpe_merges", (s, d) =>
+      TextOps.bpeMergesOf(tables(s, d).documents, k = 8), OracleSql.bpeMerges(8)),
     // F20c: the same generated training chain, applied as the encoder
-    Query("bpe_tokenize", (s, d) => TextOps.bpeTokenize(tables(s, d)), OracleSql.bpeTokenize(8)),
+    Query("bpe_tokenize", (s, d) => {
+      val t = tables(s, d)
+      TextOps.bpeTokenizeOf(t.documents, t.documents, k = 8)
+    }, OracleSql.bpeTokenize(8)),
     // F27: per-source OOV rate + token inflation under the split-trained
     // vocabulary (OOV prices at the base-alphabet character fallback)
-    Query("vocab_coverage", (s, d) => TextOps.vocabCoverage(tables(s, d)),
+    Query("vocab_coverage", (s, d) => {
+      val t = tables(s, d)
+      TextOps.vocabCoverageOf(t.documents.filter(col("doc_id") % 10 =!= 0),
+        t.documents, k = 8)
+    },
       OracleSql.vocabCoverage(8)),
     // F28: per-source Jensen-Shannon drift vs the rest of the corpus
     // oracle: mixture ratios are exact integer rationals in HUGEINT; ln
     // once per present (word, source) pair, quantized to micro-nats;
     // absent words enter via the closed-form ln2 remainder
-    Query("source_drift", (s, d) => TextOps.sourceDrift(tables(s, d)),
+    Query("source_drift", (s, d) => TextOps.sourceDriftOf(tables(s, d).documents),
       """WITH toks AS (SELECT source, unnest(regexp_extract_all(lower(text),'[a-z]+')) AS word FROM documents),
         cs AS (SELECT word, source, cast(count(*) as bigint) AS c FROM toks GROUP BY 1, 2),
         wt AS (SELECT word, cast(sum(c) as bigint) AS cw FROM cs GROUP BY 1),
@@ -1463,7 +1515,8 @@ object SparkEntry {
     // oracle: chunk starts are 0, stride, 2·stride, … < n_tokens; slice is
     // clamped at the document tail on both engines — all exact integer
     // arithmetic over the shared [a-z]+ tokenizer
-    Query("chunk_docs", (s, d) => TextOps.chunkDocs(tables(s, d)),
+    Query("chunk_docs", (s, d) =>
+      TextOps.chunkDocsOf(tables(s, d).documents, size = 64, stride = 48),
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents),
         s AS (SELECT doc_id, w, unnest(range(0, len(w), 48)) AS start_tok
           FROM toks WHERE len(w) > 0)
@@ -1478,12 +1531,14 @@ object SparkEntry {
     // rational 22·tf·L/(10·tf·L+3·L+9·len·N) carried in HUGEINT
     // (decimal(38,0) on the Spark side); ln once per query term,
     // quantized to micro-nats; per-doc score = exact int sum
-    Query("bm25_topk", (s, d) => TextOps.bm25TopK(tables(s, d)), bm25Sql),
+    Query("bm25_topk", (s, d) => TextOps.bm25TopKOf(tables(s, d).documents,
+      Seq("stream", "vector", "customer"), k = 10), bm25Sql),
     // F32: hybrid retrieval — BM25 ⊕ featurized-embedding ranks fused
     // by exact integer reciprocal rank (RRF); no float in the output
     // oracle: both arms replayed (renamed-CTE BM25 chain + featurizer
     // query-vector chain) and fused by floor-divided integer RRF
-    Query("hybrid_search_topk", (s, d) => TextOps.hybridSearchTopK(tables(s, d)),
+    Query("hybrid_search_topk", (s, d) => TextOps.hybridSearchTopKOf(tables(s, d).documents,
+      Seq("stream", "vector", "customer"), dim = 64, n = 20, k = 10, kRrf = 60L),
       OracleSql.hybridSearch(
       Seq("stream", "vector", "customer"), 64, 20, 10, 60L)),
     // F22b: the same retrieval served from the persisted inverted index
@@ -1512,7 +1567,7 @@ object SparkEntry {
     // the oracle censuses spans by RAW text where Spark groups by
     // the 128-bit hash (the D1 collision-detection rule); same 0-based
     // offsets, same running-max interval union
-    Query("dedup_spans", (s, d) => Dedup.spanCoverage(tables(s, d)),
+    Query("dedup_spans", (s, d) => Dedup.spanCoverageOf(tables(s, d).documents, k = 5),
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents),
         g AS (SELECT doc_id, s, array_to_string(w[s+1 : s+5], ' ') AS gram
           FROM (SELECT doc_id, w, unnest(range(0, len(w) - 5 + 1)) AS s FROM toks WHERE len(w) >= 5)),
@@ -1533,7 +1588,7 @@ object SparkEntry {
     // rule), elects the global first occurrence by (doc_id, s), marks
     // tokens under any non-first hit interval, and reassembles the
     // survivors per position — cut semantics replayed end to end
-    Query("dedup_spans_removal", (s, d) => Dedup.spanRemoval(tables(s, d)),
+    Query("dedup_spans_removal", (s, d) => Dedup.spanRemovalOf(tables(s, d).documents, k = 5),
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS w FROM documents),
         g AS (SELECT doc_id, s, array_to_string(w[s+1 : s+5], ' ') AS gram
           FROM (SELECT doc_id, w, unnest(range(0, len(w) - 5 + 1)) AS s FROM toks WHERE len(w) >= 5)),
@@ -1585,10 +1640,12 @@ object SparkEntry {
     Query("ann_brute_topk", (s, d) => Similarity.annBruteTopK(tables(s, d)), AnnBruteSql),
     // E16: contrastive pair mining — nearest same-label positive +
     // k hardest different-label negatives per anchor
-    Query("contrastive_pairs", (s, d) => Similarity.contrastivePairs(tables(s, d)),
+    Query("contrastive_pairs", (s, d) => Similarity.contrastivePairsOf(tables(s, d).embeddings,
+      col("vec_id") < 10, k = 5),
       ContrastivePairsSql),
     // E12: MMR diverse re-ranking over the E1 candidate tier
-    Query("ann_mmr_topk", (s, d) => Similarity.mmrTopK(tables(s, d)), OracleSql.mmrTopK(20, 5)),
+    Query("ann_mmr_topk", (s, d) => Similarity.mmrTopKOf(tables(s, d).embeddings, m = 20, n = 5,
+      lam = 0.7, lamBar = 0.3), OracleSql.mmrTopK(20, 5)),
     // E10: kNN majority-vote label propagation (held-out = vec_id%10==0)
     // oracle: the E1 exact-cosine CTE over the held-out/labeled split, then
     // a per-(query,label) vote with (votes desc, best rank, label) ties
@@ -1617,7 +1674,8 @@ object SparkEntry {
     // C10d: the oracle runs the EXACT count (capacity 1024 >= the
     // corpus's 31 distinct terms puts Misra-Gries in its exact regime);
     // ties (count desc, term asc) on both sides
-    Query("approx_counts_cms", (s, d) => TextOps.approxCountsCms(tables(s, d)),
+    Query("approx_counts_cms", (s, d) => TextOps.approxCountsCmsOf(
+      tables(s, d).documents, d = 4, w = 64, probes = TextOps.StopWords),
       OracleSql.approxCountsCms),
     Query("approx_top_terms", (s, d) => TextOps.approxTopTerms(tables(s, d)),
       """SELECT rank, term, cnt FROM (
@@ -1630,7 +1688,8 @@ object SparkEntry {
         WHERE rank <= 20 ORDER BY rank"""),
     // F13: same greedy concat-order rule — bin = integer-div of the
     // running token total BEFORE the doc, per source, doc_id order
-    Query("pack_sequences", (s, d) => TextOps.packSequences(tables(s, d)),
+    Query("pack_sequences", (s, d) =>
+      TextOps.packSequencesOf(tables(s, d).documents, budget = 512L),
       """WITH d AS (SELECT source, doc_id,
           cast(len(regexp_extract_all(text, '\S+')) AS bigint) AS n_tokens
         FROM documents),
@@ -1780,7 +1839,10 @@ object SparkEntry {
     // broadcast gram-membership probe, corpus never shuffles
     // oracle joins on gram STRINGS; the Spark side joins on 64-bit gram
     // hashes — a collision at test SF would break this hash gate loudly
-    Query("decontaminate", (s, d) => TextOps.decontaminate(tables(s, d)),
+    Query("decontaminate", (s, d) => {
+      val t = tables(s, d)
+      TextOps.decontaminateAgainst(corpusDocs(t), benchDocs(t), n = 3)
+    },
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text),'[a-z]+') AS ws FROM documents),
         grams AS (SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS g
           FROM toks, UNNEST(range(1, len(ws) - 1)) AS t(i)),
@@ -1795,7 +1857,10 @@ object SparkEntry {
     // negatives; the exact join kills false positives), so the oracle
     // is the plain exact-join decontamination — equality with it IS
     // the contract
-    Query("decontaminate_bloom", (s, d) => TextOps.decontaminateBloom(tables(s, d)),
+    Query("decontaminate_bloom", (s, d) => {
+      val t = tables(s, d)
+      TextOps.decontaminateBloomAgainst(corpusDocs(t), benchDocs(t), n = 3)
+    },
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text),'[a-z]+') AS ws FROM documents),
         grams AS (SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS g
           FROM toks, UNNEST(range(1, len(ws) - 1)) AS t(i)),
@@ -1807,7 +1872,11 @@ object SparkEntry {
     // F6c: per-doc DISTINCT gram totals and hit counts; ratio is ONE
     // double division of exact ints (tfidf rule) and the verdict an
     // exact integer cross-multiplication — no double threshold anywhere
-    Query("decontaminate_ratio", (s, d) => TextOps.decontaminateRatio(tables(s, d)),
+    Query("decontaminate_ratio", (s, d) => {
+      val t = tables(s, d)
+      TextOps.decontaminateRatioAgainst(corpusDocs(t), benchDocs(t), n = 3,
+        pct = 50)
+    },
       """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text),'[a-z]+') AS ws FROM documents),
         grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS g
           FROM toks, UNNEST(range(1, len(ws) - 1)) AS t(i)),

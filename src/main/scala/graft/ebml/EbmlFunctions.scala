@@ -30,10 +30,13 @@ object EbmlFunctions {
   val UserIdTag = "GRAFT_USER_ID"
   val ValueCentsTag = "GRAFT_VALUE_CENTS"
 
-  /** Composed-writer reference form of [[buildFragment]] — the readable
-    * definition of the layout; kept for the spec's byte-identity pin. */
+  /** Composed-writer reference form of [[buildFragment]] and, given a
+    * `track` (CodecID, CodecPrivate), of [[buildFragmentTrack]] — the
+    * readable definition of the layout; kept for the spec's
+    * byte-identity pins. */
   def buildFragmentComposed(eventId: Long, tsMs: Long, userId: Long,
-      valueC: Long, props: String): Array[Byte] = {
+      valueC: Long, props: String,
+      track: Option[(String, Array[Byte])] = None): Array[Byte] = {
     import Ebml._
     val header = element(0x1a45dfa3L, concat(
       element(0x4282L, utf8("matroska")),
@@ -47,10 +50,18 @@ object EbmlFunctions {
       simpleTag(ContinuationToken, s"tok-$eventId"),
       simpleTag(UserIdTag, userId.toString),
       simpleTag(ValueCentsTag, valueC.toString))))
+    val tracks = track.fold(Array.emptyByteArray) { case (codecId, priv) =>
+      element(0x1654ae6bL, element(0xaeL, concat(
+        element(0xd7L, uintBytes(1L, 1)),
+        element(0x73c5L, uintBytes(userId, 8)),
+        element(0x83L, uintBytes(if (codecId.startsWith("A_")) 2L else 1L, 1)),
+        element(0x86L, utf8(codecId)),
+        element(0x63a2L, priv))))
+    }
     val cluster = element(0x1f43b675L, concat(
       element(0xe7L, uintBytes(tsMs, 8)),
       simpleBlock(utf8(props))))
-    concat(header, element(0x18538067L, concat(tags, cluster)))
+    concat(header, element(0x18538067L, concat(tags, tracks, cluster)))
   }
 
   /** Single-buffer encode: every element size is precomputed bottom-up
@@ -67,6 +78,28 @@ object EbmlFunctions {
     * codec bytes, not JSON); identical layout otherwise, so every
     * parser/splitter path is payload-agnostic. */
   def buildFragmentFrame(eventId: Long, tsMs: Long, userId: Long, valueC: Long,
+      frame: Array[Byte]): Array[Byte] =
+    writeFragment(eventId, tsMs, userId, valueC, null, null, frame)
+
+  /** [[buildFragmentFrame]] with a Tracks element between Tags and
+    * Cluster: one TrackEntry carrying TrackNumber / TrackUID /
+    * TrackType, the CodecID string, and the codec's OUT-OF-BAND
+    * CodecPrivate configuration — the layout a real Kinesis Video MKV
+    * stream ships (the reference's EBML table lists CodecID and
+    * CodecPrivate at ebml.py:47-48; libav reads AVC SPS/PPS and the
+    * AAC AudioSpecificConfig from exactly this element). TrackType is
+    * derived from the CodecID namespace: `A_*` → 2 (audio), else 1
+    * (video), per the Matroska codec-id registry. */
+  def buildFragmentTrack(eventId: Long, tsMs: Long, userId: Long,
+      valueC: Long, codecId: String, codecPrivate: Array[Byte],
+      frame: Array[Byte]): Array[Byte] =
+    writeFragment(eventId, tsMs, userId, valueC, codecId, codecPrivate, frame)
+
+  /** The one single-buffer writer of both forms: the Tracks element is
+    * written iff `codecId` is non-null (a null, not an Option, so the
+    * per-row track-less path allocates nothing extra). */
+  private def writeFragment(eventId: Long, tsMs: Long, userId: Long,
+      valueC: Long, codecId: String, codecPrivate: Array[Byte],
       frame: Array[Byte]): Array[Byte] = {
     import Ebml._
     val docType = utf8("matroska")
@@ -80,9 +113,17 @@ object EbmlFunctions {
     val headerPayload = (10L + docType.length) + (10L + 1L)
     val tagsInner = 10L + names.indices.map(i => 10L + tagPayload(i)).sum
     val tags7373 = 10L + tagsInner
+    val cid = if (codecId == null) null else utf8(codecId)
+    // TrackEntry children: TrackNumber(0xd7)=1, TrackUID(0x73c5)=user,
+    // TrackType(0x83), CodecID(0x86), CodecPrivate(0x63a2)
+    val trackEntryPayload = if (cid == null) 0L else
+      (9L + 1L) + (10L + 8L) + (9L + 1L) +
+        (9L + cid.length) + (10L + codecPrivate.length)
+    val tracksPayload = 9L + trackEntryPayload
     val blockPayload = 4L + frame.length
     val clusterPayload = (9L + 8L) + (9L + blockPayload)
-    val segPayload = (12L + tags7373) + (12L + clusterPayload)
+    val segPayload = (12L + tags7373) +
+      (if (cid == null) 0L else 12L + tracksPayload) + (12L + clusterPayload)
     val total = (12L + headerPayload) + (12L + segPayload)
     val w = new Writer(new Array[Byte](total.toInt))
     w.head(0x1a45dfa3L, headerPayload)
@@ -98,77 +139,20 @@ object EbmlFunctions {
       w.head(0x45a3L, names(i).length.toLong); w.bytes(names(i))
       w.head(0x4487L, values(i).length.toLong); w.bytes(values(i))
       i += 1
+    }
+    if (cid != null) {
+      w.head(0x1654ae6bL, tracksPayload)
+      w.head(0xaeL, trackEntryPayload)
+      w.head(0xd7L, 1L); w.uint(1L, 1)
+      w.head(0x73c5L, 8L); w.uint(userId, 8)
+      w.head(0x83L, 1L); w.uint(if (codecId.startsWith("A_")) 2L else 1L, 1)
+      w.head(0x86L, cid.length.toLong); w.bytes(cid)
+      w.head(0x63a2L, codecPrivate.length.toLong); w.bytes(codecPrivate)
     }
     w.head(0x1f43b675L, clusterPayload)
     w.head(0xe7L, 8L); w.uint(tsMs, 8)
     w.head(0xa3L, blockPayload)
     // lacing-free SimpleBlock header: track vint, relative timecode 0, flags
-    w.byte(0x81); w.byte(0); w.byte(0); w.byte(0x80)
-    w.bytes(frame)
-    w.buf
-  }
-
-  /** [[buildFragmentFrame]] with a Tracks element between Tags and
-    * Cluster: one TrackEntry carrying TrackNumber / TrackUID /
-    * TrackType, the CodecID string, and the codec's OUT-OF-BAND
-    * CodecPrivate configuration — the layout a real Kinesis Video MKV
-    * stream ships (the reference's EBML table lists CodecID and
-    * CodecPrivate at ebml.py:47-48; libav reads AVC SPS/PPS and the
-    * AAC AudioSpecificConfig from exactly this element). TrackType is
-    * derived from the CodecID namespace: `A_*` → 2 (audio), else 1
-    * (video), per the Matroska codec-id registry. Same single-buffer
-    * write discipline as [[buildFragmentFrame]]. */
-  def buildFragmentTrack(eventId: Long, tsMs: Long, userId: Long,
-      valueC: Long, codecId: String, codecPrivate: Array[Byte],
-      frame: Array[Byte]): Array[Byte] = {
-    import Ebml._
-    val docType = utf8("matroska")
-    val cid = utf8(codecId)
-    val trackType = if (codecId.startsWith("A_")) 2L else 1L
-    val names = Array(FragmentNumber, ServerTs, ProducerTs, MillisBehind,
-      ContinuationToken, UserIdTag, ValueCentsTag).map(utf8)
-    val values = Array(eventId.toString, tsMs.toString, tsMs.toString, "0",
-      s"tok-$eventId", userId.toString, valueC.toString).map(utf8)
-    def tagPayload(i: Int): Long =
-      (10L + names(i).length) + (10L + values(i).length)
-    val headerPayload = (10L + docType.length) + (10L + 1L)
-    val tagsInner = 10L + names.indices.map(i => 10L + tagPayload(i)).sum
-    val tags7373 = 10L + tagsInner
-    // TrackEntry children: TrackNumber(0xd7)=1, TrackUID(0x73c5)=user,
-    // TrackType(0x83), CodecID(0x86), CodecPrivate(0x63a2)
-    val trackEntryPayload = (9L + 1L) + (10L + 8L) + (9L + 1L) +
-      (9L + cid.length) + (10L + codecPrivate.length)
-    val tracksPayload = 9L + trackEntryPayload
-    val blockPayload = 4L + frame.length
-    val clusterPayload = (9L + 8L) + (9L + blockPayload)
-    val segPayload =
-      (12L + tags7373) + (12L + tracksPayload) + (12L + clusterPayload)
-    val total = (12L + headerPayload) + (12L + segPayload)
-    val w = new Writer(new Array[Byte](total.toInt))
-    w.head(0x1a45dfa3L, headerPayload)
-    w.head(0x4282L, docType.length.toLong); w.bytes(docType)
-    w.head(0x4285L, 1L); w.uint(2L, 1)
-    w.head(0x18538067L, segPayload)
-    w.head(0x1254c367L, tags7373)
-    w.head(0x7373L, tagsInner)
-    w.head(0x63c0L, 0L)
-    var i = 0
-    while (i < names.length) {
-      w.head(0x67c8L, tagPayload(i))
-      w.head(0x45a3L, names(i).length.toLong); w.bytes(names(i))
-      w.head(0x4487L, values(i).length.toLong); w.bytes(values(i))
-      i += 1
-    }
-    w.head(0x1654ae6bL, tracksPayload)
-    w.head(0xaeL, trackEntryPayload)
-    w.head(0xd7L, 1L); w.uint(1L, 1)
-    w.head(0x73c5L, 8L); w.uint(userId, 8)
-    w.head(0x83L, 1L); w.uint(trackType, 1)
-    w.head(0x86L, cid.length.toLong); w.bytes(cid)
-    w.head(0x63a2L, codecPrivate.length.toLong); w.bytes(codecPrivate)
-    w.head(0x1f43b675L, clusterPayload)
-    w.head(0xe7L, 8L); w.uint(tsMs, 8)
-    w.head(0xa3L, blockPayload)
     w.byte(0x81); w.byte(0); w.byte(0); w.byte(0x80)
     w.bytes(frame)
     w.buf

@@ -293,10 +293,8 @@ object Analytics {
     * in place, no new shuffle, no broadcast-back join). Exact-tier
     * caveat as `percentiles`: each type's history sorts in one task;
     * the 100 TB path replaces the rank windows with the C10c sketch
-    * and keeps the same integer census. */
-  def madOutliers(t: Tables): DataFrame = madOutliersOf(t.events)
-
-  /** Library form over any (event_type, value, event_id) frame. */
+    * and keeps the same integer census. `events` is any (event_type,
+    * value, event_id) frame. */
   def madOutliersOf(events: DataFrame): DataFrame = {
     val byType = Window.partitionBy("event_type")
     val all = byType
@@ -501,11 +499,6 @@ object Analytics {
         col("e.min_str").as("min_str"), col("e.max_str").as("max_str"))
       .orderBy("col_name")
   }
-
-  def profileDocuments(t: Tables): DataFrame =
-    profileTableOf(t.documents,
-      Seq("doc_id", "text", "lang", "source", "n_chars"),
-      hashDistinct = Set("text"))
 
   /** C10b — HLL sketch: approximate distinct users per event type.
     * Rows-only oracle (sketch estimates are engine-specific); the spec

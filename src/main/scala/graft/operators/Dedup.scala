@@ -44,10 +44,8 @@ object Dedup {
     * costs a token budget. Plan: the D1 content-hash exchange (now
     * carrying (source, n_tok) alongside the 128-bit hash — text never
     * crosses), the keeper election as a window min on the same
-    * partitioning (no second exchange), one source rollup. */
-  def dedupSavings(t: Tables): DataFrame = dedupSavingsOf(t.documents)
-
-  /** Library form over any (doc_id, source, text) frame. */
+    * partitioning (no second exchange), one source rollup. `docs` is
+    * any (doc_id, source, text) frame. */
   def dedupSavingsOf(docs: DataFrame): DataFrame = {
     val nWs = size(call_function("regexp_extract_all",
       col("text"), lit("\\S+"), lit(0))).cast("long")
@@ -103,11 +101,8 @@ object Dedup {
 
   /** D2 — exact word-shingle Jaccard near-dup pairs (j >= 0.95). Jaccard of
     * integer set sizes is an exact rational in double ⇒ bit-identical to the
-    * oracle. Brute pair space, used as ground truth for D3/D4. */
-  def jaccardPairs(t: Tables, threshold: Double = 0.95): DataFrame =
-    jaccardPairsOf(t.documents, threshold)
-
-  /** Library form over any (doc_id, text) frame. */
+    * oracle. Brute pair space, used as ground truth for D3/D4. `docs`
+    * is any (doc_id, text) frame. */
   def jaccardPairsOf(docs: DataFrame, threshold: Double = 0.95): DataFrame = {
     // explicit-count repartition: (1) spreads the O(n²) nested-loop join
     // across all cores — with an advisory (no-count) repartition AQE
@@ -170,7 +165,7 @@ object Dedup {
       .withColumn("j", col("i").cast("double") / (col("n_a") + col("n_b") - col("i")))
       .filter(col("j") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jaccard4"))
-      // exchange barrier before the sort (see jaccardPairs): without it
+      // exchange barrier before the sort (see jaccardPairsOf): without it
       // range sampling re-runs the blocked nested-loop join
       .repartition(cores, col("id_a"))
       .orderBy("id_a", "id_b")
@@ -235,7 +230,7 @@ object Dedup {
   def minhashCandidates(t: Tables): DataFrame = {
     val cores = t.documents.sparkSession.sparkContext.defaultParallelism
     minhashCandidateCore(t)
-      // exchange barrier before the sort (see jaccardPairs)
+      // exchange barrier before the sort (see jaccardPairsOf)
       .repartition(cores, col("id_a"))
       .orderBy("id_a", "id_b")
   }
@@ -293,7 +288,7 @@ object Dedup {
   }
 
   /** Candidate generation without the public query's output contract
-    * (repartition + orderBy): the edge source for [[dedupClustersLsh]],
+    * (repartition + orderBy): the edge source for [[clusterDocsLsh]],
     * where candidate order is irrelevant and the sort would be wasted. */
   private def minhashCandidateCore(t: Tables): DataFrame =
     minhashCandidateCoreOf(t.documents)
@@ -323,7 +318,7 @@ object Dedup {
     * banding. */
   def dedupEval(t: Tables, threshold: Double = 0.95): DataFrame =
     dedupEvalOf(minhashCandidateCore(t),
-      jaccardPairs(t, threshold).select(col("id_a"), col("id_b")))
+      jaccardPairsOf(t.documents, threshold).select(col("id_a"), col("id_b")))
 
   /** D13b — the census's DEPLOY form: the identical metrics over a
     * growth-stable HASH SLICE of the corpus (the F18 bucket arithmetic:
@@ -475,7 +470,7 @@ object Dedup {
       .filter(col("x.k") === firstCleanBand)
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         call_function("bit_count", xorSig).cast("long").as("hamming"))
-      // exchange barrier before the sort (see jaccardPairs)
+      // exchange barrier before the sort (see jaccardPairsOf)
       .repartition(t.documents.sparkSession.sparkContext.defaultParallelism,
         col("id_a"))
       .orderBy("id_a", "id_b")
@@ -493,7 +488,7 @@ object Dedup {
   def dedupClusters(t: Tables, maxIters: Int = 50): DataFrame =
     connectedComponents(
       t.documents.select(col("doc_id")),
-      jaccardPairs(t).select(col("id_a"), col("id_b")),
+      jaccardPairsOf(t.documents).select(col("id_a"), col("id_b")),
       maxIters)
 
   /** D6c — canonical-member election by QUALITY: production dedup
@@ -506,7 +501,7 @@ object Dedup {
     * bit-identically in the oracle.
     *
     * Scale shape: clusters come from the D6b LSH tier
-    * ([[dedupClustersLsh]] — banded candidates verified at exact
+    * ([[clusterDocsLsh]] — banded candidates verified at exact
     * Jaccard, the edge source that runs at 100 TB; the O(n²) D6 tier
     * stays reachable through [[dedupKeepBestOf]], and DedupSpec
     * replays its election driver-side as the equality twin); the
@@ -514,7 +509,7 @@ object Dedup {
     * and the election is ONE window pass over rows already shuffled
     * by cluster — no O(n²) stage, no driver state. */
   def dedupKeepBest(t: Tables, maxIters: Int = 50): DataFrame =
-    dedupKeepBestOf(dedupClustersLsh(t, maxIters = maxIters), t.documents)
+    dedupKeepBestOf(clusterDocsLsh(t.documents, maxIters = maxIters), t.documents)
 
   /** Library form of the D6c election over any (doc_id, cluster_id)
     * labeling and any (doc_id, text) corpus. */
@@ -674,7 +669,7 @@ object Dedup {
     * merge into the prior labels on the quotient graph.
     *
     * Correctness is exact BY CONSTRUCTION against the full LSH
-    * recompute ([[dedupClustersLsh]]'s closure): candidate generation is
+    * recompute ([[clusterDocsLsh]]'s closure): candidate generation is
     * a pure pair function (two docs share a band or not, independent of
     * the rest of the corpus), so settled-only clustering + fresh-probe
     * candidates partition the full candidate set exactly, and the
@@ -747,7 +742,7 @@ object Dedup {
   /** Verified-Jaccard edges between two doc sets (directed a×b,
     * id_a != id_b) — the D2 hashed-merge pair stage generalized off the
     * self-join. Small-SF tier: the b side broadcasts like
-    * [[jaccardPairs]]'s; the 100 TB path generates candidates from the
+    * [[jaccardPairsOf]]'s; the 100 TB path generates candidates from the
     * persisted band index instead (TextIndex.dedupBatch). */
   private[operators] def jaccardEdgesBetween(a0: DataFrame, b0: DataFrame,
       threshold: Double): DataFrame = {
@@ -781,13 +776,8 @@ object Dedup {
     * volume); the join-back moves the candidate ids (16 B/row) plus each
     * side's tokens exactly once. False LSH candidates die at the j <
     * threshold filter, so only true near-dup edges reach the components
-    * loop. */
-  def dedupClustersLsh(t: Tables, threshold: Double = 0.95,
-      maxIters: Int = 50): DataFrame =
-    clusterDocsLsh(t.documents, threshold, maxIters)
-
-  /** Library form of D6b over any (doc_id, text) frame — e.g. the
-    * survivors of a quality/exact-dedup pass ([[TextOps.curationFull]]). */
+    * loop. `docs` is any (doc_id, text) frame — e.g. the survivors of a
+    * quality/exact-dedup pass ([[TextOps.curationFull]]). */
   def clusterDocsLsh(docs: DataFrame, threshold: Double = 0.95,
       maxIters: Int = 50): DataFrame =
     clusterDocsLshCore(docs, docs.select(col("doc_id")), threshold, maxIters)
@@ -956,7 +946,10 @@ object Dedup {
     * so a lost executor costs a task retry instead of the whole
     * iteration history — the right setting for long dedup jobs on spot
     * instances. The algorithm is identical either way (the spec runs
-    * both). */
+    * both).
+    *
+    * Throws IllegalStateException when labels still move after
+    * `maxIters` rounds: unconverged labels are not components. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
@@ -1019,6 +1012,7 @@ object Dedup {
           .select(col("src").as("doc_id"),
             least(col("src"), col("nbr")).as("label")), labelsSub)
       var converged = false
+      var moved = 0L
       var it = 0
       while (!converged && it < maxIters) {
         // one job per round: the eager checkpoint materializes the new
@@ -1037,11 +1031,18 @@ object Dedup {
         release(labels, labelsSub) // superseded round — next is stored
         labels = next
         labelsSub = s"labels_$it"
-        converged = obs.get("n_moved") == null ||
-          obs.get("n_moved").asInstanceOf[Long] == 0L
+        val n = obs.get("n_moved")
+        moved = if (n == null) 0L else n.asInstanceOf[Long]
+        converged = moved == 0L
         it += 1
       }
       release(edges, "edges") // the returned plan reads only the last labels
+      if (!converged) {
+        release(labels, labelsSub)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds: " +
+            s"$moved labels moved in the last round")
+      }
       nodes.toDF("doc_id")
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1173,7 +1174,7 @@ object Dedup {
     val vecs = Similarity.withNorm(t.embeddings)
     val a = vecs.select(col("vec_id").as("id_a"), col("v").as("v_a"), col("norm").as("norm_a"))
       // spread the pair loop: the embeddings scan is few splits (see
-      // jaccardPairs)
+      // jaccardPairsOf)
       .repartition(cores * 4, col("id_a"))
     val b = vecs.select(col("vec_id").as("id_b"), col("v").as("v_b"), col("norm").as("norm_b"))
     a.join(b, col("id_a") < col("id_b"))
@@ -1181,7 +1182,7 @@ object Dedup {
         call_function("graft_dot", col("v_a"), col("v_b")) / (sqrt(col("norm_a")) * sqrt(col("norm_b"))))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos4"))
-      // exchange barrier before the sort (see jaccardPairs)
+      // exchange barrier before the sort (see jaccardPairsOf)
       .repartition(cores, col("id_a"))
       .orderBy("id_a", "id_b")
   }
@@ -1272,12 +1273,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The driver-gated D8 query: word-block paragraphs over the
-    * documents table (see [[wordBlockParas]] for why blocks stand in
-    * for blank-line paragraphs on this corpus). */
-  def dedupParagraphsBlocks(t: Tables, n: Int = 8): DataFrame =
-    dedupParagraphs(t.documents, wordBlockParas(col("text"), n), " ")
-
   /** D8b — frequency-thresholded boilerplate REMOVAL: drop EVERY
     * occurrence of any paragraph appearing in >= `minDocs` distinct
     * documents. D8 keeps one canonical copy of each repeated paragraph
@@ -1330,12 +1325,6 @@ object Dedup {
         array_join(col("kept"), delim).as("text"))
       .orderBy("doc_id")
   }
-
-  /** The driver-gated D8b query: word-block paragraphs, threshold 3
-    * documents (at 8-word granularity the synthetic corpus repeats
-    * enough cross-document blocks for a non-trivial drop set). */
-  def removeBoilerplateBlocks(t: Tables, n: Int = 8, minDocs: Int = 3): DataFrame =
-    removeBoilerplate(t.documents, wordBlockParas(col("text"), n), " ", minDocs)
 
   /** The D8b boilerplate election as a driver-side SORTED hash list —
     * MODEL-SIZED (boilerplate is the corpus's repeated template text:
@@ -1410,11 +1399,8 @@ object Dedup {
     *
     * Collision note (the D1 rule): odds at 10^12 spans are ~10^-15;
     * the DuckDB oracle groups by the RAW span text, so any collision
-    * at test SF fails the hash gate loudly. */
-  def spanCoverage(t: Tables, k: Int = 5): DataFrame =
-    spanCoverageOf(t.documents, k)
-
-  /** Library form over any (doc_id, text) frame. */
+    * at test SF fails the hash gate loudly. `docs` is any (doc_id,
+    * text) frame. */
   def spanCoverageOf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = spanToks(docs)
@@ -1510,11 +1496,8 @@ object Dedup {
     *      observation).
     *
     * Ref: no analog in SergiyStoyan/AwsKinesisConsumer (parser.py
-    * consumes streams); extends the D-family curation surface. */
-  def spanRemoval(t: Tables, k: Int = 5): DataFrame =
-    spanRemovalOf(t.documents, k)
-
-  /** Library form over any (doc_id, text) frame. */
+    * consumes streams); extends the D-family curation surface. `docs`
+    * is any (doc_id, text) frame. */
   def spanRemovalOf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = spanToks(docs)

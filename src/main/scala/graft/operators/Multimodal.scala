@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ebml.EbmlFunctions
 import graft.functions._
-import graft.sources.Tables
+import graft.sources.{EventPayloads, Tables}
+import graft.sources.EventPayloads.{mkvFrame, mkvProps, mkvTrack, mp4Props}
 
 /** Multimodal binary-column operators (SURVEY §2G).
   *
@@ -17,33 +18,12 @@ import graft.sources.Tables
   */
 object Multimodal {
 
-  private def withBlob(t: Tables): DataFrame =
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .withColumn("blob", EbmlFunctions.encodeFragment(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
-
-  /** Blob column with the global event_id ordering applied BEFORE the
-    * encode projection: range-partition sampling for the final sort then
-    * only evaluates the raw scan to pick split points, instead of running
-    * encode+parse twice (measured 2x on the mm queries). The projection
-    * above the sort preserves row order, and fragment_number == event_id,
-    * so results are byte-identical to sorting the parsed output. */
-  private def withBlobSorted(t: Tables): DataFrame =
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", EbmlFunctions.encodeFragment(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
-
   /** G1/A6 — full round-trip: encode a fragment, parse the AWS tag set
     * back out (parser.py:30-37, 352-366), surface typed fields. The oracle
     * reads the same values straight from the source rows — any parser or
     * writer defect breaks the hash match. */
   def mmRoundtrip(t: Tables): DataFrame =
-    withBlobSorted(t)
+    EventPayloads(t.events, "blob", mkvProps)
       .withColumn("tg", EbmlFunctions.parseTags(col("blob")))
       .select(
         col("tg.fragment_number").cast("long").as("event_id"),
@@ -63,7 +43,7 @@ object Multimodal {
     * EBML twins: native codegen expressions over binary columns, no
     * shuffle. */
   def mp4Roundtrip(t: Tables): DataFrame =
-    withClipSorted(t)
+    EventPayloads(t.events, "clip", mp4Props)
       .withColumn("c", graft.bmff.BmffFunctions.parseClip(col("clip")))
       .select(col("c.event_id").as("event_id"),
         col("c.seq32").as("seq32"),
@@ -81,7 +61,7 @@ object Multimodal {
     * in the writer's size arithmetic or the walker's recursion breaks
     * the hash. */
   def mp4Boxes(t: Tables): DataFrame =
-    withClipSorted(t)
+    EventPayloads(t.events, "clip", mp4Props)
       .withColumn("b",
         explode(graft.bmff.BmffFunctions.parseBoxes(col("clip"))))
       .select(col("event_id"), col("b.typ").as("typ"),
@@ -97,11 +77,7 @@ object Multimodal {
     * as the running sum of the arithmetic clip lengths (124 + props
     * bytes — the fixed layout). One shuffle (the pack groupBy). */
   def mp4SplitStream(t: Tables, groupSize: Long = 5L): DataFrame =
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .withColumn("clip", graft.bmff.BmffFunctions.encodeClip(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
+    EventPayloads(t.events, "clip", mp4Props, sorted = false)
       .withColumn("grp", intDiv(col("event_id"), groupSize))
       .groupBy("grp")
       .agg(sort_array(collect_list(struct(col("event_id"), col("clip"))))
@@ -127,13 +103,7 @@ object Multimodal {
     * EITHER parser (or a field dropped at the container boundary)
     * breaks the hash. Per-row codegen kernels, no shuffle. */
   def mkvToMp4Transmux(t: Tables): DataFrame = {
-    val blobbed = t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", EbmlFunctions.encodeFragment(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
-    blobbed
+    EventPayloads(t.events, "blob", mkvProps)
       .withColumn("tg", EbmlFunctions.parseTags(col("blob")))
       .withColumn("clip", graft.bmff.BmffFunctions.encodeClip(
         col("tg.fragment_number").cast("long"),
@@ -164,13 +134,7 @@ object Multimodal {
     * container boundary breaks the hash. Per-row codegen kernels, no
     * shuffle. */
   def mp4ToMkvTransmux(t: Tables): DataFrame = {
-    val clipped = t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("clip", graft.bmff.BmffFunctions.encodeClip(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
-    clipped
+    EventPayloads(t.events, "clip", mp4Props)
       .withColumn("c", graft.bmff.BmffFunctions.parseClip(col("clip")))
       .withColumn("blob", EbmlFunctions.encodeFragmentFrame(
         col("c.event_id"), col("c.base_ms"), col("c.user_id"),
@@ -187,14 +151,6 @@ object Multimodal {
       .orderBy("event_id")
   }
 
-  private def withClipSorted(t: Tables): DataFrame =
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("clip", graft.bmff.BmffFunctions.encodeClip(
-        col("event_id"), col("ts_ms"), col("user_id"),
-        cents(col("value")), col("props")))
-
   /** G3/A7 — element walk with positions (ebml.py Position semantics):
     * per-fragment element count and byte length, plus the Matroska
     * CRC-32 integrity verdict (round 20 — real muxers arm masters with
@@ -203,7 +159,7 @@ object Multimodal {
     * cases are pinned by EbmlSpec). The oracle recomputes the byte
     * length arithmetically from the fixed fragment layout. */
   def mmElements(t: Tables): DataFrame =
-    withBlobSorted(t)
+    EventPayloads(t.events, "blob", mkvProps)
       .withColumn("els", EbmlFunctions.parseElements(col("blob")))
       .select(
         col("event_id"),
@@ -229,7 +185,7 @@ object Multimodal {
     * windows and per-group scans ride the pack partitioning with no
     * further exchange (subset rule). */
   private def splitCore(t: Tables, groupSize: Long): DataFrame =
-    withBlob(t)
+    EventPayloads(t.events, "blob", mkvProps, sorted = false)
       .withColumn("grp", intDiv(col("event_id"), groupSize))
       .groupBy("grp")
       .agg(sort_array(collect_list(struct(col("event_id"), col("blob"))))
@@ -353,7 +309,7 @@ object Multimodal {
     * can actually run. */
   def mmFeatures(t: Tables,
       decoder: FrameDecoder = Utf8JsonFrameDecoder): DataFrame =
-    featuresCore(withBlobSorted(t), decoder)
+    featuresCore(EventPayloads(t.events, "blob", mkvProps), decoder)
 
   private def featuresCore(blobbed: DataFrame, decoder: FrameDecoder): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
@@ -380,24 +336,8 @@ object Multimodal {
       when(col("event_id") % 4L === 0L, flip).otherwise(noise))
   }
 
-  private def bmpBlobCol: Column = EbmlFunctions.encodeFragmentFrame(
-    col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
-    call_function("graft_bmp_encode", framePattern))
-
-  private def withBmpBlob(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .withColumn("blob", bmpBlobCol)
-  }
-
-  /** Sorted-before-encode variant (the [[withBlobSorted]] rule: range
-    * sampling for the sort must not evaluate the encode twice). */
-  private def withBmpBlobSorted(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", bmpBlobCol)
-  }
+  private def bmpBlobCol: Column =
+    mkvFrame(call_function("graft_bmp_encode", framePattern))
 
   /** G2 with a REAL decoder: fragments whose SimpleBlock payload is an
     * uncompressed 24-bit BMP ([[graft.plans.ImageKernels]]), decoded by
@@ -409,7 +349,7 @@ object Multimodal {
     * pattern spec, pinning encoder ∘ EBML transport ∘ block walk ∘
     * decoder end to end. */
   def mmFeaturesBmp(t: Tables): DataFrame =
-    featuresCore(withBmpBlobSorted(t), BmpFrameDecoder)
+    featuresCore(EventPayloads(t.events, "blob", bmpBlobCol), BmpFrameDecoder)
 
   /** G13 — RESIZE: the missing verb of the decode / feature-extract /
     * resize / frame-sample quartet — each frame's BMP payload is
@@ -424,7 +364,7 @@ object Multimodal {
     * Python hop. */
   def mmResize(t: Tables): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withBmpBlobSorted(t)
+    EventPayloads(t.events, "blob", bmpBlobCol)
       .withColumn("small",
         call_function("graft_bmp_resize2x", frame))
       .withColumn("f", call_function("graft_bmp_features", col("small")))
@@ -447,7 +387,7 @@ object Multimodal {
     * speed, emitting tile rows ready for a ViT embedding stage. */
   def mmPatches(t: Tables, p: Int = 4): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withBmpBlobSorted(t)
+    EventPayloads(t.events, "blob", bmpBlobCol)
       .withColumn("pt",
         explode(call_function("graft_bmp_patches", frame, lit(p))))
       .select(col("event_id"),
@@ -469,7 +409,7 @@ object Multimodal {
     * for a training-data pipeline. */
   def mmFlip(t: Tables, p: Int = 4): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withBmpBlobSorted(t)
+    EventPayloads(t.events, "blob", bmpBlobCol)
       .withColumn("pt", explode(call_function("graft_bmp_patches",
         call_function("graft_bmp_flip", frame), lit(p))))
       .select(col("event_id"),
@@ -479,17 +419,8 @@ object Multimodal {
       .orderBy("event_id", "py", "px")
   }
 
-  private def nalBlobCol: Column = EbmlFunctions.encodeFragmentFrame(
-    col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
-    call_function("graft_h264_encode", col("event_id"), col("user_id")))
-
-  /** Sorted-before-encode variant (the [[withBlobSorted]] rule). */
-  private def withNalBlobSorted(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", nalBlobCol)
-  }
+  private def nalBlobCol: Column =
+    mkvFrame(call_function("graft_h264_encode", col("event_id"), col("user_id")))
 
   /** G17 — H.264 NAL-unit CENSUS (round 17, the library-free close of
     * the G2 frame-typing gap): each fragment's SimpleBlock payload is a
@@ -511,7 +442,7 @@ object Multimodal {
     // HOF form (size/filter/aggregate over graft_nal_units) ran its
     // lambdas interpreted per array element (+0.8 s at sf0.1), and a
     // separate graft_nal_format call re-walked the stream per row
-    withNalBlobSorted(t)
+    EventPayloads(t.events, "blob", nalBlobCol)
       .withColumn("st", call_function("graft_nal_stats", frame))
       .select(col("event_id"),
         col("st.format").as("format"),
@@ -519,14 +450,6 @@ object Multimodal {
         col("st.n_idr").as("n_idr"),
         col("st.slice_rbsp_bytes").as("slice_rbsp_bytes"))
       .orderBy("event_id")
-  }
-
-  /** Unsorted variant for window-consuming G17 queries (the window
-    * orders per partition; only the FINAL presentation sort pays). */
-  private def withNalBlob(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .withColumn("blob", nalBlobCol)
   }
 
   /** G17b — IDR-KEYFRAME INDEX (the G17 census applied: the reference
@@ -543,7 +466,8 @@ object Multimodal {
     import org.apache.spark.sql.expressions.Window
     val frame = EbmlFunctions.firstBlock(col("blob"))
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    withNalBlob(t)
+    // unsorted: the window orders per partition; only the final sort pays
+    EventPayloads(t.events, "blob", nalBlobCol, sorted = false)
       .filter(call_function("graft_nal_stats", frame)
         .getField("n_idr") > 0L)
       .select(col("user_id"), col("event_id"))
@@ -562,7 +486,7 @@ object Multimodal {
     * all four columns from the raw event fields. */
   def mmSpsDims(t: Tables): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withNalBlobSorted(t)
+    EventPayloads(t.events, "blob", nalBlobCol)
       .withColumn("sps", call_function("graft_sps_dims", frame))
       .select(col("event_id"),
         col("sps.profile_idc").as("profile_idc"),
@@ -572,16 +496,8 @@ object Multimodal {
       .orderBy("event_id")
   }
 
-  private def hevcBlobCol: Column = EbmlFunctions.encodeFragmentFrame(
-    col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
-    call_function("graft_hevc_encode", col("event_id"), col("user_id")))
-
-  private def withHevcBlobSorted(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", hevcBlobCol)
-  }
+  private def hevcBlobCol: Column =
+    mkvFrame(call_function("graft_hevc_encode", col("event_id"), col("user_id")))
 
   /** G19 — H.265/HEVC NAL-unit CENSUS (round 18): the G17 machinery
     * extended to the SECOND codec Kinesis Video publicly streams over
@@ -597,7 +513,7 @@ object Multimodal {
     * the hash. Scan-speed at 100 TB: no shuffle below the final sort. */
   def mmHevcCensus(t: Tables): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withHevcBlobSorted(t)
+    EventPayloads(t.events, "blob", hevcBlobCol)
       .withColumn("st", call_function("graft_hevc_stats", frame))
       .select(col("event_id"),
         col("st.format").as("format"),
@@ -618,7 +534,7 @@ object Multimodal {
     * recomputes all four columns from the raw event fields. */
   def mmHevcSps(t: Tables): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withHevcBlobSorted(t)
+    EventPayloads(t.events, "blob", hevcBlobCol)
       .withColumn("sps", call_function("graft_hevc_sps", frame))
       .select(col("event_id"),
         col("sps.profile_idc").as("profile_idc"),
@@ -641,14 +557,10 @@ object Multimodal {
     * oracle replays the census in closed form. Per-row kernels; no
     * shuffle below the final sort. */
   def mmGopCensus(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentFrame(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvFrame(
       call_function("graft_h264_gop_encode", col("event_id"), col("user_id")))
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("g", call_function("graft_gop_census", frame))
       .select(col("event_id"),
         col("g.n_slices").as("n_slices"),
@@ -671,14 +583,10 @@ object Multimodal {
     * frame counter. Per-row codegen kernels, no shuffle below the
     * final sort. */
   def mmHevcGopCensus(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentFrame(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvFrame(
       call_function("graft_hevc_gop_encode", col("event_id"), col("user_id")))
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("g", call_function("graft_hevc_gop_census", frame))
       .select(col("event_id"),
         col("g.n_slices").as("n_slices"),
@@ -722,8 +630,7 @@ object Multimodal {
     * view a heterogeneous fleet's health dashboard reads. */
   def mmGopDispatch(t: Tables): DataFrame = {
     val avc = col("user_id") % 2 === 0
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       when(avc, lit("V_MPEG4/ISO/AVC")).otherwise(lit("V_MPEGH/ISO/HEVC")),
       when(avc, call_function("graft_avcc_encode", col("event_id"),
           col("user_id")))
@@ -733,10 +640,7 @@ object Multimodal {
           col("user_id")))
         .otherwise(call_function("graft_hevc_gop_encode", col("event_id"),
           col("user_id"))))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("codec_id",
         EbmlFunctions.trackInfo(col("blob")).getField("codec_id"))
       .withColumn("g", gopCensusDispatch(col("codec_id"), col("blob")))
@@ -765,16 +669,12 @@ object Multimodal {
     * proves the out-of-band path. Per-row kernels, no shuffle below
     * the final sort. */
   def mmAvccSps(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("V_MPEG4/ISO/AVC"),
       call_function("graft_avcc_encode", col("event_id"), col("user_id")),
       call_function("graft_h264_encode_slices", col("event_id"),
         col("user_id")))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("sps",
         call_function("graft_avcc_sps", col("trk.codec_private")))
@@ -796,16 +696,12 @@ object Multimodal {
     * from the array walk → 2-byte header skip → EP strip → the G20
     * SPS reader. */
   def mmHvccSps(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("V_MPEGH/ISO/HEVC"),
       call_function("graft_hvcc_encode", col("event_id"), col("user_id")),
       call_function("graft_hevc_encode_slices", col("event_id"),
         col("user_id")))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("sps",
         call_function("graft_hvcc_sps", col("trk.codec_private")))
@@ -832,8 +728,7 @@ object Multimodal {
     * below the final sort. */
   def mmCodecDispatch(t: Tables): DataFrame = {
     val avc = col("user_id") % 2 === 0
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       when(avc, lit("V_MPEG4/ISO/AVC")).otherwise(lit("V_MPEGH/ISO/HEVC")),
       when(avc, call_function("graft_avcc_encode", col("event_id"),
           col("user_id")))
@@ -843,10 +738,7 @@ object Multimodal {
           col("user_id")))
         .otherwise(call_function("graft_hevc_encode", col("event_id"),
           col("user_id"))))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("codec_id",
         EbmlFunctions.trackInfo(col("blob")).getField("codec_id"))
       .withColumn("st", codecCensus(col("codec_id"), col("blob")))
@@ -896,16 +788,12 @@ object Multimodal {
     * corrupts a single byte breaks one of those columns. Three chained
     * per-row kernels, no shuffle below the final sort. */
   def mmAvccToAnnexb(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("V_MPEG4/ISO/AVC"),
       call_function("graft_avcc_encode", col("event_id"), col("user_id")),
       call_function("graft_h264_encode_slices", col("event_id"),
         col("user_id")))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("es", call_function("graft_avcc_to_annexb",
         EbmlFunctions.firstBlock(col("blob")), col("trk.codec_private")))
@@ -932,16 +820,12 @@ object Multimodal {
     * columns. Three chained per-row kernels, no shuffle below the
     * final sort. */
   def mmHvccToAnnexb(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("V_MPEGH/ISO/HEVC"),
       call_function("graft_hvcc_encode", col("event_id"), col("user_id")),
       call_function("graft_hevc_encode_slices", col("event_id"),
         col("user_id")))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("es", call_function("graft_hvcc_to_annexb",
         EbmlFunctions.firstBlock(col("blob")), col("trk.codec_private")))
@@ -965,15 +849,11 @@ object Multimodal {
     * the usual WAV payload — the ASC travels ONLY in the container, so
     * the hash pins the out-of-band read. */
   def mmAacAsc(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("A_AAC"),
       call_function("graft_aac_asc_encode", col("event_id"), col("user_id")),
       call_function("graft_wav_encode", col("event_id"), lit(false)))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("asc",
         call_function("graft_aac_asc", col("trk.codec_private")))
@@ -1003,13 +883,9 @@ object Multimodal {
     seiCensusOf(t, "graft_hevc_sei_encode", "graft_hevc_sei_census")
 
   private def seiCensusOf(t: Tables, enc: String, census: String): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentFrame(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvFrame(
       call_function(enc, col("event_id"), col("user_id")))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("g",
         call_function(census, EbmlFunctions.firstBlock(col("blob"))))
       .select(col("event_id"),
@@ -1030,14 +906,11 @@ object Multimodal {
     * row_number window); media bytes never cross it. */
   def mmRandomAccessIndex(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val blob = EbmlFunctions.encodeFragmentFrame(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvFrame(
       call_function("graft_h264_sei_encode", col("event_id"), col("user_id")))
     val frame = EbmlFunctions.firstBlock(col("blob"))
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob, sorted = false)
       .withColumn("n_idr",
         call_function("graft_nal_stats", frame).getField("n_idr"))
       .withColumn("n_recovery",
@@ -1061,15 +934,11 @@ object Multimodal {
     * length must equal 7 + payload. Three chained per-row kernels, no
     * shuffle below the final sort. */
   def mmAscToAdts(t: Tables): DataFrame = {
-    val blob = EbmlFunctions.encodeFragmentTrack(
-      col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
+    val blob = mkvTrack(
       lit("A_AAC"),
       call_function("graft_aac_asc_encode", col("event_id"), col("user_id")),
       call_function("graft_wav_encode", col("event_id"), lit(false)))
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", blob)
+    EventPayloads(t.events, "blob", blob)
       .withColumn("trk", EbmlFunctions.trackInfo(col("blob")))
       .withColumn("adts", call_function("graft_asc_to_adts",
         col("trk.codec_private"), EbmlFunctions.firstBlock(col("blob"))))
@@ -1096,7 +965,7 @@ object Multimodal {
   def mmSceneCuts(t: Tables, tauMilli: Long = 2000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    withBmpBlob(t)
+    EventPayloads(t.events, "blob", bmpBlobCol, sorted = false)
       .select(col("user_id"), col("event_id"),
         call_function("graft_bmp_features",
           EbmlFunctions.firstBlock(col("blob")))
@@ -1116,17 +985,8 @@ object Multimodal {
     * voice-activity gate must separate. */
   private def silentCol: Column = col("event_id") % 5L === 0L
 
-  private def wavBlobCol: Column = EbmlFunctions.encodeFragmentFrame(
-    col("event_id"), col("ts_ms"), col("user_id"), cents(col("value")),
-    call_function("graft_wav_encode", col("event_id"), silentCol))
-
-  /** Sorted-before-encode variant (the [[withBlobSorted]] rule). */
-  private def withWavBlobSorted(t: Tables): DataFrame = {
-    t.events
-      .withColumn("ts_ms", nanosToMs(col("ts")))
-      .orderBy("event_id")
-      .withColumn("blob", wavBlobCol)
-  }
+  private def wavBlobCol: Column =
+    mkvFrame(call_function("graft_wav_encode", col("event_id"), silentCol))
 
   /** G8 — the AUDIO modality through the same codec seam: fragments
     * whose SimpleBlock payload is a RIFF/WAVE PCM16 frame
@@ -1138,7 +998,7 @@ object Multimodal {
     * splitmix64 stream spec, pinning encoder ∘ EBML transport ∘ block
     * walk ∘ decoder end to end. */
   def mmAudioFeatures(t: Tables): DataFrame =
-    featuresCore(withWavBlobSorted(t), WavFrameDecoder)
+    featuresCore(EventPayloads(t.events, "blob", wavBlobCol), WavFrameDecoder)
 
   /** G16 — audio GAIN augmentation (round 16 — the audio twin of the
     * G15 flip, completing augmentation across both toy-codec
@@ -1155,7 +1015,7 @@ object Multimodal {
     * chained per-row kernels, no shuffle: augmentation at scan speed. */
   def mmAudioGain(t: Tables, gainMilli: Int = 1250): DataFrame = {
     val frame = EbmlFunctions.firstBlock(col("blob"))
-    withWavBlobSorted(t)
+    EventPayloads(t.events, "blob", wavBlobCol)
       .withColumn("frame",
         call_function("graft_wav_gain", frame, lit(gainMilli)))
       .select(col("event_id") +:
@@ -1244,7 +1104,7 @@ object Multimodal {
     * persisted [[FrameIndex]] lifecycle (decode happens downstream of
     * this seam, so any fragment source slots in). */
   def sampledFrames(t: Tables, every: Long = 10L): DataFrame =
-    withBmpBlob(t)
+    EventPayloads(t.events, "blob", bmpBlobCol, sorted = false)
       .filter(col("event_id") % every === 0L)
       .select(col("event_id").as("frame_id"),
         EbmlFunctions.firstBlock(col("blob")).as("frame"))
@@ -1271,7 +1131,7 @@ object Multimodal {
     * applies unchanged if a degenerate corpus makes one band value
     * hot (dHash patterns here are mix64-spread). */
   def mmFrameDedup(t: Tables, maxHamming: Int = 6, every: Long = 10L): DataFrame = {
-    val sigs = withBmpBlob(t)
+    val sigs = EventPayloads(t.events, "blob", bmpBlobCol, sorted = false)
       .filter(col("event_id") % every === 0L)
       .select(col("event_id"),
         call_function("graft_bmp_features",

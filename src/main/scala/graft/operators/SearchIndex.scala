@@ -6,7 +6,7 @@ import graft.functions._
 import graft.sources.{Fixtures, Tables}
 
 /** F22b — persisted INVERTED INDEX + zero-rescan BM25 search: the
-  * deployment shape of [[TextOps.bm25TopK]], following the
+  * deployment shape of [[TextOps.bm25TopKOf]], following the
   * [[TextIndex]]/[[VectorIndex]]/[[SpanIndex]] incremental-curation
   * discipline. The inline F22 query re-tokenizes the corpus per search;
   * a retrieval deployment builds the posting lists ONCE and serves

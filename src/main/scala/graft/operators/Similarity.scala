@@ -55,13 +55,9 @@ object Similarity {
     *
     * Scale shape: anchors are a query BATCH (broadcast); the corpus is
     * scanned once. Corpus-wide mining (negatives for EVERY vector)
-    * composes [[knnJoinSized]]'s cell join instead of the broadcast —
-    * same downstream label split. */
-  def contrastivePairs(t: Tables, k: Int = 5): DataFrame =
-    contrastivePairsOf(t.embeddings, col("vec_id") < 10, k)
-
-  /** Library form over any (vec_id, embedding, label) frame; `anchors`
-    * selects the anchor batch. */
+    * composes [[knnJoinOf]]'s cell join instead of the broadcast —
+    * same downstream label split. `corpus` is any (vec_id, embedding,
+    * label) frame; `anchors` selects the anchor batch. */
   def contrastivePairsOf(corpus: DataFrame,
       anchors: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val vecs = corpus.select(col("vec_id"),
@@ -117,41 +113,20 @@ object Similarity {
     * candidates are unconditionally complete, so the output equals
     * [[contrastivePairsOf]] over every anchor — the spec's equivalence
     * pin; smaller nprobe prices the usual IVF recall trade. Size the
-    * grid with [[kCellsFor]] (the `Sized` wrapper) so candidate volume
-    * stays linear in n. */
+    * grid with [[kCellsFor]] so candidate volume stays linear in n. */
   def contrastivePairsAll(corpus: DataFrame, k: Int, kCells: Int,
       nprobe: Int, iters: Int, blocks: Int = 16): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val cores = corpus.sparkSession.sparkContext.defaultParallelism
     val vecs = corpus.select(col("vec_id"),
         col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", call_function("graft_norm2", col("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (centroids, _) = lloyd(vecs, kCells, iters, 1e-9)
-    val data = vecs
-      .withColumn("cell", nearestCentroid(centroids).getField("cid"))
-      .select(col("cell"), col("vec_id").as("n_id"),
-        col("label").as("n_label"), col("v").as("v_n"),
-        col("norm").as("norm_n"))
-      .withColumn("blk", pmod(col("n_id"), lit(blocks.toLong)))
-      .repartition(cores, col("cell"), col("blk"))
-    val probes = vecs
-      .withColumn("cell", explode(probeCells(centroids, nprobe)))
-      .select(col("cell"), col("vec_id").as("q_id"),
-        col("label").as("q_label"), col("v").as("v_q"),
-        col("norm").as("norm_q"))
-      .withColumn("blk", explode(typedLit((0L until blocks).toArray)))
-      .repartition(cores, col("cell"), col("blk"))
-    val scored = probes.join(data, Seq("cell", "blk"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos",
-        call_function("graft_dot", col("v_q"), col("v_n")) /
-          (sqrt(col("norm_q")) * sqrt(col("norm_n"))))
+    val scored = cellJoin(vecs, kCells, nprobe, iters, blocks, labels = true)
       // vectors end here (the E14 rule): the rank exchange carries
       // (q_id, agree, n_id, cos) only — and it is ONE exchange, shared
       // by the pos and neg branches (minedFromScored), so the
-      // corpus-sized cell join above computes once
+      // corpus-sized cell join computes once
       .select(col("q_id"),
         (col("n_label") === col("q_label")).cast("int").as("agree"),
         col("n_id"), col("cos"))
@@ -159,12 +134,6 @@ object Similarity {
     vecs.unpersist(blocking = false)
     out
   }
-
-  /** [[contrastivePairsAll]] with the grid sized by [[kCellsFor]]. */
-  def contrastivePairsAllSized(corpus: DataFrame, k: Int, nprobe: Int,
-      iters: Int, targetOccupancy: Long = 256L, blocks: Int = 16): DataFrame =
-    contrastivePairsAll(corpus, k,
-      kCellsFor(corpus.count(), targetOccupancy), nprobe, iters, blocks)
 
   /** E12 — MAXIMAL MARGINAL RELEVANCE re-ranking (round 13 — the
     * retrieval-diversity step between ANN candidate generation and a
@@ -186,11 +155,6 @@ object Similarity {
     * sims are query-batch-sized by construction, never corpus-sized:
     * localCheckpoints keep the round plans shallow, and the only
     * corpus-sized work is the one E1 scan. */
-  def mmrTopK(t: Tables, m: Int = 20, n: Int = 5,
-      lam: Double = 0.7, lamBar: Double = 0.3): DataFrame =
-    mmrTopKOf(t.embeddings, m, n, lam, lamBar)
-
-  /** Library form over any (vec_id, embedding) frame. */
   def mmrTopKOf(embeddings: DataFrame, m: Int, n: Int,
       lam: Double, lamBar: Double): DataFrame = {
     val vecs = withNorm(embeddings)
@@ -287,13 +251,6 @@ object Similarity {
         round(col("score"), 4).as("score4"))
       .orderBy("q_id", "mmr_rank")
   }
-
-  /** E3 — IVF coarse quantizer: Lloyd's k-means over the corpus (each
-    * iteration = one broadcast of k·dim doubles out, one groupBy shuffle
-    * back — the standard distributed k-means shape; only the k×64 model
-    * ever touches the driver, never data). Returns (vec_id, cid, dist2). */
-  def ivfAssign(t: Tables, k: Int = 8, iters: Int = 3): DataFrame =
-    ivfAssignVecs(t.embeddings, k, iters)
 
   /** One (d, cid) struct per centroid — the shared distance arithmetic
     * BOTH corpus-side assignment and query-side routing build on; a
@@ -466,6 +423,11 @@ object Similarity {
     finally vecs.unpersist(blocking = false)
   }
 
+  /** E3 — IVF coarse quantizer: Lloyd's k-means over the corpus (each
+    * iteration = one broadcast of k·dim doubles out, one groupBy shuffle
+    * back — the standard distributed k-means shape; only the k×64 model
+    * ever touches the driver, never data). Returns (vec_id, cid, dist2)
+    * for any (vec_id, embedding) frame. */
   def ivfAssignVecs(embeddings: DataFrame, k: Int = 8, iters: Int = 3,
       eps: Double = 1e-9): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -632,44 +594,16 @@ object Similarity {
     * (q_id, n_id, cos) — 24 B per candidate, never vector payloads.
     * Hash-exact oracle: the canonical Lloyd fit + routing + the
     * bit-proven cosine fold replay end to end (the ivf_topk pattern
-    * with the probe filter removed). */
-  def knnJoin(t: Tables, k: Int = 3, kCells: Int = 8, nprobe: Int = 2,
-      iters: Int = 3): DataFrame =
-    knnJoinOf(t.embeddings, k, kCells, nprobe, iters)
-
-  /** Library form over any (vec_id, embedding) frame. `blocks` salts
-    * the cell join: a kCells-key join bounds parallelism to kCells —
-    * and AQE, seeing only the TINY join inputs, coalesces it further
-    * (the blow-up is at join OUTPUT, invisible to size-based planning;
-    * measured 6.4 s → the salted form below). The data side takes a
-    * deterministic block (n_id mod blocks), the probe side replicates
-    * into every block — each pair still meets exactly once — and the
-    * explicit-count repartition is the AQE barrier (the jaccardPairs
-    * rule). Deployments with thousands of cells can set blocks = 1. */
+    * with the probe filter removed). `corpus` is any (vec_id,
+    * embedding) frame; `blocks` salts the cell join ([[cellJoin]]).
+    * Pass `kCells = kCellsFor(corpus.count(), occupancy)` when the
+    * corpus size is not known a priori: one count job sizes the grid. */
   def knnJoinOf(corpus: DataFrame, k: Int, kCells: Int, nprobe: Int,
       iters: Int, blocks: Int = 16): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val cores = corpus.sparkSession.sparkContext.defaultParallelism
     val vecs = withNorm(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    val (centroids, _) = lloyd(vecs, kCells, iters, 1e-9)
-    val data = vecs
-      .withColumn("cell", nearestCentroid(centroids).getField("cid"))
-      .select(col("cell"), col("vec_id").as("n_id"),
-        col("v").as("v_n"), col("norm").as("norm_n"))
-      .withColumn("blk", pmod(col("n_id"), lit(blocks.toLong)))
-      .repartition(cores, col("cell"), col("blk"))
-    val probes = vecs
-      .withColumn("cell", explode(probeCells(centroids, nprobe)))
-      .select(col("cell"), col("vec_id").as("q_id"),
-        col("v").as("v_q"), col("norm").as("norm_q"))
-      .withColumn("blk", explode(typedLit((0L until blocks).toArray)))
-      .repartition(cores, col("cell"), col("blk"))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val out = probes.join(data, Seq("cell", "blk"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos",
-        call_function("graft_dot", col("v_q"), col("v_n")) /
-          (sqrt(col("norm_q")) * sqrt(col("norm_n"))))
+    val out = cellJoin(vecs, kCells, nprobe, iters, blocks, labels = false)
       // vectors end here: the rank exchange carries (q_id, n_id, cos)
       .select(col("q_id"), col("n_id"), col("cos"))
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -679,6 +613,51 @@ object Similarity {
       .orderBy("q_id", "rnk")
     vecs.unpersist(blocking = false) // model frozen; the plan re-derives
     out
+  }
+
+  /** The coarse quantizer fit on `vecs` (vec_id, v, norm, …) and its two
+    * cell assignments: every vector in its ONE data cell, and every
+    * vector exploded into its `nprobe` nearest cells as a probe — each
+    * as `vecs` plus a `cell` column. */
+  private def cellAssign(vecs: DataFrame, kCells: Int, nprobe: Int,
+      iters: Int): (DataFrame, DataFrame) = {
+    val (centroids, _) = lloyd(vecs, kCells, iters, 1e-9)
+    (vecs.withColumn("cell", nearestCentroid(centroids).getField("cid")),
+      vecs.withColumn("cell", explode(probeCells(centroids, nprobe))))
+  }
+
+  /** The salted IVF cell join of [[knnJoinOf]] and
+    * [[contrastivePairsAll]]: every (probe q_id, data n_id) pair that
+    * shares a cell, self-pairs dropped, with vectors, norms and `cos`;
+    * `labels` carries `label` along as q_label / n_label. `vecs`
+    * (vec_id, [label,] v, norm) is the caller's persisted frame.
+    * `blocks` salts the join: a kCells-key join bounds parallelism to
+    * kCells — and AQE, seeing only the TINY join inputs, coalesces it
+    * further (the blow-up is at join OUTPUT, invisible to size-based
+    * planning; measured 6.4 s → the salted form). The data side takes
+    * a deterministic block (n_id mod blocks), the probe side replicates
+    * into every block — each pair still meets exactly once — and the
+    * explicit-count repartition is the AQE barrier (the jaccardPairsOf
+    * rule). Deployments with thousands of cells can set blocks = 1. */
+  private def cellJoin(vecs: DataFrame, kCells: Int, nprobe: Int,
+      iters: Int, blocks: Int, labels: Boolean): DataFrame = {
+    val cores = vecs.sparkSession.sparkContext.defaultParallelism
+    val (data, probes) = cellAssign(vecs, kCells, nprobe, iters)
+    def side(cells: DataFrame, id: String, p: String): DataFrame =
+      cells.select(Seq(col("cell"), col("vec_id").as(id)) ++
+        (if (labels) Seq(col("label").as(s"${p}_label")) else Nil) ++
+        Seq(col("v").as(s"v_$p"), col("norm").as(s"norm_$p")): _*)
+    val d = side(data, "n_id", "n")
+      .withColumn("blk", pmod(col("n_id"), lit(blocks.toLong)))
+      .repartition(cores, col("cell"), col("blk"))
+    val q = side(probes, "q_id", "q")
+      .withColumn("blk", explode(typedLit((0L until blocks).toArray)))
+      .repartition(cores, col("cell"), col("blk"))
+    q.join(d, Seq("cell", "blk"))
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("cos",
+        call_function("graft_dot", col("v_q"), col("v_n")) /
+          (sqrt(col("norm_q")) * sqrt(col("norm_n"))))
   }
 
   /** E14's sizing rule made EXECUTABLE (round 16): [[knnJoinOf]]'s
@@ -698,15 +677,6 @@ object Similarity {
     math.min(math.max(cells, 1L), Int.MaxValue.toLong).toInt
   }
 
-  /** [[knnJoinOf]] with the coarse grid sized by [[kCellsFor]]: ONE
-    * count job (the sizing decision — a scan-shaped aggregate, not a
-    * data pass through the join), then the sized join. The form a
-    * deployment calls when the corpus size is not known a priori. */
-  def knnJoinSized(corpus: DataFrame, k: Int, nprobe: Int, iters: Int,
-      targetOccupancy: Long = 256L, blocks: Int = 16): DataFrame =
-    knnJoinOf(corpus, k,
-      kCellsFor(corpus.count(), targetOccupancy), nprobe, iters, blocks)
-
   /** The EXACT candidate-pair volume [[knnJoinOf]] would generate at
     * these settings — Σ_cell |probes(cell)| · |data(cell)|, computed
     * from two per-cell COUNT aggregates joined on the cell id (pairs
@@ -715,14 +685,9 @@ object Similarity {
     * the q_id = n_id self-pairs the join filters, a constant +n. */
   def knnJoinCandidateVolume(corpus: DataFrame, kCells: Int, nprobe: Int,
       iters: Int): Long = {
-    val vecs = withNorm(corpus)
-    val (centroids, _) = lloyd(vecs, kCells, iters, 1e-9)
-    val dataCnt = vecs
-      .withColumn("cell", nearestCentroid(centroids).getField("cid"))
-      .groupBy("cell").agg(count(lit(1)).as("nd"))
-    val probeCnt = vecs
-      .withColumn("cell", explode(probeCells(centroids, nprobe)))
-      .groupBy("cell").agg(count(lit(1)).as("np"))
+    val (data, probes) = cellAssign(withNorm(corpus), kCells, nprobe, iters)
+    val dataCnt = data.groupBy("cell").agg(count(lit(1)).as("nd"))
+    val probeCnt = probes.groupBy("cell").agg(count(lit(1)).as("np"))
     probeCnt.join(dataCnt, Seq("cell"))
       .agg(coalesce(sum(col("np") * col("nd")), lit(0L)))
       .collect()(0).getLong(0)
@@ -1423,9 +1388,6 @@ object Similarity {
     * explode partial-aggregates map-side to ≤ labels×dim rows per
     * task, centroids are model-sized and broadcast back onto the
     * checkpointed scan, and the final agg carries 5 ints per label. */
-  def embedStats(t: Tables): DataFrame = embedStatsOf(t.embeddings)
-
-  /** Library form over any (vec_id, embedding, label) frame. */
   def embedStatsOf(embeddings: DataFrame): DataFrame = {
     val Q = (1L << 20).toDouble
     val vecs = embeddings

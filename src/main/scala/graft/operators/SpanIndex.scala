@@ -7,7 +7,7 @@ import graft.sources.{Fixtures, Tables}
 
 /** D11b — persisted SPAN-HASH index + incremental duplicated-span
   * coverage: the D7/[[VectorIndex]]/[[FrameIndex]] incremental-curation
-  * discipline applied to [[Dedup.spanCoverage]]'s sub-document spans,
+  * discipline applied to [[Dedup.spanCoverageOf]]'s sub-document spans,
   * the shape an ExactSubstr pipeline (Lee et al. 2022) actually runs —
   * crawls arrive in batches, and re-extracting every settled document's
   * spans per batch would re-scan the corpus the index exists to avoid.
@@ -26,7 +26,7 @@ import graft.sources.{Fixtures, Tables}
   * semi-join semantics are insensitive to row multiplicity, so a
   * compact/crash window that duplicates an index row can never double a
   * hit (no distinct needed where [[TextIndex.dedupBatch]]'s cross tier
-  * carries one). Output ≡ the full-corpus [[Dedup.spanCoverage]]
+  * carries one). Output ≡ the full-corpus [[Dedup.spanCoverageOf]]
   * restricted to batch documents (SpanIndexSpec pins the equality; the
   * DuckDB oracle replays it).
   *
@@ -48,7 +48,7 @@ object SpanIndex {
   val BaseBatch = -1L
   val Buckets = 64
 
-  /** Default span length, shared with the [[Dedup.spanCoverage]] query. */
+  /** Default span length, shared with the [[Dedup.spanCoverageOf]] query. */
   val K = 5
 
   private def distinctSpans(docs: DataFrame, k: Int): DataFrame =
@@ -80,7 +80,7 @@ object SpanIndex {
 
   /** Duplicated-span coverage of `newDocs` against (batch ∪ settled
     * index) WITHOUT touching settled text — output ≡
-    * [[Dedup.spanCoverage]] over the full corpus, restricted to the
+    * [[Dedup.spanCoverageOf]] over the full corpus, restricted to the
     * batch's documents. */
   def coverageBatch(newDocs: DataFrame, dir: String, k: Int = K,
       excludeBatch: Option[Long] = None): DataFrame = {

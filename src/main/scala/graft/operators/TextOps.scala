@@ -216,13 +216,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  def decontaminateBloom(t: Tables, n: Int = 3,
-      benchMod: Long = 100L): DataFrame =
-    decontaminateBloomAgainst(
-      t.documents.filter(col("doc_id") % benchMod =!= 0L),
-      t.documents.filter(col("doc_id") % benchMod === 0L),
-      n)
-
   /** F6c — thresholded contamination VERDICT (the PaLM/GPT-4 eval-
     * decontamination rule: a document is contaminated when a high
     * FRACTION of its n-grams appears in the benchmark, not merely when
@@ -258,21 +251,6 @@ object TextOps {
         col("n_hits") * lit(100L) >= col("n_grams") * lit(pct.toLong))
       .orderBy("doc_id")
   }
-
-  def decontaminateRatio(t: Tables, n: Int = 3, pct: Int = 50,
-      benchMod: Long = 100L): DataFrame =
-    decontaminateRatioAgainst(
-      t.documents.filter(col("doc_id") % benchMod =!= 0L),
-      t.documents.filter(col("doc_id") % benchMod === 0L),
-      n, pct)
-
-  /** The decontamination query shape over the test corpus: every 100th
-    * document plays the benchmark set, the rest are the corpus. */
-  def decontaminate(t: Tables, n: Int = 3, benchMod: Long = 100L): DataFrame =
-    decontaminateAgainst(
-      t.documents.filter(col("doc_id") % benchMod =!= 0L),
-      t.documents.filter(col("doc_id") % benchMod === 0L),
-      n)
 
   /** F6b — FUZZY decontamination: near-duplicate probing of the corpus
     * against a benchmark/eval set via MinHash bands, verified at exact
@@ -337,15 +315,6 @@ object TextOps {
       .filter(col("j") >= threshold)
       .select(col("doc_id"), col("bench_id"), round(col("j"), 4).as("jaccard4"))
   }
-
-  /** The fuzzy-decontamination query shape: the F6 split — every 100th
-    * document plays the benchmark set, the rest are the corpus. */
-  def decontaminateFuzzy(t: Tables, threshold: Double = 0.9,
-      benchMod: Long = 100L): DataFrame =
-    decontaminateFuzzyAgainst(
-      t.documents.filter(col("doc_id") % benchMod =!= 0L),
-      t.documents.filter(col("doc_id") % benchMod === 0L),
-      threshold)
 
   /** The benchmark's distinct gram hashes as a sorted driver-side
     * array — MODEL-SIZED (eval sets are MBs), the same class of
@@ -454,12 +423,6 @@ object TextOps {
       .select(col("doc_id"), col("source"))
       .orderBy("doc_id")
 
-  /** The mixing query shape: all of src0, half of src1, 10% of the
-    * rest. */
-  def mixSampleDocs(t: Tables): DataFrame =
-    mixSample(t.documents,
-      Map("src0" -> 1.0, "src1" -> 0.5), defaultFrac = 0.1)
-
   /** F17 — TEMPERATURE-based source re-weighting (the multilingual /
     * multi-domain sampling rule of mC4 and XLM-R: sample probability
     * q_d ∝ p_d^α with α < 1, up-weighting low-resource domains
@@ -511,9 +474,6 @@ object TextOps {
       .select(col("source"), col("doc_id"), ppmCol.as("ppm"))
       .orderBy("source", "doc_id")
   }
-
-  def sampleTemperatureDocs(t: Tables): DataFrame =
-    sampleTemperature(t.documents)
 
   /** F9 — deterministic STRATIFIED bottom-k sampling: exactly
     * min(k, |stratum|) docs per source, chosen as the k smallest
@@ -676,9 +636,6 @@ object TextOps {
     * straddling doc closes it), and re-running at any partitioning
     * yields the identical packing because the order key (doc_id) is
     * total. */
-  def packSequences(t: Tables, budget: Long = 512L): DataFrame =
-    packSequencesOf(t.documents, budget)
-
   def packSequencesOf(docs: DataFrame, budget: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = size(call_function("regexp_extract_all", col("text"),
@@ -745,10 +702,6 @@ object TextOps {
     * probe-sized join — the sketch table itself is O(d·w) independent
     * of corpus size, and widening w trades memory for ε with no plan
     * change. */
-  def approxCountsCms(t: Tables, d: Int = 4, w: Int = 64,
-      probes: Seq[String] = StopWords): DataFrame =
-    approxCountsCmsOf(t.documents, d, w, probes)
-
   def approxCountsCmsOf(docs: DataFrame, d: Int = 4, w: Int = 64,
       probes: Seq[String] = StopWords): DataFrame = {
     require((w & (w - 1)) == 0, s"w=$w must be a power of two (pmod ≡ unsigned mod)")
@@ -781,31 +734,6 @@ object TextOps {
       .orderBy("term")
   }
 
-  /** F29 — deterministic TEXT→VECTOR featurizer (round 13): hashed
-    * n-gram TF-IDF projection of each document onto a fixed `dim`-dim
-    * vector — feature hashing (Weinberger et al. 2009) with a sign
-    * hash, idf-weighted. With it the E family (ANN, dedup-by-cosine,
-    * kNN labeling) runs END TO END from raw text: no external
-    * embedding model, bit-reproducible across runs, partitionings, and
-    * engines — the F8/F18 determinism property extended to vectors.
-    *
-    * Exactness: tf and df are exact int64; the idf is the F19
-    * discipline applied once per DISTINCT word hash (ln quantized to
-    * integer micro-nats), so every vector component is an exact int64
-    * sum sign·tf·idf_u; the unit-normalized view divides by a sqrt of
-    * the exact decimal(38,0) norm² (int64 would wrap on component
-    * squares at crawl scale — the B25 rule) in one correctly-rounded
-    * double sequence.
-    *
-    * Scale shape: tokens hash AT THE SCAN (graft_hash_str — 8 B
-    * crosses, never the word); one (doc_id, h) partial agg for tf, a
-    * vocab-sized agg for df, the feature map is a vocab-sized derived
-    * table AQE-broadcast back onto tf; components partial-agg on
-    * (doc_id, j ≤ dim). Text never enters an exchange, and the
-    * whole pass is two narrow shuffles however big the corpus. */
-  def embedDocs(t: Tables, dim: Int = 64): DataFrame =
-    embedDocsLong(t.documents, dim)
-
   /** The featurizer's (tf, feature map) stage shared by
     * [[embedDocsLong]] and the F32 hybrid query-vector builder: tf =
     * (doc_id, h, tf) with hashes computed at the scan; feat =
@@ -835,8 +763,31 @@ object TextOps {
     (tf, feat)
   }
 
-  /** Long-form library core: one (doc_id, j, v, unit4) row per nonzero
-    * component — the oracle-checked shape. */
+  /** F29 — deterministic TEXT→VECTOR featurizer (round 13): hashed
+    * n-gram TF-IDF projection of each document onto a fixed `dim`-dim
+    * vector — feature hashing (Weinberger et al. 2009) with a sign
+    * hash, idf-weighted. With it the E family (ANN, dedup-by-cosine,
+    * kNN labeling) runs END TO END from raw text: no external
+    * embedding model, bit-reproducible across runs, partitionings, and
+    * engines — the F8/F18 determinism property extended to vectors.
+    *
+    * Exactness: tf and df are exact int64; the idf is the F19
+    * discipline applied once per DISTINCT word hash (ln quantized to
+    * integer micro-nats), so every vector component is an exact int64
+    * sum sign·tf·idf_u; the unit-normalized view divides by a sqrt of
+    * the exact decimal(38,0) norm² (int64 would wrap on component
+    * squares at crawl scale — the B25 rule) in one correctly-rounded
+    * double sequence.
+    *
+    * Scale shape: tokens hash AT THE SCAN (graft_hash_str — 8 B
+    * crosses, never the word); one (doc_id, h) partial agg for tf, a
+    * vocab-sized agg for df, the feature map is a vocab-sized derived
+    * table AQE-broadcast back onto tf; components partial-agg on
+    * (doc_id, j ≤ dim). Text never enters an exchange, and the
+    * whole pass is two narrow shuffles however big the corpus. `docs`
+    * is any (doc_id, text) frame; the result is the long form, one
+    * (doc_id, j, v, unit4) row per nonzero component — the
+    * oracle-checked shape. */
   def embedDocsLong(docs: DataFrame, dim: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(dim > 0 && (dim & (dim - 1)) == 0,
@@ -947,14 +898,8 @@ object TextOps {
     * featurizer's two vocab-keyed shuffles + a projection scan (deploy
     * swaps in the E5 prefit index over the same vectors); fusion is a
     * 2n-row full-outer join. Output exposes ranks and integer rrf
-    * only — no float column crosses the gate. */
-  def hybridSearchTopK(t: Tables,
-      queryTerms: Seq[String] = Seq("stream", "vector", "customer"),
-      dim: Int = 64, n: Int = 20, k: Int = 10,
-      kRrf: Long = 60L): DataFrame =
-    hybridSearchTopKOf(t.documents, queryTerms, dim, n, k, kRrf)
-
-  /** Library form over any (doc_id, text) frame. */
+    * only — no float column crosses the gate. `docs` is any (doc_id,
+    * text) frame. */
   def hybridSearchTopKOf(docs: DataFrame, queryTerms: Seq[String],
       dim: Int, n: Int, k: Int, kRrf: Long): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.distinct)
@@ -1208,6 +1153,16 @@ object TextOps {
         frac(element_at(col("st"), 7), nChars).as("dup5_frac"))
   }
 
+  /** The F1/F16 stopword-ratio score as a reusable column — batch gate,
+    * approx scale twin, and streaming twin all share this builder, so
+    * they provably score identically. */
+  private[graft] def stopRatioCol: Column = {
+    val toks = words(col("text"))
+    val nWords = size(toks).cast("long")
+    val nStop = size(filter(toks, tk => tk.isin(StopWords: _*))).cast("long")
+    when(nWords === 0L, lit(0.0)).otherwise(nStop.cast("double") / nWords)
+  }
+
   /** F16 — per-source QUALITY-PERCENTILE gating: keep each source's
     * upper half by stopword ratio — the CCNet discipline (quality
     * thresholds are judged WITHIN a domain: a legal corpus and a chat
@@ -1223,20 +1178,8 @@ object TextOps {
     * exchange on source feeds BOTH window passes — the ordered rank and
     * the global-frame n/threshold spread share the same partitioning,
     * so Spark plans a single shuffle (the lag_monitor pattern); no
-    * second corpus pass, no threshold join. */
-  def qualityGate(t: Tables): DataFrame = qualityGateOf(t.documents)
-
-  /** The F1/F16 stopword-ratio score as a reusable column — batch gate,
-    * approx scale twin, and streaming twin all share this builder, so
-    * they provably score identically. */
-  private[graft] def stopRatioCol: Column = {
-    val toks = words(col("text"))
-    val nWords = size(toks).cast("long")
-    val nStop = size(filter(toks, tk => tk.isin(StopWords: _*))).cast("long")
-    when(nWords === 0L, lit(0.0)).otherwise(nStop.cast("double") / nWords)
-  }
-
-  /** Library form over any (doc_id, source, text) frame. */
+    * second corpus pass, no threshold join. `docs` is any (doc_id,
+    * source, text) frame. */
   def qualityGateOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = docs.select(col("doc_id"), col("source"),
@@ -1257,7 +1200,7 @@ object TextOps {
     * mergeable quantile sketch (percentile_approx) instead of the exact
     * rank window — one partial+final aggregation, so source cardinality
     * never bounds parallelism and no per-source sort of the corpus ever
-    * runs (the exact [[qualityGate]] sorts each source's full history
+    * runs (the exact [[qualityGateOf]] sorts each source's full history
     * in one task: correct as a small-SF oracle, fatal at 100 TB — the
     * C10/C10c pairing applied to gating). The sketch threshold is then
     * a source-count-sized broadcast joined back onto a second scoring
@@ -1296,7 +1239,7 @@ object TextOps {
       .select(col("source"),
         (col("n_lt") * 100L <= col("n") * 52L &&
           col("n_le") * 100L >= col("n") * 48L).as("within_bound"))
-    qualityGate(t).join(broadcast(within), "source")
+    qualityGateOf(t.documents).join(broadcast(within), "source")
       .select(col("source"), col("doc_id"), col("stop_ratio"), col("p50_thr"),
         col("within_bound"))
       .orderBy("source", "doc_id")
@@ -1319,14 +1262,8 @@ object TextOps {
     * domains), so the window's key cardinality bounds per-task work at
     * corpus/|sources|; a pathological single-domain corpus degrades to
     * one sorted task, which is the correct semantics for a sequential
-    * budget and the config's problem to avoid. */
-  def mixTokenBudget(t: Tables): DataFrame =
-    // src0's budget never binds (take-all), src1's binds tightly, the
-    // default binds everywhere: all three regimes in one query
-    mixTokenBudgetOf(t.documents,
-      Map("src0" -> 100000L, "src1" -> 800L), defaultBudget = 400L)
-
-  /** Library form over any (doc_id, source, text) frame. */
+    * budget and the config's problem to avoid. `docs` is any (doc_id,
+    * source, text) frame. */
   def mixTokenBudgetOf(docs: DataFrame, budgets: Map[String, Long],
       defaultBudget: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1399,7 +1336,7 @@ object TextOps {
     * had a leakage risk.
     *
     * Scale shape: the labels come from the D6b LSH cluster tier
-    * ([[Dedup.dedupClustersLsh]] — banded candidates verified at exact
+    * ([[Dedup.clusterDocsLsh]] — banded candidates verified at exact
     * Jaccard, never all-pairs; the form that runs at 100 TB), and the
     * split itself is the F18 projection on the label — no extra
     * shuffle beyond the clustering that a dedup pipeline already ran,
@@ -1411,7 +1348,7 @@ object TextOps {
     * (where LSH recall on true j≥0.95 pairs is 1). */
   def splitByCluster(t: Tables, trainPct: Int = 98, validPct: Int = 1,
       maxIters: Int = 50): DataFrame =
-    splitByClusterOf(Dedup.dedupClustersLsh(t, maxIters = maxIters),
+    splitByClusterOf(Dedup.clusterDocsLsh(t.documents, maxIters = maxIters),
       trainPct, validPct)
 
   /** Library form over any (doc_id, cluster_id) labeling. */
@@ -1449,11 +1386,8 @@ object TextOps {
     * partitions by shard. nShards must be a power of two — that is
     * what makes Spark's signed pmod and the oracle's unsigned modulo
     * the same function (2^64 ≡ 0 mod 2^k), and binary shard counts
-    * are the natural re-sharding unit anyway. */
-  def shuffleShards(t: Tables, nShards: Int = 8): DataFrame =
-    shuffleShardsOf(t.documents, nShards)
-
-  /** Library form over any (doc_id, source) frame. */
+    * are the natural re-sharding unit anyway. `docs` is any (doc_id,
+    * source) frame. */
   def shuffleShardsOf(docs: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0 && (nShards & (nShards - 1)) == 0,
       s"nShards must be a power of two, got $nShards")
@@ -1488,10 +1422,8 @@ object TextOps {
     * total is a 1-row broadcast (C20); the per-doc pass re-joins tokens
     * to costs on the word key — vocab is corpus-vocab-sized, so AQE
     * broadcasts it at any realistic SF — and reduces through another
-    * partial agg. The corpus text itself never crosses an exchange. */
-  def lmQuality(t: Tables): DataFrame = lmQualityOf(t.documents)
-
-  /** Library form over any (doc_id, text) frame. */
+    * partial agg. The corpus text itself never crosses an exchange.
+    * `docs` is any (doc_id, text) frame. */
   def lmQualityOf(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
     val vocab = toks.groupBy("word").agg(count(lit(1)).as("n_w"))
@@ -1541,11 +1473,8 @@ object TextOps {
     * are computed in decimal(38,0) (the B25 rule), floored back to
     * longs only where the quantized value is micro-unit-bounded, so
     * values below the wrap are bit-identical to the int64 path and a
-    * 100 TB domain is exact instead of silently negative. */
-  def doremiWeights(t: Tables, iters: Int = 3,
-      capU: Long = 20000000L): DataFrame = doremiWeightsOf(t.documents, iters, capU)
-
-  /** Library form over any (source, text) frame. */
+    * 100 TB domain is exact instead of silently negative. `docs` is any
+    * (source, text) frame. */
   def doremiWeightsOf(docs: DataFrame, iters: Int, capU: Long): DataFrame =
     doremiWeightsFromCounts(
       docs.select(col("source"), explode(words(col("text"))).as("word"))
@@ -1647,12 +1576,7 @@ object TextOps {
     * w1, w2) count table is the only corpus-sized agg
     * (partial-aggregated, bigram-vocab×D rows out); each round is two
     * bigram-vocab-sized aggs + a D-row broadcast update, the F31
-    * topology with a wider key. */
-  def doremiWeights2(t: Tables, iters: Int = 3,
-      capU: Long = 20000000L): DataFrame =
-    doremiWeights2Of(t.documents, iters, capU)
-
-  /** Library form over any (source, text) frame. */
+    * topology with a wider key. `docs` is any (source, text) frame. */
   def doremiWeights2Of(docs: DataFrame, iters: Int,
       capU: Long): DataFrame = {
     val dec = "decimal(38,0)"
@@ -1745,12 +1669,9 @@ object TextOps {
     * from the bigram table (vocab-sized); scoring joins tokens to the
     * cost tables on word keys (AQE broadcasts them at any realistic
     * SF) and reduces through a per-doc partial agg. The corpus text
-    * itself never crosses an exchange. */
-  def lmQuality2(t: Tables): DataFrame = lmQuality2Of(t.documents, t.documents)
-
-  /** Library form: train the model on `train`, score `score` — the
-    * deployment shape trains on a trusted reference corpus (CCNet uses
-    * Wikipedia) and scores the crawl. */
+    * itself never crosses an exchange. Train the model on `train`,
+    * score `score` — the deployment shape trains on a trusted reference
+    * corpus (CCNet uses Wikipedia) and scores the crawl. */
   def lmQuality2Of(train: DataFrame, score: DataFrame,
       alpha: Double = 0.4): DataFrame = {
     val toMicro = (c: Column) => round(c * 1e6).cast("long")
@@ -1832,10 +1753,7 @@ object TextOps {
     * exchange. The trigram vocabulary is the cost driver at 100 TB
     * (|trigrams| ≫ |bigrams|), which is exactly KenLM's storage wall —
     * the count tables stay hash-partitioned tables, never driver
-    * state. */
-  def lmQuality3(t: Tables): DataFrame = lmQuality3Of(t.documents, t.documents)
-
-  /** Library form: train on `train`, score `score` (the CCNet shape —
+    * state. Train on `train`, score `score` (the CCNet shape —
     * reference corpus prices the crawl). */
   def lmQuality3Of(train: DataFrame, score: DataFrame,
       alpha: Double = 0.4): DataFrame = {
@@ -1965,11 +1883,8 @@ object TextOps {
     * vocabulary); the pair explode runs over DISTINCT words — a
     * ~10⁵-row frame at any corpus size — and reduces through a second
     * vocab-sized partial agg. Exact int64 throughout; the top-k total
-    * order makes the limit deterministic. */
-  def bpePairCounts(t: Tables, k: Int = 20): DataFrame =
-    bpePairCountsOf(t.documents, k)
-
-  /** Library form over any frame with a text column. */
+    * order makes the limit deterministic. `docs` is any frame with a
+    * text column. */
   def bpePairCountsOf(docs: DataFrame, k: Int): DataFrame = {
     val wf = docs
       .select(explode(words(col("text"))).as("word"))
@@ -2010,10 +1925,8 @@ object TextOps {
     * so round k's plan does not nest k HOF folds. At 100 TB the vocab
     * is still ~1e6 rows, so the per-round cost is fixed-overhead-bound
     * and independent of corpus size — exactly why Sennrich's dict
-    * reduction is THE published algorithm. */
-  def bpeMerges(t: Tables, k: Int = 8): DataFrame = bpeMergesOf(t.documents, k)
-
-  /** Library form over any frame with a text column. */
+    * reduction is THE published algorithm. `docs` is any frame with a
+    * text column. */
   def bpeMergesOf(docs: DataFrame, k: Int): DataFrame = {
     val (merges, seg) = bpeTrain(docs, k)
     seg.unpersist()
@@ -2024,7 +1937,7 @@ object TextOps {
 
   /** The training loop itself: returns (merge table, final vocabulary
     * segmentation). The segmentation IS the trained tokenizer's apply
-    * function over in-vocab words — [[bpeTokenize]] joins against it
+    * function over in-vocab words — [[bpeTokenizeOf]] joins against it
     * directly. Caller owns unpersisting the returned checkpoint. */
   private def bpeTrain(docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
@@ -2082,11 +1995,8 @@ object TextOps {
     * token explode joined to the broadcast vocab and a per-doc
     * partial agg — text never crosses an exchange. An OOV word (never
     * possible self-trained; possible for a held-out corpus) falls
-    * back to its character count, the base-alphabet encoding. */
-  def bpeTokenize(t: Tables, k: Int = 8): DataFrame =
-    bpeTokenizeOf(t.documents, t.documents, k)
-
-  /** Library form: train on `train`, encode `score`. */
+    * back to its character count, the base-alphabet encoding. Train on
+    * `train`, encode `score`. */
   def bpeTokenizeOf(train: DataFrame, score: DataFrame, k: Int): DataFrame = {
     val (_, seg) = bpeTrain(train, k)
     val vocab = seg.select(col("word"), size(col("syms")).cast("long").as("n_sym"))
@@ -2136,12 +2046,7 @@ object TextOps {
     * oracle replays the full EM chain as generated chained CTEs with
     * a 16-position DP unroll per round (words are [a-z]+ tokens,
     * corpus max length 8; the replay guards the unroll bound
-    * loudly). */
-  def unigramTokenizer(t: Tables, vocabMulti: Int = 24,
-      rounds: Int = 2): DataFrame =
-    unigramTokenizerOf(t.documents, vocabMulti, rounds)
-
-  /** Library form over any frame with (doc_id, text). */
+    * loudly). `docs` is any frame with (doc_id, text). */
   def unigramTokenizerOf(docs: DataFrame, vocabMulti: Int,
       rounds: Int): DataFrame = {
     val wf = docs.select(explode(words(col("text"))).as("word"))
@@ -2228,10 +2133,7 @@ object TextOps {
     * agg. Corpus text never crosses an exchange; everything after the
     * first agg is vocab-scale. Contract: ≥ 2 sources with tokens (a
     * source owning the whole corpus has no complement to diverge
-    * from). */
-  def sourceDrift(t: Tables): DataFrame = sourceDriftOf(t.documents)
-
-  /** Library form over any (source, text) frame. */
+    * from). `docs` is any (source, text) frame. */
   def sourceDriftOf(docs: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
     val toks = docs.select(col("source"), explode(words(col("text"))).as("word"))
@@ -2285,10 +2187,8 @@ object TextOps {
     * (partial-aggregated, (word, count) out); the spectrum is a
     * vocab-sized agg to ~hundreds of rows, so the global cumulative
     * window and the r+1 self-join run on MODEL-sized data — the
-    * single-partition window is deliberate and bounded, not a smell. */
-  def vocabSpectrum(t: Tables): DataFrame = vocabSpectrumOf(t.documents)
-
-  /** Library form over any (text) corpus frame. */
+    * single-partition window is deliberate and bounded, not a smell.
+    * `docs` is any (text) corpus frame. */
   def vocabSpectrumOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spec = docs.select(explode(words(col("text"))).as("word"))
@@ -2329,11 +2229,8 @@ object TextOps {
     * (one corpus-sized word count, then vocab-sized rounds); scoring is
     * one tokenization → vocab join (vocab-sized build side) → per-source
     * partial agg. Text never crosses an exchange; the per-source
-    * exchange carries one partial row per source per map task. */
-  def vocabCoverage(t: Tables, k: Int = 8): DataFrame =
-    vocabCoverageOf(t.documents.filter(col("doc_id") % 10 =!= 0), t.documents, k)
-
-  /** Library form: train on `train`, audit `score` per source. */
+    * exchange carries one partial row per source per map task. Train on
+    * `train`, audit `score` per source. */
   def vocabCoverageOf(train: DataFrame, score: DataFrame, k: Int): DataFrame = {
     val (_, seg) = bpeTrain(train, k)
     val vocab = seg.select(col("word"), size(col("syms")).cast("long").as("n_sym"))
@@ -2449,9 +2346,6 @@ object TextOps {
     * slice → array_join, all codegen) riding a 2-column scan — zero
     * shuffles before the presentation sort; at 100 TB chunking is
     * free, like F18. */
-  def chunkDocs(t: Tables, size: Int = 64, stride: Int = 48): DataFrame =
-    chunkDocsOf(t.documents, size, stride)
-
   def chunkDocsOf(docs: DataFrame, size: Int, stride: Int): DataFrame =
     chunkCore(docs, size, stride).orderBy("doc_id", "chunk_id")
 
@@ -2551,10 +2445,6 @@ object TextOps {
     * zero-exchange melt). df and the corpus stats re-aggregate those
     * partials (tiny), broadcast back, and the final top-k is
     * TakeOrdered (C5) — no single-partition window over the corpus. */
-  def bm25TopK(t: Tables,
-      queryTerms: Seq[String] = Seq("stream", "vector", "customer"),
-      k: Int = 10): DataFrame = bm25TopKOf(t.documents, queryTerms, k)
-
   def bm25TopKOf(docs: DataFrame, queryTerms: Seq[String],
       k: Int): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms == queryTerms.distinct,

@@ -200,7 +200,7 @@ object Ngram3Kernel {
 
 /** graft_word_ngrams: sorted distinct hashes of the word n-grams of a
   * token array — the shingle unit of benchmark decontamination
-  * (TextOps.decontaminate). Gram hash = mix64 fold over the n token
+  * (TextOps.decontaminateAgainst). Gram hash = mix64 fold over the n token
   * hashes from an FNV offset seed — injective on token sequences modulo
   * 64-bit collisions (~1e-10 over a corpus, the repo-wide acceptance
   * used for toks_h), so distinct grams map to distinct longs and a

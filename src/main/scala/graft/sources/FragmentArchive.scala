@@ -33,11 +33,7 @@ object FragmentArchive {
       // ship the session Hadoop conf entries into the write tasks
       // (shared HadoopConfShip pattern with the ebml source reader)
       val confEntries = HadoopConfShip.capture(spark)
-      t.events
-        .withColumn("ts_ms", nanosToMs(col("ts")))
-        .withColumn("blob", EbmlFunctions.encodeFragment(
-          col("event_id"), col("ts_ms"), col("user_id"),
-          cents(col("value")), col("props")))
+      EventPayloads(t.events, "blob", EventPayloads.mkvProps, sorted = false)
         .withColumn("grp", intDiv(col("event_id"), groupSize))
         .groupBy("grp")
         .agg(sort_array(collect_list(struct(col("event_id"), col("blob"))))

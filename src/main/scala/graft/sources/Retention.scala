@@ -19,6 +19,7 @@ object Retention {
     * use zero-padded buckets for time). Returns the evicted values. */
   def writeWithRetention(df: DataFrame, dir: String, partitionCol: String,
       keepNewest: Int): Seq[String] = {
+    requireKeep(keepNewest)
     df.write.mode("append").partitionBy(partitionCol).parquet(dir)
     evictOldPartitions(df, dir, partitionCol, keepNewest)
   }
@@ -27,6 +28,7 @@ object Retention {
     * branch of the reference's frame loop). */
   def evictOldPartitions(df: DataFrame, dir: String, partitionCol: String,
       keepNewest: Int): Seq[String] = {
+    requireKeep(keepNewest)
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
@@ -39,4 +41,9 @@ object Retention {
     evict.foreach(s => fs.delete(s.getPath, true))
     evict.map(_.getPath.getName.stripPrefix(prefix))
   }
+
+  /** A window below one partition would delete every bucket, the batch
+    * just written included. */
+  private[graft] def requireKeep(keepNewest: Int): Unit =
+    require(keepNewest >= 1, s"keepNewest must be at least 1, got $keepNewest")
 }

@@ -67,7 +67,8 @@ object ConsumerApp {
     * keep only the newest `keepNewest` buckets. */
   def start(spark: SparkSession, inDir: String, storeDir: String,
       checkpointDir: String, keepNewest: Int = 24,
-      bucketMs: Long = 600000L): StreamingQuery =
+      bucketMs: Long = 600000L): StreamingQuery = {
+    Retention.requireKeep(keepNewest) // here, not in the first foreachBatch
     EventStreams.replayDedup(fragmentRecords(spark, inDir),
         tsCol = "producer_time", idCol = "fragment_number")
       .withColumn("bucket", format_string("%019d",
@@ -78,4 +79,5 @@ object ConsumerApp {
         persistBatch(batch, batchId, storeDir, keepNewest)
       }
       .start()
+  }
 }

@@ -231,7 +231,7 @@ object EventStreams {
     * [[graft.operators.TextOps.stopRatioCol]]) against PINNED
     * per-source thresholds — a stream cannot rank the corpus, so the
     * deploy shape is exactly the CCNet one: thresholds come from a
-    * periodic batch pass over the settled corpus (the [[qualityGate]]
+    * periodic batch pass over the settled corpus (the [[qualityGateOf]]
     * p50_thr column, model-sized driver state like IVF centroids) and
     * the live gate is a stateless projection + filter. Append mode, no
     * state store, no shuffle. */

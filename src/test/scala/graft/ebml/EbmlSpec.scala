@@ -203,6 +203,27 @@ class EbmlSpec extends AnyFunSuite {
     }
   }
 
+  test("single-buffer track encode is byte-identical to the composed writer") {
+    // the Tracks element (CodecID, CodecPrivate, TrackType from the
+    // CodecID namespace) must sit between Tags and Cluster exactly as
+    // the composed form nests it: video and audio codec ids, an empty
+    // CodecPrivate, max-width numbers
+    for ((id, ts, uid, vc, codecId, priv, frame) <- Seq(
+        (42L, 1700000000123L, 7L, 1234L, "V_MPEG4/ISO/AVC",
+          Array[Byte](1, 0x64, 0, 0x1f, -1), "\u0000\u0001frame"),
+        (3L, 99L, 2L, -5L, "A_AAC", Array[Byte](0x12, 0x10), "pcm"),
+        (0L, 0L, 0L, 0L, "V_MPEGH/ISO/HEVC", Array.emptyByteArray, ""),
+        (Long.MaxValue, Long.MaxValue, Long.MaxValue, Long.MaxValue,
+          "A_OPUS", Array.fill[Byte](300)(-128), "街道" * 100))) {
+      val fast = EbmlFunctions.buildFragmentTrack(id, ts, uid, vc, codecId,
+        priv, utf8(frame))
+      val composed = EbmlFunctions.buildFragmentComposed(id, ts, uid, vc,
+        frame, Some((codecId, priv)))
+      assert(java.util.Arrays.equals(fast, composed),
+        s"mismatch for id=$id codec=$codecId")
+    }
+  }
+
   test("truncated tail stops the walk instead of throwing (stream end)") {
     val blob = EbmlFunctions.buildFragment(1L, 10L, 2L, 3L, "x")
     val truncated = blob ++ Array(0x42.toByte) // dangling partial head

@@ -144,7 +144,9 @@ class AnalyticsSpec extends SparkSpec {
     assert(got("lang") == ((3L, 0L, 2L, true, "de", "en")))
     // real corpus: doc_id is a key (distinct == rows), every HLL gate
     // holds, and no column is all-null
-    val full = Analytics.profileDocuments(t).collect()
+    val full = Analytics.profileTableOf(t.documents,
+      Seq("doc_id", "text", "lang", "source", "n_chars"),
+      hashDistinct = Set("text")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getBoolean(4))).toMap
     val n = t.documents.count()
@@ -165,7 +167,7 @@ class AnalyticsSpec extends SparkSpec {
       val nOut = devs.count(_._1 * 10000L > mad * 44478L).toLong
       et -> (n.toLong, med, mad, nOut, nOut * 1000L / n)
     }
-    val got = Analytics.madOutliers(t).collect()
+    val got = Analytics.madOutliersOf(t.events).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toMap
     assert(got == expected && got.nonEmpty)
@@ -186,7 +188,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.toSeq == Seq(
       ("a", 5L, 30L, 10L, 1L, 200L),
       ("b", 3L, 100L, 0L, 1L, 333L)))
-    val plan = Analytics.madOutliers(t).queryExecution.executedPlan.toString
+    val plan = Analytics.madOutliersOf(t.events).queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(exchanges == 1, s"expected one exchange, got $exchanges:\n$plan")
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.functions.Hashing
 
@@ -20,7 +21,7 @@ class DedupSpec extends SparkSpec {
     // changed, so the recall floor rises from 0.8 to 0.95 for free
     // (8-row bands were measured too: same recall 1.0 but ~3× the false
     // candidates — 1-2 s more exact-kernel verify per clustering query)
-    val ground = Dedup.jaccardPairs(t, 0.95).collect()
+    val ground = Dedup.jaccardPairsOf(t.documents, 0.95).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cand = Dedup.minhashCandidates(t).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -107,7 +108,7 @@ class DedupSpec extends SparkSpec {
     // edges and the components must match exactly — cluster ids included
     val brute = Dedup.dedupClusters(t).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lsh = Dedup.dedupClustersLsh(t).collect()
+    val lsh = Dedup.clusterDocsLsh(t.documents).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(brute.values.toSet.size < brute.size,
       "need at least one non-trivial cluster at sf0.001")
@@ -136,6 +137,22 @@ class DedupSpec extends SparkSpec {
     // the min id — otherwise this collapses into dedup_clusters
     assert(got.exists { case (cid, keep, _) => keep != cid },
       "fixture never exercises a quality election over the id order")
+  }
+
+  test("connected components throw when the round cap stops a moving chain") {
+    import spark.implicits._
+    // a 12-node chain needs ~11 rounds for the min label to travel it:
+    // three rounds leave labels moving, which must fail, not return
+    val nodes = (1L to 12L).toDF("doc_id")
+    val pairs = (1L until 12L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(nodes, pairs, maxIters = 3).collect())
+    assert(e.getMessage.contains("3 rounds"), e.getMessage)
+    assert(e.getMessage.matches(".*: [1-9][0-9]* labels moved.*"), e.getMessage)
+    // the default cap converges on the same chain to min-id labels
+    val got = Dedup.connectedComponents(nodes, pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 12L).map(_ -> 1L).toMap, s"chain not collapsed: $got")
   }
 
   test("connected components propagate labels across a 10-hop chain") {
@@ -187,7 +204,7 @@ class DedupSpec extends SparkSpec {
     // driver GC — a 59-query bench accumulated all of them. Only the
     // FINAL labels round may stay persisted (the returned plan reads it).
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = Dedup.dedupClustersLsh(t)
+    val out = Dedup.clusterDocsLsh(t.documents)
     out.write.format("noop").mode("overwrite").save()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.size <= 1,
@@ -343,7 +360,8 @@ class DedupSpec extends SparkSpec {
 
   test("paragraph dedup word-block form: no-drop docs round-trip; exchanges carry no text") {
     import org.apache.spark.sql.functions._
-    val out = Dedup.dedupParagraphsBlocks(t)
+    val out = Dedup.dedupParagraphs(t.documents,
+      Dedup.wordBlockParas(col("text"), 8), " ")
     // every undropped document reassembles to its original text exactly
     val diff = out.filter(col("n_dropped") === 0L).as("o")
       .join(t.documents.as("d"), Seq("doc_id"))
@@ -399,7 +417,8 @@ class DedupSpec extends SparkSpec {
 
   test("boilerplate removal block form: conservation, monotone vs D8, no text in exchanges") {
     import org.apache.spark.sql.functions._
-    val out = Dedup.removeBoilerplateBlocks(t)
+    val out = Dedup.removeBoilerplate(t.documents,
+      Dedup.wordBlockParas(col("text"), 8), " ", minDocs = 3)
     // kept + dropped = total blocks
     val Array(kept, dropped) = out
       .agg(sum("n_kept"), sum("n_dropped")).collect()(0)
@@ -414,7 +433,8 @@ class DedupSpec extends SparkSpec {
     // hence total D8b drops >= total D8 drops restricted to those
     // groups. The cheap corpus-level check: D8b never KEEPS fewer
     // blocks than it would at threshold 2 (monotone in the threshold)
-    val out2 = Dedup.removeBoilerplateBlocks(t, minDocs = 2)
+    val out2 = Dedup.removeBoilerplate(t.documents,
+      Dedup.wordBlockParas(col("text"), 8), " ", minDocs = 2)
       .agg(sum("n_kept")).collect()(0).getLong(0)
     assert(kept >= out2, s"threshold monotonicity violated: $kept < $out2")
     // exchange discipline (final adaptive plan)
@@ -589,9 +609,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("span removal on the corpus: conservation + coverage-consistency vs D11 (D11c)") {
-    val cov = Dedup.spanCoverage(t).collect()
+    val cov = Dedup.spanCoverageOf(t.documents, 5).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val rem = Dedup.spanRemoval(t).collect()
+    val rem = Dedup.spanRemovalOf(t.documents, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(rem.length == cov.size)
     rem.foreach { case (id, n, nRem, text) =>
@@ -609,7 +629,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedup savings census conserves totals; hash+rollup exchanges carry no text (D12)") {
-    val out = Dedup.dedupSavings(t)
+    val out = Dedup.dedupSavingsOf(t.documents)
     val rows = out.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
     // conservation: per-source kept <= docs, tokens_kept <= total, and

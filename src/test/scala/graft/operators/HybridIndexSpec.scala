@@ -16,7 +16,8 @@ class HybridIndexSpec extends SparkSpec {
     val semDir = TextOps.materializeHybridSemantic(t, sfDir)
     val got = TextOps.hybridSearchIndexed(spark, lexDir, semDir, terms)
       .collect().map(_.toSeq)
-    val inline = TextOps.hybridSearchTopK(t).collect().map(_.toSeq)
+    val inline = TextOps.hybridSearchTopKOf(t.documents,
+      Seq("stream", "vector", "customer"), 64, 20, 10, 60L).collect().map(_.toSeq)
     assert(got.toSeq == inline.toSeq && got.nonEmpty)
   }
 

@@ -5,7 +5,7 @@ import graft.SparkSpec
 class IvfSpec extends SparkSpec {
 
   test("ivf assigns every vector to exactly one of k centroids") {
-    val rows = Similarity.ivfAssign(t, k = 8, iters = 2).collect()
+    val rows = Similarity.ivfAssignVecs(t.embeddings, k = 8, iters = 2).collect()
     assert(rows.length == t.embeddings.count())
     val cids = rows.map(_.getLong(1)).toSet
     assert(cids.subsetOf((0L until 8L).toSet))
@@ -40,8 +40,10 @@ class IvfSpec extends SparkSpec {
   }
 
   test("iterations do not increase total distortion") {
-    val d1 = Similarity.ivfAssign(t, k = 8, iters = 1).collect().map(_.getDouble(2)).sum
-    val d3 = Similarity.ivfAssign(t, k = 8, iters = 3).collect().map(_.getDouble(2)).sum
+    val d1 = Similarity.ivfAssignVecs(t.embeddings, k = 8, iters = 1)
+      .collect().map(_.getDouble(2)).sum
+    val d3 = Similarity.ivfAssignVecs(t.embeddings, k = 8, iters = 3)
+      .collect().map(_.getDouble(2)).sum
     info(s"distortion iters=1: $d1, iters=3: $d3")
     assert(d3 <= d1 * 1.001)
   }

@@ -30,7 +30,8 @@ class SearchIndexSpec extends SparkSpec {
     val dir = SearchIndex.materialize(t, sfDir)
     val got = SearchIndex.search(spark, dir, Seq("stream", "vector", "customer"))
       .collect().map(_.toSeq)
-    val inline = TextOps.bm25TopK(t).collect().map(_.toSeq)
+    val inline = TextOps.bm25TopKOf(t.documents,
+      Seq("stream", "vector", "customer"), 10).collect().map(_.toSeq)
     assert(got.toSeq == inline.toSeq && got.nonEmpty)
   }
 

@@ -399,7 +399,7 @@ class SimilaritySpec extends SparkSpec {
         BigDecimal(math.sqrt(cn)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble,
         cosUs.map(_._2).min.toDouble / 1e4, cosUs.map(_._2).max.toDouble / 1e4)
     }
-    val got = Similarity.embedStats(t).collect()
+    val got = Similarity.embedStatsOf(t.embeddings).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2),
         r.getDouble(4), r.getDouble(5))).toMap
     assert(got.size == expected.size)
@@ -408,7 +408,7 @@ class SimilaritySpec extends SparkSpec {
     // no canonical shuffle needed (deliberate contrast to the Lloyd fold)
     val again = Similarity.embedStatsOf(t.embeddings.repartition(7))
       .collect().map(_.toSeq).toSet
-    assert(again == Similarity.embedStats(t).collect().map(_.toSeq).toSet)
+    assert(again == Similarity.embedStatsOf(t.embeddings).collect().map(_.toSeq).toSet)
   }
 
   test("MMR re-ranking skips the near-duplicate a plain top-k would keep (E12)") {
@@ -455,7 +455,7 @@ class SimilaritySpec extends SparkSpec {
       val idx = Similarity.mmrTopKIndexed(t.embeddings, queries, dir,
           nprobe = 8, rerank = 100000)
         .collect().map(_.toSeq).toSeq
-      val oracle = Similarity.mmrTopK(t).collect().map(_.toSeq).toSeq
+      val oracle = Similarity.mmrTopKOf(t.embeddings, 20, 5, 0.7, 0.3).collect().map(_.toSeq).toSeq
       assert(idx == oracle, "index-sourced MMR diverged from the oracle tier")
       Thread.sleep(300) // drain async listener events
       assert(fitJobs.get == 0,
@@ -500,7 +500,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.types.ArrayType
     import org.apache.spark.sql.functions.col
     val k = 3
-    val df = Similarity.knnJoin(t, k)
+    val df = Similarity.knnJoinOf(t.embeddings, k, 8, 2, 3)
     val got = df.collect()
       .map(r => (r.getLong(0), r.getLong(2))) // (q_id, n_id)
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -545,7 +545,8 @@ class SimilaritySpec extends SparkSpec {
   test("contrastive pairs: nearest same-label positive + k hardest different-label negatives (E16)") {
     import org.apache.spark.sql.functions.col
     val k = 5
-    val rows = Similarity.contrastivePairs(t, k).collect()
+    val rows = Similarity.contrastivePairsOf(t.embeddings,
+      org.apache.spark.sql.functions.col("vec_id") < 10, k).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
     // driver-side replay over the raw fixture
@@ -598,9 +599,11 @@ class SimilaritySpec extends SparkSpec {
     val n = t.embeddings.count()
     assert(all.map(_.head).distinct.size == n.toInt)
     assert(all.size == n * k)
-    // the sized wrapper is the same contract at the kCellsFor grid
-    val sized = Similarity.contrastivePairsAllSized(t.embeddings, k,
-      nprobe = 8, iters = 3, targetOccupancy = 64L)
+    // the grid sized from the counted corpus is the same contract at
+    // the kCellsFor grid
+    val sized = Similarity.contrastivePairsAll(t.embeddings, k,
+      Similarity.kCellsFor(t.embeddings.count(), 64L), nprobe = 8,
+      iters = 3)
     val manual = Similarity.contrastivePairsAll(t.embeddings, k,
       Similarity.kCellsFor(n, 64L), nprobe = 8, iters = 3)
     assert(sized.collect().map(_.toSeq).toSeq ==
@@ -647,11 +650,12 @@ class SimilaritySpec extends SparkSpec {
     // absolute bound: nprobe * occupancy * n, with imbalance slack
     assert(v2 <= 2L * occ * n2 * 6L,
       s"volume $v2 exceeds the occupancy model's bound")
-    // and the sized join IS the contract: identical rows to knnJoinOf
-    // at the kCellsFor grid
+    // and the grid sized from the counted corpus IS the contract:
+    // identical rows to knnJoinOf at the kCellsFor grid
     val small = corpus(120)
-    val sized = Similarity.knnJoinSized(small, k = 3, nprobe = 2,
-      iters = 3, targetOccupancy = occ).collect().toSeq
+    val sized = Similarity.knnJoinOf(small, k = 3,
+      Similarity.kCellsFor(small.count(), occ), nprobe = 2, iters = 3)
+      .collect().toSeq
     val manual = Similarity.knnJoinOf(small, k = 3,
       Similarity.kCellsFor(120L, occ), nprobe = 2, iters = 3)
       .collect().toSeq
@@ -745,15 +749,16 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.kCellsFor(500L, 64L) == 8)   // the old degenerate pin
     assert(Similarity.kCellsFor(200L, 64L) == 4)
     assert(Similarity.kCellsFor(1L, 256L) == 1)    // floor at one cell
-    // threading: over a 200-row corpus, the sized entry must be
-    // row-identical to the explicit kCells=4 grid (same Lloyd seed),
-    // and NOT to the fixed-8 grid the advisory warned about
+    // threading: over a 200-row corpus, the grid sized from the count
+    // must be row-identical to the explicit kCells=4 grid (same Lloyd
+    // seed), and NOT to the fixed-8 grid the advisory warned about
     val corpus = t.embeddings.orderBy("vec_id").limit(200)
-    val sized = Similarity.knnJoinSized(corpus, k = 3, nprobe = 2,
-      iters = 3, targetOccupancy = 64L).collect().toSeq
+    val sized = Similarity.knnJoinOf(corpus, k = 3,
+      kCells = Similarity.kCellsFor(corpus.count(), 64L), nprobe = 2,
+      iters = 3).collect().toSeq
     val explicit4 = Similarity.knnJoinOf(corpus, k = 3, kCells = 4,
       nprobe = 2, iters = 3, blocks = 16).collect().toSeq
     assert(sized == explicit4,
-      "knnJoinSized(occ=64) over 200 rows must equal knnJoinOf(kCells=4)")
+      "kCellsFor(200, 64) over 200 rows must equal knnJoinOf(kCells=4)")
   }
 }

@@ -1,8 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 
 class TextOpsSpec extends SparkSpec {
+
+  // the decontamination split: every 100th document plays the benchmark
+  private def corpusDocs: DataFrame =
+    t.documents.filter(col("doc_id") % 100L =!= 0L)
+  private def benchDocs: DataFrame =
+    t.documents.filter(col("doc_id") % 100L === 0L)
 
   test("fingerprint equals the driver-side polynomial hash") {
     val texts = t.documents.select("doc_id", "text").collect()
@@ -166,7 +174,7 @@ class TextOpsSpec extends SparkSpec {
     assert(out.filter(_._1 == "sY").map(_._2).toSeq == Seq(5L))
     // real corpus: each source keeps ceil(n/2) <= kept <= n docs and
     // every kept score clears its source's threshold
-    val full = TextOps.qualityGate(t).collect()
+    val full = TextOps.qualityGateOf(t.documents).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val srcN = t.documents.groupBy("source").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -176,7 +184,7 @@ class TextOpsSpec extends SparkSpec {
       assert(rs.forall(r => r._3 >= r._4), s"$src kept a sub-threshold doc")
     }
     // scale shape: both window passes share ONE hash exchange on source
-    val plan = TextOps.qualityGate(t).queryExecution.executedPlan.toString
+    val plan = TextOps.qualityGateOf(t.documents).queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       "gate must not use a single-partition window:\n" + plan)
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
@@ -186,7 +194,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("approx quality gate: sketch threshold agrees with exact off the cut, no per-source sort") {
     import org.apache.spark.sql.functions._
-    val exact = TextOps.qualityGate(t).collect()
+    val exact = TextOps.qualityGateOf(t.documents).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val approx = TextOps.qualityGateApproxOf(t.documents).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -250,9 +258,9 @@ class TextOpsSpec extends SparkSpec {
     // output on the real corpus is a subset of the D2-style exact
     // cross-split truth (banding may drop sub-0.95 pairs; it must never
     // invent one)
-    val full = TextOps.decontaminateFuzzy(t).collect()
+    val full = TextOps.decontaminateFuzzyAgainst(corpusDocs, benchDocs, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = Dedup.jaccardPairs(t, threshold = 0.9).collect()
+    val truth = Dedup.jaccardPairsOf(t.documents, threshold = 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .filter { case (c, bench) => c % 100 != 0 && bench % 100 == 0 }.toSet
@@ -410,7 +418,7 @@ class TextOpsSpec extends SparkSpec {
   test("count-min estimates match an independent replay and dominate exact counts (C10e)") {
     import graft.functions.Hashing
     val (d, w) = (4, 64)
-    val est = TextOps.approxCountsCms(t, d, w).collect()
+    val est = TextOps.approxCountsCmsOf(t.documents, d, w).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(est.keySet == TextOps.StopWords.toSet)
     // independent driver-side CMS over the collected token stream
@@ -531,7 +539,7 @@ class TextOpsSpec extends SparkSpec {
   test("sequence packing fills bins to budget and never sorts globally") {
     import org.apache.spark.sql.functions._
     val budget = 512L
-    val out = TextOps.packSequences(t, budget)
+    val out = TextOps.packSequencesOf(t.documents, budget)
     // the greedy invariant: for every non-last bin b of a source, the
     // tokens in bins 0..b have crossed the (b+1)*budget boundary —
     // that is exactly why the next doc opened a later bin (per-bin
@@ -563,7 +571,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("shuffle shards: total permutation, driver-recomputed, partition-independent") {
     import org.apache.spark.sql.functions._
-    val out = TextOps.shuffleShards(t).collect()
+    val out = TextOps.shuffleShardsOf(t.documents, 8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val nDocs = t.documents.count()
     // conservation: every document exactly once, shard in [0, 8)
@@ -594,7 +602,7 @@ class TextOpsSpec extends SparkSpec {
     assert(repart.toSeq == out.toSeq, "repartitioning changed the permutation")
     // scale shape: the window partitions by shard — never a
     // single-partition global sort
-    val plan = TextOps.shuffleShards(t).queryExecution.executedPlan.toString
+    val plan = TextOps.shuffleShardsOf(t.documents, 8).queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       "sharding must not use a single-partition window:\n" + plan)
   }
@@ -627,7 +635,8 @@ class TextOpsSpec extends SparkSpec {
     // sB: 8 > 4, the lone doc straddles -> source contributes nothing
     assert(!out.exists(_._1 == "sB"), "straddling doc must be dropped")
     // real-corpus regimes: src0 take-all, src1/default binding
-    val full = TextOps.mixTokenBudget(t).collect()
+    val full = TextOps.mixTokenBudgetOf(t.documents,
+      Map("src0" -> 100000L, "src1" -> 800L), defaultBudget = 400L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val src0All = t.documents.filter($"source" === "src0").count()
     assert(full.count(_._1 == "src0").toLong == src0All,
@@ -644,7 +653,9 @@ class TextOpsSpec extends SparkSpec {
       "repartitioning changed the mix")
     // scale shape: the window partitions by source — never a
     // single-partition pass
-    val plan = TextOps.mixTokenBudget(t).queryExecution.executedPlan.toString
+    val plan = TextOps.mixTokenBudgetOf(t.documents,
+      Map("src0" -> 100000L, "src1" -> 800L), defaultBudget = 400L)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"),
       "budget capping must not use a single-partition window:\n" + plan)
   }
@@ -959,7 +970,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("embed docs: unit norms, dense/long consistency, determinism (F29)") {
-    val long = TextOps.embedDocs(t).collect()
+    val long = TextOps.embedDocsLong(t.documents, 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
     assert(long.nonEmpty)
     // per-doc unit property: sum of unit4^2 ≈ 1 within 4dp rounding
@@ -1078,10 +1089,10 @@ class TextOpsSpec extends SparkSpec {
     // but the document text / token arrays must never shuffle in either
     for ((name, plan, banned) <- Seq(
       ("embed_docs",
-        TextOps.embedDocs(t).queryExecution.executedPlan.toString,
+        TextOps.embedDocsLong(t.documents, 64).queryExecution.executedPlan.toString,
         Seq("text#", "word#", "ws#")),
       ("lm_quality3",
-        TextOps.lmQuality3(t).queryExecution.executedPlan.toString,
+        TextOps.lmQuality3Of(t.documents, t.documents).queryExecution.executedPlan.toString,
         Seq("text#", "ws#")))) {
       val exchanges = plan.linesIterator
         .filter(_.contains("Exchange")).mkString("\n")
@@ -1314,21 +1325,22 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bloom decontamination equals the exact broadcast form (H11)") {
-    val exact = TextOps.decontaminate(t).collect()
+    val exact = TextOps.decontaminateAgainst(corpusDocs, benchDocs, 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bloomed = TextOps.decontaminateBloom(t).collect()
+    val bloomed = TextOps.decontaminateBloomAgainst(corpusDocs, benchDocs, 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(exact.nonEmpty && bloomed == exact)
   }
 
   test("bloom prefilter guards the exchange: probe below, exact join shuffled") {
-    val plan = TextOps.decontaminateBloom(t).queryExecution.executedPlan.toString
+    val plan = TextOps.decontaminateBloomAgainst(corpusDocs, benchDocs, 3)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("graft_bloom_contains"), s"no bloom probe:\n$plan")
     assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
       s"exact join should be the shuffle form (the can't-broadcast regime):\n$plan")
     // the probe must sit below the gram exchange: in the formatted plan
     // the Filter carrying the probe feeds the Exchange, not vice versa
-    val formatted = TextOps.decontaminateBloom(t).queryExecution
+    val formatted = TextOps.decontaminateBloomAgainst(corpusDocs, benchDocs, 3).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val filterIdx = formatted.indexOf("graft_bloom_contains")
     assert(filterIdx >= 0)
@@ -1361,7 +1373,8 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bm25: corpus top-k is TakeOrdered, never a corpus-wide window") {
-    val plan = TextOps.bm25TopK(t).queryExecution.executedPlan.toString
+    val plan = TextOps.bm25TopKOf(t.documents,
+      Seq("stream", "vector", "customer"), 10).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"bm25 top-k should plan as TakeOrdered:\n$plan")
   }
@@ -1401,7 +1414,7 @@ class TextOpsSpec extends SparkSpec {
         s1.toDouble / (2.0 * nS) + s2.toDouble / (2.0 * nC)
           + (693147L * (nC - dd)).toDouble / (2.0 * nC)))
     }
-    val got = TextOps.sourceDrift(t).collect()
+    val got = TextOps.sourceDriftOf(t.documents).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got == expected && got.size > 1)
     got.values.foreach { case (_, _, j) => assert(j >= 0L && j <= 693147L) }
@@ -1428,7 +1441,8 @@ class TextOpsSpec extends SparkSpec {
     // encoder under the same split-trained vocabulary, and n_oov with a
     // driver word-set recompute
     val trainDocs = t.documents.filter($"doc_id" % 10 =!= 0)
-    val cov = TextOps.vocabCoverage(t).collect()
+    val cov = TextOps.vocabCoverageOf(
+      t.documents.filter(col("doc_id") % 10 =!= 0), t.documents, 8).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(4))).toMap
     val perDoc = TextOps.bpeTokenizeOf(trainDocs, t.documents, 8)
       .join(t.documents.select("doc_id", "source"), "doc_id")
@@ -1457,7 +1471,7 @@ class TextOpsSpec extends SparkSpec {
     }.toMap
 
     // overlapping form: every chunk is exactly tokens[start, start+size)
-    val got = TextOps.chunkDocs(t, size = 64, stride = 48).collect()
+    val got = TextOps.chunkDocsOf(t.documents, size = 64, stride = 48).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getString(4))).toMap
     var expected = 0
@@ -1540,7 +1554,8 @@ class TextOpsSpec extends SparkSpec {
       (id, rr(lex.get(id)) + rr(semRanks.get(id)), lex.get(id), semRanks.get(id))
     }.sortBy { case (id, s, _, _) => (-s, id) }.take(10)
       .zipWithIndex.map { case ((id, s, a, b), i) => (i + 1L, id, s, a, b) }
-    val got = TextOps.hybridSearchTopK(t).collect().map(r => (
+    val got = TextOps.hybridSearchTopKOf(t.documents,
+      Seq("stream", "vector", "customer"), 64, 20, 10, 60L).collect().map(r => (
       r.getLong(0), r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) None else Some(r.getLong(3)),
       if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq

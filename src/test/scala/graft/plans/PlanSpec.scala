@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.operators._
 
@@ -68,7 +69,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("jaccard pair join spreads across partitions (AQE must not collapse it)") {
-    val df = Dedup.jaccardPairs(t)
+    val df = Dedup.jaccardPairsOf(t.documents)
     val plan = planOf(df)
     assert(plan.contains("BroadcastNestedLoopJoin"), plan)
     // the explicit-count repartition has to survive optimization
@@ -227,7 +228,9 @@ class PlanSpec extends SparkSpec {
     // F6c: the benchmark probes as a broadcast; exactly two hash
     // exchanges exist — the bench-side gram distinct (benchmark-sized)
     // and the corpus doc_id agg whose partials carry counts, not grams
-    val ratio = planOf(TextOps.decontaminateRatio(t))
+    val ratio = planOf(TextOps.decontaminateRatioAgainst(
+      t.documents.filter(col("doc_id") % 100L =!= 0L),
+      t.documents.filter(col("doc_id") % 100L === 0L), 3, 50))
     assert(ratio.contains("BroadcastHashJoin"), ratio)
     val rEx = ratio.split("\n").filter(_.contains("Exchange hashpartitioning"))
     assert(rEx.length == 2 && rEx.exists(_.contains("doc_id#")),
@@ -236,7 +239,7 @@ class PlanSpec extends SparkSpec {
     // bounded d×w sketch key space — and the sketch broadcasts into the
     // probe join; the only other hash exchange is the probe-sized
     // per-term final agg
-    val cms = planOf(TextOps.approxCountsCms(t))
+    val cms = planOf(TextOps.approxCountsCmsOf(t.documents))
     val cEx = cms.split("\n").filter(_.contains("Exchange hashpartitioning"))
     assert(cEx.exists(l => l.contains("row_i#") && l.contains("bucket#")),
       s"cms sketch agg not keyed on (row_i, bucket):\n$cms")

@@ -248,6 +248,16 @@ class SourcesSpec extends SparkSpec {
       .select(col("bucket").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(left == Seq(2L, 3L))
+    // a window below one bucket would empty the store: rejected before
+    // any delete, and before the consumer's query starts
+    for (keep <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](Retention.evictOldPartitions(
+        t.events.limit(1), dir, "bucket", keepNewest = keep))
+      intercept[IllegalArgumentException](graft.streaming.ConsumerApp.start(
+        spark, tmp(), tmp(), tmp(), keepNewest = keep))
+    }
+    assert(spark.read.parquet(dir).select("bucket").distinct().count() == 2L)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("partitioned parquet write prunes partitions on read") {

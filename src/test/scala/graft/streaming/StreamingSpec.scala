@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.streaming.EventStreams.{Event, Msg, QueueOut}
 
@@ -754,7 +755,7 @@ class StreamingSpec extends SparkSpec {
     // thresholds come from a batch pass over the settled corpus — here
     // the real qualityGate run at sf0.001 supplies them
     val t = graft.sources.Tables(spark, sfDir)
-    val thr = graft.operators.TextOps.qualityGate(t).collect()
+    val thr = graft.operators.TextOps.qualityGateOf(t.documents).collect()
       .map(r => r.getString(0) -> r.getDouble(3)).toMap
     val docs = t.documents.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
@@ -774,7 +775,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(query.lastProgress.stateOperators.isEmpty)
       // same thresholds + same shared score builder = the batch kept set
-      val batch = graft.operators.TextOps.qualityGate(t).collect()
+      val batch = graft.operators.TextOps.qualityGateOf(t.documents).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(streamed == batch)
     } finally query.stop()
@@ -817,7 +818,8 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == batch)
       // and the pinned-list form strips exactly what the full D8b
       // election strips (same corpus, same threshold -> same drops)
-      val full = graft.operators.Dedup.removeBoilerplateBlocks(t).collect()
+      val full = graft.operators.Dedup.removeBoilerplate(t.documents,
+        graft.operators.Dedup.wordBlockParas(col("text"), 8), " ", 3).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
       assert(streamed == full)
       assert(streamed.exists(_._3 > 0), "fixture must drop some blocks")
